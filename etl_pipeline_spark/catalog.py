@@ -5,6 +5,17 @@ tables, airflow.py:57-101); here the catalog is Spark's own — parquet
 scans registered as temp views so every operator can be expressed over
 ``spark.table(name)`` / SQL. Parquet scans get predicate pushdown and
 column pruning from Catalyst for free.
+
+Schema inference on a parquet path launches a Spark job that reads
+footers, and every query function calls ``load_tables``. So the catalog
+keeps, per local path, the inferred schema together with the file's
+identity (inode, size and mtime of a file; name, size and mtime of each
+entry of a flat directory) and the session's parquet inference confs.
+While both still match, a later load passes that schema to the reader
+and starts no job; when either differs the path is inferred again and
+its entry overwritten. Only schemas are kept: every load builds a new
+DataFrame with fresh attribute ids, and no data or result is cached.
+Non-local URIs (``gs://``, ``s3a://``, ``hdfs://``) are always inferred.
 """
 
 from __future__ import annotations
@@ -75,6 +86,55 @@ def ensure_session_confs(spark: SparkSession) -> None:
             spark.conf.set(k, v)
 
 
+# Session confs that change the schema Spark infers from a parquet file.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+# path -> (file signature, inference confs, inferred schema); one entry
+# per path, overwritten when its key no longer matches.
+_SCHEMAS: dict[str, tuple[tuple, tuple, T.StructType]] = {}
+
+
+def _file_signature(path: str) -> tuple | None:
+    """Identity of a local parquet file or flat directory, or None when
+    the path is a URI, cannot be stat-ed, or holds subdirectories."""
+    if "://" in path:
+        return None
+    try:
+        st = os.stat(path)
+        if not os.path.isdir(path):
+            return (st.st_ino, st.st_size, st.st_mtime_ns)
+        entries = []
+        with os.scandir(path) as it:
+            for e in it:
+                if e.is_dir():
+                    return None
+                est = e.stat()
+                entries.append((e.name, est.st_size, est.st_mtime_ns))
+        return tuple(sorted(entries))
+    except OSError:
+        return None
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, reusing the schema inferred for the
+    same file version under the same inference confs."""
+    sig = _file_signature(path)
+    if sig is None:
+        return spark.read.parquet(path)
+    confs = tuple(spark.conf.get(k) for k in _INFERENCE_CONFS)
+    hit = _SCHEMAS.get(path)
+    if hit is not None and hit[0] == sig and hit[1] == confs:
+        return spark.read.schema(hit[2]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[path] = (sig, confs, df.schema)
+    return df
+
+
 def load_tables(
     spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES
 ) -> dict[str, DataFrame]:
@@ -82,11 +142,17 @@ def load_tables(
 
     Views make the SQL and DataFrame surfaces equivalent — the same
     Catalyst plan either way.
+
+    Each local table's inferred schema is remembered, keyed by the file's
+    identity and the session's parquet inference confs, so a repeat load
+    of an unchanged file starts no Spark job; replacing the file or
+    changing one of those confs makes the next load infer again. Each
+    call still returns new DataFrames, and no data is cached.
     """
     ensure_session_confs(spark)
     out: dict[str, DataFrame] = {}
     for name in names:
-        df = spark.read.parquet(table_path(sf_dir, name))
+        df = _read_parquet(spark, table_path(sf_dir, name))
         df = _normalize_timestamps(df)
         df.createOrReplaceTempView(name)
         out[name] = df

@@ -1,4 +1,4 @@
-"""SparkSession bootstrap tuned for the local[32] test harness.
+"""SparkSession bootstrap tuned for the local test harness.
 
 At cluster scale the same settings hold: AQE on (runtime re-planning,
 skew-join splitting, partition coalescing), explicit shuffle-partition
@@ -12,7 +12,15 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# Local cores the session runs on; unset means every CPU this process
+# may use.
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+DEFAULT_SHUFFLE_PARTITIONS = CPUS
+
+# Directory holding the etl_pipeline_spark package. Python workers get it
+# on their path, so pandas UDFs import the engine whatever the working
+# directory.
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -30,11 +38,14 @@ def get_spark(
       rely on AQE coalescing from a high initial value).
     - Arrow enabled so the Pandas-UDF slow paths batch via Arrow.
     - UTC timezone: deterministic timestamp semantics across engines.
+    - The package's parent directory on the Python workers' path, ahead
+      of any ``spark.executorEnv.PYTHONPATH`` passed in ``extra_conf``.
     """
     n = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    extra_conf = dict(extra_conf or {})
+    worker_path = extra_conf.pop("spark.executorEnv.PYTHONPATH", "")
     builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
+        SparkSession.builder.master(f"local[{CPUS}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(n))
         .config("spark.sql.adaptive.enabled", "true")
@@ -50,8 +61,12 @@ def get_spark(
         # precision), which Spark rejects by default; read them as long
         # nanos and let the catalog convert losslessly to micros.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config(
+            "spark.executorEnv.PYTHONPATH",
+            os.pathsep.join(p for p in (_PACKAGE_ROOT, worker_path) if p),
+        )
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -23,6 +23,7 @@ import datetime
 import decimal
 import hashlib
 import math
+import os
 import sys
 import time
 import traceback
@@ -30,7 +31,7 @@ import traceback
 import duckdb
 import pyarrow as pa
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from etl_pipeline_spark.catalog import TABLES, table_path
 from etl_pipeline_spark.queries.base import all_specs
