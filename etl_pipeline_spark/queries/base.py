@@ -49,309 +49,6 @@ def query(name: str, oracle: str | None, tags: tuple[str, ...] = (), doc: str = 
     return wrap
 
 
-# The round driver samples the FIRST 50 entries below, so ordering is
-# coverage policy. ROTATION RULE (regenerate each round with
-# `python tools/rotate_window.py --changed <names...>`):
-#   1. queries whose CODE changed this round come first — the driver must
-#      attest the shipped implementation, not a prior round's;
-#   2. then queries with no driver attestation in any CORRECTNESS_r*.json;
-#   3. then backfill, oldest latest-attestation first, so the window
-#      cycles through all queries in ~N/50 rounds;
-#   4. the rest keep registration order after the prefix.
-# Round-15 optimization-round prefix (regenerated mid-round via
-# rotate_window.py; the attested-fingerprint invariant keeps every
-# changed-but-unattested query pinned in the window across rotations):
-# the six evicted r14 rewrites plus this round's changed queries
-# (posting size-join hint scoping: ngram_jaccard/capped/containment;
-# verify first-attach SHJ: minhash_lsh/prefix_filter; serial basket
-# partials: nested_json_assembly/chunk_rewrite) and their fn-callers
-# hand-declared (clusters/canonical/soft_weights/leakage_split/
-# lsh_recall/snm_recall ride q_dedup_ngram_jaccard's fn;
-# q_text_gopher_repetition's r14 rewrite lives in text.py). Backfill
-# stays oldest-attestation-first (r7/r8 cohort).
-CHECK_PRIORITY: tuple[str, ...] = (
-    "q_knn_bruteforce_cosine",  # --- code changed this round: attest first ---
-    "q_knn_pq",
-    "q_nested_json_assembly",
-    "q_dedup_ngram_jaccard",
-    "q_dedup_minhash_lsh",
-    "q_dedup_ngram_jaccard_capped",
-    "q_dedup_chunk_rewrite",
-    "q_dedup_containment",
-    "q_dedup_prefix_filter",
-    "q_lm_bigram_score",
-    "q_join_outer_order_counts",
-    "q_training_data_prep",
-    "q_text_gopher_repetition",
-    "q_dedup_clusters",
-    "q_dedup_canonical_docs",
-    "q_dedup_soft_weights",
-    "q_leakage_safe_split",
-    "q_lsh_recall_report",
-    "q_snm_recall_report",
-    "q_etl_audit_row",  # --- backfill: oldest attestation first ---
-    "q_etl_dirty_input_quarantine",
-    "q_dq_outlier_zscore",
-    "q_multimodal_binary_meta",
-    "q_agg_stats_acctbal",
-    "q_rollup_returns",
-    "q_conditional_split_counts",
-    "q_pivot_qty_by_status",
-    "q_distinct_nation_segments",
-    "q_join_semi_big_orders",
-    "q_window_range_frame_partitioned",
-    "q_dq_embedding_contract",
-    "q_hll_sketch_union",
-    "q_window_distribution_ranks_partitioned",
-    "q_timeseries_gapfill",
-    "q_text_quality_score",
-    "q_text_fingerprint",
-    "q_text_edit_distance_pairs",
-    "q_dq_text_contract",
-    "q_text_gopher_quality",
-    "q_quality_calibrated",
-    "q_dsir_importance",
-    "q_unimax_allocation",
-    "q_winnowing_pairs",
-    "q_dq_pk_uniqueness",
-    "q_join_anti_idle_customers",
-    "q_join_cross_region_nation",
-    "q_join_range_value_buckets",
-    "q_window_rank_orders",
-    "q_window_running_spend",
-    "q_window_lag_events",
-    "q_topk_expensive_orders",  # ---------------- first-50 window ends above ----------------
-    "q_setop_union_parties",
-    "q_setop_intersect_nations",
-    "q_setop_except_nations",
-    "q_scalar_string_cleaning",
-    "q_scalar_casts",
-    "q_scalar_dates",
-    "q_scalar_json_props",
-    "q_scalar_regexp_extract",
-    "q_scalar_math",
-    "q_scalar_arrays",
-    "q_scalar_conditional_nonempty",
-    "q_scalar_file_lineage",
-    "q_scalar_string_extras",
-    "q18_large_orders",
-    "q_agg_percentiles",
-    "q12_late_shipments",
-    "q16_supplier_diversity",
-    "q02_min_cost_supplier",
-    "q20_excess_shippers",
-    "q21_sole_late_shipper",
-    "q_embedding_norms",
-    "q_knn_lsh_approx",
-    "q_hard_negatives",
-    "q_knn_block_matrix",
-    "q_knn_ivf",
-    "q_udaf_trimmed_mean",
-    "q_ratio_to_report",
-    "q_scd2_user_values",
-    "q_kll_quantile_merge",
-    "q_theta_set_ops",
-    "q_cohort_ltv",
-    "q_seasonal_hour_profile",
-    "q_attribution_multi_touch",
-    "q_changepoint_mean_shift",
-    "q_time_weighted_average",
-    "q_agg_regression",
-    "q_agg_extrema_by",
-    "q_agg_bitwise",
-    "q_histogram_values",
-    "q_clamped_running_balance",
-    "q_mann_whitney",
-    "q_cliffs_delta",
-    "q_pairwise_tests_bonferroni",
-    "q_linear_interp_gapfill",
-    "q_dedup_embedding_cosine",
-    "q_hybrid_rrf_search",
-    "q_pii_scrub",
-    "q_stratified_sample",
-    "q_sequence_packing",
-    "q_repetition_score",
-    "q_multimodal_features",
-    "q_multimodal_frame_sample",
-    "q_target_encoding",
-    "q_rake_keywords",
-    "q_wordpiece_tokenize",
-    "q_rare_category_other",
-    "q_woe_encoding",
-    "q_psi_drift",
-    "q_degree_powerlaw",
-    "q_tokenizer_fertility",
-    "q_url_canonical_dedup",
-    "q_dataset_card",
-    "q_data_skew_report",
-    "q_join_cardinality_audit",
-    "q_revenue_delta_decomposition",
-    "q_fifo_allocation",
-    "q_shapley_attribution",
-    "q_entity_resolution_fs",
-    "q_dedup_simhash_pairs",
-    "q_dedup_minhash_pairs",
-    "q_doc_chunking",
-    "q_token_entropy",
-    "q_mix_weights",
-    "q_vocab_coverage",
-    "q_corpus_domain_cap",
-    "q_streaming_neardup_parity",
-    "q_multimodal_avi_frames",
-    "q01_pricing_summary",
-    "q06_revenue_delta",
-    "q_cube_orders",
-    "q03_order_revenue_topk",
-    "q05_nation_revenue",
-    "q_join_salted_skew",
-    "q_window_tumbling_events",
-    "q_join_full_outer_reconcile",
-    "q_hof_array_pipeline",
-    "q07_nation_volume",
-    "q09_product_profit",
-    "q14_promo_revenue",
-    "q17_small_quantity_revenue",
-    "q19_disjunctive_predicates",
-    "q22_idle_high_balance",
-    "q08_market_share",
-    "q10_returned_revenue",
-    "q15_top_supplier",
-    "q11_value_concentration",
-    "q04_order_priority",
-    "q13_order_count_distribution",
-    "q_embedding_dim_profile",
-    "q_rfm_segments",
-    "q_lateral_top_orders",
-    "q_recursive_month_spine",
-    "q_event_transitions",
-    "q_markov_stationary",
-    "q_interval_concurrency",
-    "q_interval_window_join",
-    "q_zorder_locality",
-    "q_ewma_smoothing",
-    "q_attribution_last_touch",
-    "q_ab_test_ttest",
-    "q_dq_referential_integrity",
-    "q_skyline_parts",
-    "q_top_paths",
-    "q_table_profile",
-    "q_rolling_active_users",
-    "q_funnel_time_to_convert",
-    "q_pca_top_component",
-    "q_winsorized_stats",
-    "q_kmeans_lloyd",
-    "q_dbscan_classify",
-    "q_mmr_rerank",
-    "q_knn_classifier_eval",
-    "q_gaps_islands",
-    "q_equidepth_histogram",
-    "q_udtf_span_days",
-    "q_weighted_median",
-    "q_snapshot_diff",
-    "q_setop_bag_semantics",
-    "q_try_arithmetic_safe",
-    "q_collation_groupby",
-    "q_poisson_bootstrap_ci",
-    "q_survival_km",
-    "q_moments_skew_kurtosis",
-    "q_theil_sen_trend",
-    "q_correlation_matrix",
-    "q_chi_square_contingency",
-    "q_sample_size_power",
-    "q_anova_weekday",
-    "q_autocorr_daily",
-    "q_sax_symbols",
-    "q_seasonal_decompose",
-    "q_interval_merge",
-    "q_seasonal_anomaly_days",
-    "q_semdedup_clusters",
-    "q_multimodal_shot_cuts",
-    "q_asof_last_signup",
-    "q_grouping_sets_revenue",
-    "q_window_range_frame",
-    "q_window_first_last_nth",
-    "q_ordered_string_agg",
-    "q_sample_hash_10pct",
-    "q_posexplode_tokens",
-    "q_union_by_name_missing",
-    "q_embedding_centroid_health",
-    "q_seasonal_forecast_eval",
-    "q_funnel_three_step",
-    "q_ab_test_proportions",
-    "q_audience_flags",
-    "q_ship_latency_percentiles",
-    "q_asof_tolerance",
-    "q_cms_heavy_hitters",
-    "q_bom_explosion",
-    "q_spatial_radius_join",
-    "q_hapax_vocabulary",
-    "q_heaps_law_fit",
-    "q_dedup_repeated_spans",
-    "q_dedup_doc_stitching",
-    "q_tfidf_top_terms",
-    "q_tfidf_nearest_docs",
-    "q_text_zipf_fit",
-    "q_pmi_collocations",
-    "q_bpe_merge_candidates",
-    "q_bm25_top_terms",
-    "q_corpus_gini",
-    "q_weighted_sample",
-    "q_curriculum_buckets",
-    "q_span_corruption_plan",
-    "q_token_budget_allocation",
-    "q_filter_funnel",
-    "q_hashed_linear_score",
-    "q_dq_outlier_mad",
-    "q_dq_ks_drift",
-    "q_dq_benford_check",
-    "q_multimodal_mp4_frames",
-    "q_multimodal_audio_energy",
-    "q_k_anonymity",
-    "q_scalar_multiformat_ts",
-    "q_window_sliding_events",
-    "q_session_windows_batch",
-    "q_embedding_quantization",
-    "q_approx_aggregates",
-    "q_unpivot_balance_metrics",
-    "q_funnel_conversion",
-    "q_retention_cohorts",
-    "q_window_distribution_ranks",
-    "q_scalar_dates_extended",
-    "q_triangle_count",
-    "q_market_basket_rules",
-    "q_node_clustering",
-    "q_degree_assortativity",
-    "q_link_prediction_aa",
-    "q_pagerank",
-    "q_label_propagation",
-    "q_item_cf_similar",
-    "q_kcore_nodes",
-    "q_kcore_support1",
-    "q_dedup_exact",
-    "q_dedup_simhash",
-    "q_dedup_minhash_signatures",
-    "q_text_stats_by_lang",
-    "q_text_token_counts",
-    "q_text_lang_id",
-    "q_text_top_bigrams",
-    "q_contamination_check",
-    "q_shingle_novelty",
-    "q_bloom_decontaminate",
-    "q_etl_clean_cast_filter",
-    "q_etl_quarantine_conservation",
-    "q_connected_components",
-    "q_wedge_mass_preflight",
-    "q_triangle_census_sampled",
-    "q_dp_noisy_counts",
-    "q_pseudonymize_consistent",
-    "q_erasure_cascade",
-    "q_variant_json_stats",
-    "q_null_semantics",
-    "q_scalar_maps",
-    "q_length_band_filter",
-)
-
-
 def all_specs() -> dict[str, QuerySpec]:
     # Import sides register themselves; keep imports here to avoid cycles.
     from etl_pipeline_spark.queries import (  # noqa: F401
@@ -378,9 +75,4 @@ def all_specs() -> dict[str, QuerySpec]:
         training_pipeline,
     )
 
-    missing = [n for n in CHECK_PRIORITY if n not in REGISTRY]
-    if missing:
-        raise KeyError(f"CHECK_PRIORITY names not registered: {missing}")
-    ordered = {n: REGISTRY[n] for n in CHECK_PRIORITY}
-    ordered.update((n, s) for n, s in REGISTRY.items() if n not in ordered)
-    return ordered
+    return dict(REGISTRY)

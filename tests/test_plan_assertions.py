@@ -350,10 +350,7 @@ def test_minhash_lsh_verify_broadcasts_only_narrow_ids(spark):
     and the shingle arrays only ever cross candidate-keyed shuffles.
     (AQE broadcasting the candidate-with-arrays intermediate exhausted
     the 8g driver at sf10.)"""
-    import sys
-
-    sys.path.insert(0, "/root/repo/tools")
-    from plan_audit import extract_plan_tree, wide_broadcast_findings
+    from tools.plan_audit import extract_plan_tree, wide_broadcast_findings
 
     df = contract.queries()["q_dedup_minhash_lsh"](spark, SF)
     tree = extract_plan_tree(df._jdf.queryExecution().executedPlan())

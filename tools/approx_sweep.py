@@ -15,14 +15,13 @@ verdict #4):
   (q_embedding_dim_profile) that the sf0.01 gate could not see. New
   operators join the sweep at registration, not by memory;
 - results go to tools/approx_sweep.json together with each family
-  query's attestation fingerprint at sweep time;
-- tests/test_round_close.py fails the suite when the artifact is
+  query's fingerprint (query_fingerprint) at sweep time;
+- tests/test_recall_gate.py fails the suite when the artifact is
   missing, not green, or stale (any family query's live fingerprint
   differs from the one recorded at sweep time — i.e. the operator
   changed after its last sf0.1 sweep).
 
-tools/rotate_window.py runs this automatically at rotation when the
-sf0.1 fixture exists; standalone:
+Re-run it whenever a family query changes:
 
     python tools/approx_sweep.py [--sf-dir /root/testdata/sf0.1]
 """
@@ -30,13 +29,15 @@ sf0.1 fixture exists; standalone:
 from __future__ import annotations
 
 import argparse
+import hashlib
+import inspect
 import json
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-ARTIFACT = "/root/repo/tools/approx_sweep.json"
+ARTIFACT = os.path.join(os.path.dirname(os.path.abspath(__file__)), "approx_sweep.json")
 FAMILY_TAGS = {
     "approx",
     "approx-exactly-checked",
@@ -59,6 +60,12 @@ FAMILY_TAGS = {
 GRID_ORACLE_PATTERNS = ("FLOOR(LEAST(GREATEST", "AS REAL), CASE WHEN")
 
 
+def query_fingerprint(spec) -> str:
+    """sha256 over the query fn's source text + oracle SQL (or '-')."""
+    src = inspect.getsource(spec.fn)
+    return hashlib.sha256((src + "\x00" + (spec.oracle or "-")).encode()).hexdigest()
+
+
 def family_queries() -> dict:
     from etl_pipeline_spark.queries.base import all_specs
 
@@ -72,7 +79,6 @@ def family_queries() -> dict:
 
 def run_sweep(sf_dir: str) -> dict:
     from tools.check_oracle import check_query, open_oracle
-    from tools.rotate_window import query_fingerprint
 
     from etl_pipeline_spark.session import get_spark
 

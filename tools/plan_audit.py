@@ -60,10 +60,11 @@ BroadcastNestedLoopJoin, which is not flagged.)
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from etl_pipeline_spark.queries.base import REGISTRY, all_specs
 from etl_pipeline_spark.session import get_spark

@@ -29,9 +29,10 @@ later round's hand sweep. Import `assert_lsh_recall(sf_dir)` or run:
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def lsh_recall(sf_dir: str) -> dict:
