@@ -15,6 +15,8 @@ own data).
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -658,40 +660,41 @@ def containment_pairs(
     )
 
 
-def bigram_lm_scores(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def bigram_lm_scores(
+    df: DataFrame, text_col: str = "text", id_col: str | Sequence[str] = "doc_id"
+) -> DataFrame:
     """Corpus-trained add-one-smoothed bigram-LM scores per document:
-    (id, n_bigrams, nll_bits, ppl). High perplexity = boilerplate/garbage
-    candidates; very low = degenerate repeats."""
-    toks = F.filter(F.split(text_col, " "), lambda t: t != "")
-    tok_df = df.select(F.col(id_col), toks.alias("__toks"))
-    bg_arr = F.transform(
-        F.sequence(F.lit(1), F.size("__toks") - 1),
-        lambda i: F.struct(
-            F.element_at(F.col("__toks"), i).alias("w1"),
-            F.element_at(F.col("__toks"), i + 1).alias("w2"),
-        ),
+    (*id, n_bigrams, nll_bits, ppl), where ``id_col`` names one key
+    column or several (e.g. ``("doc_id", "lang")``). Each bigram scores
+    -log2((c(w1,w2)+1)/(c(w1)+V)), V the corpus vocabulary size;
+    nll_bits is a document's average and ppl = 2^nll_bits. High
+    perplexity = boilerplate/garbage candidates; very low = degenerate
+    repeats.
+
+    The score is a pure function of the DISTINCT bigram, so it is
+    computed on the distinct-bigram count table (c(w1) is a window sum
+    of c(w1,w2) over w1) and the corpus-sized bigram stream joins it
+    once on (w1, w2), then aggregates per document. No join strategy is
+    forced: the scored table grows with the corpus."""
+    from etl_pipeline_spark.functions.shingles import bigrams
+
+    keys = [id_col] if isinstance(id_col, str) else list(id_col)
+    bg = bigrams(df, *keys, text_col=text_col)
+    vocab = df.select(
+        F.explode(F.filter(F.split(text_col, " "), lambda t: t != "")).alias("t")
+    ).agg(F.countDistinct("t").alias("v"))
+    c12 = bg.groupBy("w1", "w2").agg(F.count("*").alias("c12"))
+    c1 = F.sum("c12").over(W.partitionBy("w1"))
+    scored = c12.crossJoin(F.broadcast(vocab)).select(
+        "w1", "w2", (-F.log2((F.col("c12") + 1.0) / (c1 + F.col("v")))).alias("nll")
     )
-    bg = (
-        tok_df.filter(F.size("__toks") >= 2)
-        .select(F.col(id_col), F.explode(bg_arr).alias("b"))
-        .select(F.col(id_col), F.col("b.w1").alias("w1"), F.col("b.w2").alias("w2"))
-        .localCheckpoint(eager=False)
-    )
-    c12 = bg.groupBy("w1", "w2").agg(F.count("*").alias("__c12"))
-    c1 = bg.groupBy("w1").agg(F.count("*").alias("__c1"))
-    vocab = tok_df.select(F.explode("__toks").alias("t")).agg(
-        F.countDistinct("t").alias("__v")
-    )
-    nll = -F.log2((F.col("__c12") + F.lit(1.0)) / (F.col("__c1") + F.col("__v")))
     return (
-        bg.join(c12, ["w1", "w2"])
-        .join(c1, ["w1"])
-        .crossJoin(F.broadcast(vocab))
-        .groupBy(id_col)
+        bg.join(scored, ["w1", "w2"])
+        .groupBy(*keys)
         .agg(
             F.count("*").alias("n_bigrams"),
-            F.round(F.avg(nll), 4).alias("nll_bits"),
-            F.round(F.pow(F.lit(2.0), F.avg(nll)), 2).alias("ppl"),
+            F.round(F.avg("nll"), 4).alias("nll_bits"),
+            F.round(F.pow(F.lit(2.0), F.avg("nll")), 2).alias("ppl"),
         )
     )
 

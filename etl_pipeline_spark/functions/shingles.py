@@ -40,6 +40,48 @@ def tokenized(
     return out
 
 
+def doc_terms(df: DataFrame) -> DataFrame:
+    """``(doc_id, term, tf)``: each document's non-empty space-separated
+    terms with their in-document counts — the term frame every tf-idf
+    family query (tf-idf, BM25, hybrid retrieval) weights. The split
+    feeds only the explode, so it runs once per row."""
+    terms = F.filter(F.split("text", " "), lambda t: t != "")
+    return (
+        df.select("doc_id", F.explode(terms).alias("term"))
+        .groupBy("doc_id", "term")
+        .agg(F.count("*").alias("tf"))
+    )
+
+
+def bigrams(df: DataFrame, *keep: str, text_col: str = "text") -> DataFrame:
+    """``(*keep, w1, w2)``: one row per adjacent pair of non-empty
+    space-separated tokens; documents with fewer than two tokens yield
+    none. The token array is hoisted into its own projection and the
+    pair array is guarded like :func:`word_shingles`: for a sub-2-token
+    doc ``sequence(1, size - 1)`` descends and ``element_at`` would
+    throw under ANSI, and Generate pushdown may evaluate the expression
+    before any filter."""
+    toks = F.col("toks")
+    pairs = F.transform(
+        F.sequence(F.lit(1), F.size(toks) - 1),
+        lambda i: F.struct(
+            F.element_at(toks, i).alias("w1"), F.element_at(toks, i + 1).alias("w2")
+        ),
+    )
+    return (
+        df.select(*keep, F.filter(F.split(text_col, " "), lambda t: t != "").alias("toks"))
+        .select(
+            *keep,
+            F.explode(
+                F.when(F.size(toks) >= 2, pairs).otherwise(
+                    F.array().cast("array<struct<w1:string,w2:string>>")
+                )
+            ).alias("b"),
+        )
+        .select(*keep, "b.w1", "b.w2")
+    )
+
+
 def word_shingles(width: int, tok_col: str = "toks") -> Column:
     """array<string> of distinct space-joined word ``width``-grams over
     the hoisted token column; typed-empty for sub-width docs.

@@ -688,68 +688,20 @@ def q_lm_bigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     are the degenerate repeats. Reference parity: additive — the reference
     pipeline has no model-based quality pass.
 
-    Scale: three shuffles, all on uniform keys — bigram counts (map-side
-    combinable, keyed on the bigram), context counts (keyed on w1), and the
-    per-doc aggregate (keyed on doc_id). The count tables are vocabulary-
-    sized (<< corpus-sized), so the score joins behave like dimension
-    joins; V is a 1-row broadcast. The bigram stream is materialized once
-    (lazily) because it feeds both count tables AND the score join — at
-    100 TB this becomes persist(DISK) exactly like the dedup indexes.
-
-    r14 optimization round — the stream-side join count drops from 2 to
-    1: the r13 form joined the bigram stream to c12 on (w1, w2) and then
-    to c1 on (w1), so the corpus-sized stream crossed a join boundary
-    for each count table. The per-bigram score is a pure function of the
-    DISTINCT bigram, so the two vocabulary-sized tables are joined first
-    (c12 ⨝ c1 on w1) into one scored table and the stream is joined
-    ONCE on (w1, w2). At local/sf scale both forms broadcast the count
-    tables, so the saving is one whole probe pass over the stream; at
-    cluster scale (count tables past the broadcast threshold, planner
-    falls back to shuffle joins) the stream-sized exchange budget drops
-    3 -> 2: (w1, w2) for the score join and doc_id for the final
-    aggregate — the r13 form re-exchanged the stream again on (w1). No
-    broadcast is forced: the scored table is distinct-bigram-sized,
-    which is unbounded at 100 TB, so the strategy stays planner/AQE-
-    chosen (plans/r14/q_lm_bigram_score_{before,after}.txt).
+    Scale: api.bigram_lm_scores keyed on (doc_id, lang). The corpus-
+    sized bigram stream crosses at most two exchanges — (w1, w2) for the
+    one score join and doc_id for the final aggregate. The count table
+    is map-side combined on the bigram, c(w1) is a window over w1 on it,
+    and V is a 1-row broadcast. No join strategy is forced: the scored
+    table is distinct-bigram-sized, unbounded at 100 TB, so AQE picks
+    broadcast or shuffle from runtime sizes
+    (plans/r14/q_lm_bigram_score_{before,after}.txt record the r13
+    two-join form this replaced).
     """
+    from etl_pipeline_spark.api import bigram_lm_scores
+
     d = load_tables(spark, sf_dir, ("documents",))["documents"]
-    toks = F.filter(F.split("text", " "), lambda t: t != "")
-    tok_df = d.select("doc_id", "lang", toks.alias("toks"))
-    # sequence(1, n-1) is DESCENDING when n < 2 (Spark keeps step=-1 for
-    # start > stop), so short docs are filtered out before the transform.
-    bg_arr = F.transform(
-        F.sequence(F.lit(1), F.size("toks") - 1),
-        lambda i: F.struct(
-            F.element_at(F.col("toks"), i).alias("w1"),
-            F.element_at(F.col("toks"), i + 1).alias("w2"),
-        ),
-    )
-    bg = (
-        tok_df.filter(F.size("toks") >= 2)
-        .select("doc_id", "lang", F.explode(bg_arr).alias("b"))
-        .select("doc_id", "lang", F.col("b.w1").alias("w1"), F.col("b.w2").alias("w2"))
-        .localCheckpoint(eager=False)
-    )
-    c12 = bg.groupBy("w1", "w2").agg(F.count("*").alias("c12"))
-    c1 = bg.groupBy("w1").agg(F.count("*").alias("c1"))
-    vocab = tok_df.select(F.explode("toks").alias("t")).agg(
-        F.countDistinct("t").alias("v")
-    )
-    nll = -F.log2((F.col("c12") + F.lit(1.0)) / (F.col("c1") + F.col("v")))
-    scored = (
-        c12.join(c1, ["w1"])
-        .crossJoin(F.broadcast(vocab))
-        .select("w1", "w2", nll.alias("nll"))
-    )
-    return (
-        bg.join(scored, ["w1", "w2"])
-        .groupBy("doc_id", "lang")
-        .agg(
-            F.count("*").alias("n_bigrams"),
-            F.round(F.avg("nll"), 4).alias("nll_bits"),
-            F.round(F.pow(F.lit(2.0), F.avg("nll")), 2).alias("ppl"),
-        )
-    )
+    return bigram_lm_scores(d, id_col=("doc_id", "lang"))
 
 
 SAMPLE_TOPK = 3  # docs kept per source stratum by the weighted sampler

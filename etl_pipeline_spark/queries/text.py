@@ -13,6 +13,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from etl_pipeline_spark.catalog import EMB_DOOR_SQL, embedding_door, load_tables
+from etl_pipeline_spark.functions.shingles import bigrams, doc_terms
 from etl_pipeline_spark.queries.base import query
 
 # BPE-ish pre-tokenizer: letter runs, digit runs, or single non-space symbol
@@ -521,6 +522,24 @@ _TERMS_SQL = """
 """
 
 
+def _tfidf_weights(docs: DataFrame) -> DataFrame:
+    """``(doc_id, term, wt, nrm)``: each term's tf * ln(N/df) weight, with
+    the document's L2 norm sqrt(sum(wt^2)) attached as a window over
+    doc_id — the sparse vectors the cosine retrieval queries score."""
+    terms = doc_terms(docs)
+    dfreq = terms.groupBy("term").agg(F.count("*").alias("df"))
+    n = docs.agg(F.count("*").alias("n_docs"))
+    wt = F.col("tf") * F.log(F.col("n_docs").cast("double") / F.col("df"))
+    return (
+        terms.join(dfreq, "term")
+        .crossJoin(F.broadcast(n))
+        .select("doc_id", "term", wt.alias("wt"))
+        .withColumn(
+            "nrm", F.sqrt(F.sum(F.col("wt") * F.col("wt")).over(W.partitionBy("doc_id")))
+        )
+    )
+
+
 @query(
     "q_tfidf_top_terms",
     oracle=f"""
@@ -553,20 +572,14 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: two uniform-key shuffles (per-(doc,term) counts, per-term
     document frequencies) and a per-doc top-k window with the partial
     WindowGroupLimit below the exchange; the df table is vocabulary-sized
-    and joins like a dimension (broadcast at any corpus size).
+    and AQE picks its join strategy from runtime sizes.
     """
     d = load_tables(spark, sf_dir, ("documents",))["documents"]
-    toks = F.filter(F.split("text", " "), lambda t: t != "")
-    terms = (
-        d.select("doc_id", F.explode(toks).alias("term"))
-        .groupBy("doc_id", "term")
-        .agg(F.count("*").alias("tf"))
-        .localCheckpoint(eager=False)
-    )
+    terms = doc_terms(d)
     dfreq = terms.groupBy("term").agg(F.count("*").alias("df"))
     n = d.agg(F.count("*").alias("n_docs"))
     w = (
-        terms.join(dfreq.hint("merge"), "term")
+        terms.join(dfreq, "term")
         .crossJoin(F.broadcast(n))
         .select(
             "doc_id",
@@ -641,54 +654,32 @@ def q_tfidf_nearest_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     blocking bounds posting lists the way the label blocking bounds the
     embedding variant; high-df terms inside a block are the skew risk and
     the stop-shingle DF cap from the capped-Jaccard operator applies
-    unchanged. Norms and df are vocabulary/doc-sized dimension tables.
+    unchanged. Each weight row carries its document's norm (a window
+    over doc_id), so scoring needs no norm table joins; df is a
+    vocabulary-sized table whose join AQE plans from runtime sizes.
     The query-side filter prunes the probe stream at the scan.
     """
     d = load_tables(spark, sf_dir, ("documents",))["documents"]
-    toks = F.filter(F.split("text", " "), lambda t: t != "")
-    terms = (
-        d.select("doc_id", F.explode(toks).alias("term"))
-        .groupBy("doc_id", "term")
-        .agg(F.count("*").alias("tf"))
-        .localCheckpoint(eager=False)
+    w = _tfidf_weights(d).join(d.select("doc_id", "source"), "doc_id")
+    qa = w.filter(F.col("doc_id") % TFIDF_QUERY_MOD == 0).select(
+        F.col("doc_id").alias("q_doc"), "term", "source",
+        F.col("wt").alias("qwt"), F.col("nrm").alias("qn"),
     )
-    dfreq = terms.groupBy("term").agg(F.count("*").alias("df"))
-    n = d.agg(F.count("*").alias("n_docs"))
-    w = (
-        terms.join(dfreq.hint("merge"), "term")
-        .crossJoin(F.broadcast(n))
-        .select(
-            "doc_id",
-            "term",
-            (F.col("tf") * F.log(F.col("n_docs").cast("double") / F.col("df"))).alias("wt"),
-        )
-        .localCheckpoint(eager=False)
+    wb = w.select(
+        F.col("doc_id").alias("nn_doc"), "term", "source",
+        F.col("wt").alias("nwt"), F.col("nrm").alias("nn"),
     )
-    norms = w.groupBy("doc_id").agg(F.sqrt(F.sum(F.col("wt") * F.col("wt"))).alias("nrm"))
-    meta = d.select("doc_id", "source")
-    qa = (
-        w.filter(F.col("doc_id") % TFIDF_QUERY_MOD == 0)
-        .join(meta, "doc_id")
-        .select(F.col("doc_id").alias("q_doc"), "term", F.col("wt").alias("qwt"), "source")
-    )
-    wb = (
-        w.join(meta, "doc_id")
-        .select(F.col("doc_id").alias("nn_doc"), "term", F.col("wt").alias("nwt"), "source")
-    )
-    dots = (
+    scored = (
         qa.join(wb, ["term", "source"])
         .filter(F.col("q_doc") != F.col("nn_doc"))
         .groupBy("q_doc", "nn_doc")
         .agg(
             F.count("*").alias("n_shared_terms"),
             F.sum(F.col("qwt") * F.col("nwt")).alias("dot"),
+            # a doc's norm is the same on all its rows: max() carries it
+            F.max("qn").alias("qn"),
+            F.max("nn").alias("nn"),
         )
-    )
-    na = norms.select(F.col("doc_id").alias("q_doc"), F.col("nrm").alias("qn"))
-    nb = norms.select(F.col("doc_id").alias("nn_doc"), F.col("nrm").alias("nn"))
-    scored = (
-        dots.join(na, "q_doc")
-        .join(nb, "nn_doc")
         .select(
             "q_doc",
             "nn_doc",
@@ -816,43 +807,26 @@ def q_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokenizer merge seeding and phrase-aware dedup keys. Ranked on the
     ROUNDED score with lexical tie-breaks.
 
-    Scale: the same three vocabulary-keyed count shuffles as the bigram
-    LM (marginals are dimension-sized, broadcast back), a 1-row total,
-    and a global top-k that compiles to TakeOrderedAndProject — no sort
-    of the full pair table.
+    Scale: the bigram stream is aggregated once, into the pair counts
+    (map-side combined, keyed on the bigram). The marginals c(w1), c(w2)
+    are window sums over that distinct-pair table (keyed on w1, then
+    w2) and the total n is a 1-row broadcast of its sum, which reuses
+    the pair-count exchange — the corpus is exploded once. The global
+    top-k compiles to TakeOrderedAndProject — no sort of the full pair
+    table.
     """
     d = load_tables(spark, sf_dir, ("documents",))["documents"]
-    toks = F.filter(F.split("text", " "), lambda t: t != "")
-    tok_df = d.select(toks.alias("toks")).filter(F.size("toks") >= 2)
-    bg_arr = F.transform(
-        F.sequence(F.lit(1), F.size("toks") - 1),
-        lambda i: F.struct(
-            F.element_at(F.col("toks"), i).alias("w1"),
-            F.element_at(F.col("toks"), i + 1).alias("w2"),
-        ),
-    )
-    bg = (
-        tok_df.select(F.explode(bg_arr).alias("b"))
-        .select(F.col("b.w1").alias("w1"), F.col("b.w2").alias("w2"))
-        .localCheckpoint(eager=False)
-    )
-    n = bg.agg(F.count("*").alias("n"))
-    c12 = bg.groupBy("w1", "w2").agg(F.count("*").alias("c12"))
-    c1 = bg.groupBy("w1").agg(F.count("*").alias("c1"))
-    c2 = bg.groupBy("w2").agg(F.count("*").alias("c2"))
+    c12 = bigrams(d).groupBy("w1", "w2").agg(F.count("*").alias("c12"))
+    n = c12.agg(F.sum("c12").alias("n"))
+    c1 = F.sum("c12").over(W.partitionBy("w1"))
+    c2 = F.sum("c12").over(W.partitionBy("w2"))
     pmi = F.round(
-        F.log(
-            F.col("c12").cast("double") * F.col("n")
-            / (F.col("c1").cast("double") * F.col("c2"))
-        ),
-        4,
+        F.log(F.col("c12").cast("double") * F.col("n") / (c1.cast("double") * c2)), 4
     )
     scored = (
-        c12.filter(F.col("c12") >= PMI_MIN_COUNT)
-        .join(F.broadcast(c1), "w1")
-        .join(F.broadcast(c2), "w2")
-        .crossJoin(F.broadcast(n))
+        c12.crossJoin(F.broadcast(n))
         .select("w1", "w2", "c12", pmi.alias("pmi"))
+        .filter(F.col("c12") >= PMI_MIN_COUNT)
     )
     return (
         scored.withColumn(
@@ -987,32 +961,29 @@ def q_bm25_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     join turns it into full BM25 document retrieval; the weighting layer
     is what this query pins down.
 
-    Scale: identical plan shape to q_tfidf_top_terms — two uniform-key
-    shuffles, broadcast df and corpus-stats dimensions, per-doc
-    WindowGroupLimit top-k. The extra inputs (doc length, avg length)
-    are one more bounded aggregate each.
+    Scale: the plan shape of q_tfidf_top_terms — two uniform-key
+    shuffles, a vocabulary-sized df join that AQE plans from runtime
+    sizes, a 1-row broadcast of the corpus stats, per-doc
+    WindowGroupLimit top-k. The doc length is a window sum over doc_id,
+    so it shares the ranking window's exchange instead of joining a
+    doc-sized table; the corpus stats are one more 1-row aggregate.
     """
     d = load_tables(spark, sf_dir, ("documents",))["documents"]
-    toks = F.filter(F.split("text", " "), lambda t: t != "")
-    terms = (
-        d.select("doc_id", F.explode(toks).alias("term"))
-        .groupBy("doc_id", "term")
-        .agg(F.count("*").alias("tf"))
-        .localCheckpoint(eager=False)
+    terms = doc_terms(d)
+    stats = terms.agg(
+        F.countDistinct("doc_id").alias("n_docs"), F.sum("tf").alias("total_len")
     )
-    dl = terms.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
-    stats = dl.agg(F.count("*").alias("n_docs"), F.sum("dl").alias("total_len"))
     dfreq = terms.groupBy("term").agg(F.count("*").alias("df"))
+    dl = F.sum("tf").over(W.partitionBy("doc_id"))
     avgdl = F.col("total_len").cast("double") / F.col("n_docs")
     idf = F.log(
         1 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
     )
     score = idf * (F.col("tf") * (BM25_K1 + 1)) / (
-        F.col("tf") + BM25_K1 * (1 - BM25_B + BM25_B * F.col("dl") / avgdl)
+        F.col("tf") + BM25_K1 * (1 - BM25_B + BM25_B * dl / avgdl)
     )
     w = (
-        terms.join(dfreq.hint("merge"), "term")
-        .join(F.broadcast(dl), "doc_id")
+        terms.join(dfreq, "term")
         .crossJoin(F.broadcast(stats))
         .select("doc_id", "term", "tf", "df", F.round(score, 4).alias("bm25"))
     )
@@ -1203,41 +1174,26 @@ def q_hybrid_rrf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     Integer-rank arithmetic makes the fusion exactly reproducible.
     """
     d = load_tables(spark, sf_dir, ("documents", "embeddings"))
-    docs = d["documents"]
-    toks = F.filter(F.split("text", " "), lambda t: t != "")
-    terms = (
-        docs.select("doc_id", F.explode(toks).alias("term"))
-        .groupBy("doc_id", "term")
-        .agg(F.count("*").alias("tf"))
-        .localCheckpoint(eager=False)
-    )
-    dfreq = terms.groupBy("term").agg(F.count("*").alias("df"))
-    n = docs.agg(F.count("*").alias("n_docs"))
-    w = (
-        terms.join(dfreq.hint("merge"), "term")
-        .crossJoin(F.broadcast(n))
-        .select(
-            "doc_id",
-            "term",
-            (F.col("tf") * F.log(F.col("n_docs").cast("double") / F.col("df"))).alias("wt"),
-        )
-        .localCheckpoint(eager=False)
-    )
-    norms = w.groupBy("doc_id").agg(F.sqrt(F.sum(F.col("wt") * F.col("wt"))).alias("nrm"))
+    w = _tfidf_weights(d["documents"])
     qa = w.filter(
         (F.col("doc_id") % RRF_QUERY_MOD == 0) & (F.col("doc_id") < RRF_QUERY_CAP)
     ).select(
-        F.col("doc_id").alias("q_doc"), "term", F.col("wt").alias("qwt")
+        F.col("doc_id").alias("q_doc"), "term", F.col("wt").alias("qwt"), F.col("nrm").alias("qn")
     )
-    dots = (
-        qa.join(w.select(F.col("doc_id").alias("nn_doc"), "term", "wt"), "term")
+    # corpus on the streaming side, CAPPED query set explicitly broadcast
+    # (AQE otherwise builds whichever side finished small — at sf0.1 that
+    # was the whole corpus's weight frame, 1.2 s slower per run)
+    nn = w.select(F.col("doc_id").alias("nn_doc"), "term", "wt", F.col("nrm").alias("nn"))
+    lex_scored = (
+        nn.join(F.broadcast(qa), "term")
         .filter(F.col("q_doc") != F.col("nn_doc"))
         .groupBy("q_doc", "nn_doc")
-        .agg(F.sum(F.col("qwt") * F.col("wt")).alias("dot"))
-    )
-    lex_scored = (
-        dots.join(F.broadcast(norms.select(F.col("doc_id").alias("q_doc"), F.col("nrm").alias("qn"))), "q_doc")
-        .join(F.broadcast(norms.select(F.col("doc_id").alias("nn_doc"), F.col("nrm").alias("nn"))), "nn_doc")
+        .agg(
+            F.sum(F.col("qwt") * F.col("wt")).alias("dot"),
+            # a doc's norm is the same on all its rows: max() carries it
+            F.max("qn").alias("qn"),
+            F.max("nn").alias("nn"),
+        )
         .select(
             "q_doc",
             "nn_doc",

@@ -3,9 +3,14 @@ the scans, dimensions broadcast, top-k compiles to heap selection."""
 
 from __future__ import annotations
 
+import re
+
+import pytest
+
 import __spark_entry__ as contract
 
 from etl_pipeline_spark import plans
+from etl_pipeline_spark.session import release_session_blocks
 
 SF = "/root/testdata/sf0.001"
 
@@ -525,3 +530,33 @@ def test_verify_first_attach_builds_pair_side(spark):
             assert not _re.search(r"\b(hsh|shset|sh_a|sh_b|h_a|h_b|shingles)\b", window), (
                 f"{name}: array column near a BroadcastExchange:\n{window}"
             )
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "q_tfidf_top_terms",
+        "q_tfidf_nearest_docs",
+        "q_bm25_top_terms",
+        "q_hybrid_rrf_search",
+        "q_pmi_collocations",
+        "q_lm_bigram_score",
+        "q_curriculum_buckets",
+    ],
+)
+def test_text_family_runs_from_recomputable_lineage(spark, name):
+    """The term-frame and bigram-stream queries (functions/shingles.py
+    doc_terms / bigrams) read no checkpoint: no `Scan ExistingRDD` in the
+    plan and no RDD block left after a write, so an executor loss
+    recomputes them. BM25 and hybrid retrieval attach doc length and
+    doc norm by window, so no broadcast join is keyed by a document id
+    (a doc-keyed side grows with the corpus)."""
+    release_session_blocks(spark)
+    df = contract.queries()[name](spark, SF)
+    plan = plans.executed(df)
+    assert "ExistingRDD" not in plan, plan[:1200]
+    df.write.format("noop").mode("overwrite").save()
+    assert release_session_blocks(spark) == 0
+    if name in ("q_bm25_top_terms", "q_hybrid_rrf_search"):
+        keys = re.findall(r"BroadcastHashJoin \[([^\]]*)\]", plan)
+        assert not [k for k in keys if re.search(r"\b(doc_id|q_doc|nn_doc)#", k)], keys

@@ -4,9 +4,9 @@ contended-window drift from BENCH_r12 with same-session alternating
 reps instead of cross-round raw numbers).
 
 Usage:
-    git worktree add /tmp/r11code <r11-head-commit>
-    python tools/bench_ab_queries.py --old /tmp/r11code \
-        --queries q_knn_pq,q_dedup_minhash_lsh [--runs 3]
+    git clone -q . /tmp/oldcode && git -C /tmp/oldcode checkout <commit>
+    python tools/bench_ab_queries.py --old /tmp/oldcode \
+        --queries q_knn_pq,q_dedup_minhash_lsh [--runs 3] [--out ab.json]
 
 Each rep is a fresh subprocess (own JVM) that warms the tables, times
 each query best-of-2, and brackets itself with the same multi-process
@@ -14,7 +14,10 @@ FNV canary bench.py uses. Reps alternate old,new,old,new,... so any
 load drift hits both sides equally; the verdict compares per-side
 MINIMA (the interleaved-minima protocol the r12 pagerank-drift
 investigation validated: interleaved minima agreed to 0.5% while
-same-side spread was 2.4x on this host class).
+same-side spread was 2.4x on this host class) and reports the medians
+next to them. ``--out`` also writes the verdict with every raw rep to a
+JSON file. Whole-benchmark parent-vs-change runs are perfbench's job
+(``python3 perfbench/run.py --workload analytics``, once per checkout).
 """
 
 from __future__ import annotations
@@ -22,10 +25,11 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import statistics
 import subprocess
 import sys
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # Runs inside each subprocess with cwd = the side's checkout; imports the
 # SIDE's engine code. Kept self-contained so the old checkout needs no
@@ -90,6 +94,7 @@ def main() -> None:
     ap.add_argument("--runs", type=int, default=3, help="reps per side")
     ap.add_argument("--old", required=True, help="older checkout path")
     ap.add_argument("--queries", required=True, help="comma-separated names")
+    ap.add_argument("--out", default=None, help="also write the verdict JSON here")
     args = ap.parse_args()
 
     results: dict[str, list[dict]] = {"old": [], "new": []}
@@ -104,11 +109,14 @@ def main() -> None:
     verdict: dict = {"runs_per_side": args.runs, "per_query": {}}
     for n in names:
         mins = {s: min(r["queries"][n] for r in results[s]) for s in results}
+        meds = {s: statistics.median(r["queries"][n] for r in results[s]) for s in results}
         ratio = round(mins["new"] / max(mins["old"], 1e-9), 3)
         verdict["per_query"][n] = {
             "old_min": mins["old"],
             "new_min": mins["new"],
             "new_over_old": ratio,
+            "old_median": meds["old"],
+            "new_median": meds["new"],
             "old_all": [r["queries"][n] for r in results["old"]],
             "new_all": [r["queries"][n] for r in results["new"]],
         }
@@ -116,6 +124,9 @@ def main() -> None:
         s: [r["mt_canary_sec"] for r in results[s]] for s in results
     }
     print(json.dumps({"ab_verdict": verdict}))
+    if args.out:
+        with open(args.out, "w") as f:
+            json.dump({"ab_verdict": verdict}, f, indent=1)
 
 
 if __name__ == "__main__":

@@ -1,13 +1,23 @@
 """Dump formatted physical plans for the bench queries into PLANS.md —
 the evidence behind the scale claims (pushdown reaching the scans,
-broadcasts chosen for dimensions, TakeOrdered for top-k, AQE nodes)."""
+broadcasts chosen for dimensions, TakeOrdered for top-k, AQE nodes).
+
+    python tools/dump_plans.py
+    python tools/dump_plans.py --out-dir plans/text --suffix after q_a q_b
+
+With query names, each query is executed (collected) and its final
+adaptive plan is written to ``<out-dir>/<name>_<suffix>.txt`` instead.
+"""
 
 from __future__ import annotations
 
+import argparse
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from bench import BENCH_QUERIES, SCALE_QUERIES
 from etl_pipeline_spark.queries.base import all_specs
@@ -81,10 +91,29 @@ def trim(plan: str, max_lines: int = 40) -> str:
     return "\n".join(out)
 
 
+def dump_executed(spark, specs, names, sf: str, out_dir: str, suffix: str) -> None:
+    os.makedirs(out_dir, exist_ok=True)
+    for name in names:
+        df = specs[name].fn(spark, sf)
+        df.collect()  # same Dataset => its formatted plan is the final one
+        path = os.path.join(out_dir, f"{name}_{suffix}.txt")
+        with open(path, "w") as f:
+            f.write(formatted_plan(df))
+        print(f"wrote {path}")
+
+
 def main() -> None:
+    ap = argparse.ArgumentParser()
+    ap.add_argument("names", nargs="*")
+    ap.add_argument("--out-dir", default=os.path.join(REPO, "plans"))
+    ap.add_argument("--suffix", default="after")
+    args = ap.parse_args()
     spark = get_spark("plans")
     specs = all_specs()
     sf = "/root/testdata/sf0.1"
+    if args.names:
+        dump_executed(spark, specs, args.names, sf, args.out_dir, args.suffix)
+        return
     parts = [
         "# PLANS — physical plans of the bench queries (sf0.1, local[32])",
         "",
@@ -120,12 +149,11 @@ def main() -> None:
         parts += ["```", trim(formatted_plan(df)), "```", ""]
     # fold in the measured skew comparison (tools/skew_compare.py) so the
     # evidence survives PLANS.md regeneration
-    import os
-
-    if os.path.exists("/root/repo/SKEW_COMPARE.md"):
-        with open("/root/repo/SKEW_COMPARE.md") as f:
+    skew = os.path.join(REPO, "SKEW_COMPARE.md")
+    if os.path.exists(skew):
+        with open(skew) as f:
             parts += [f.read()]
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(parts))
     print("wrote PLANS.md")
 

@@ -5,9 +5,11 @@ oracle status, and first docstring line. Regenerate after adding queries:
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from etl_pipeline_spark.queries.base import all_specs
 
@@ -30,7 +32,7 @@ def main() -> None:
         first = doc[0].strip() if doc else ""
         check = "oracle" if spec.oracle else "rows-only"
         lines.append(f"| `{name}` | {check} | {', '.join(spec.tags)} | {first} |")
-    with open("/root/repo/QUERIES.md", "w") as f:
+    with open(os.path.join(REPO, "QUERIES.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"wrote QUERIES.md ({len(specs)} queries, {n_oracle} oracled)")
 

@@ -64,7 +64,8 @@ import os
 import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from etl_pipeline_spark.queries.base import REGISTRY, all_specs
 from etl_pipeline_spark.session import get_spark
@@ -598,7 +599,7 @@ def main() -> None:
         1 for r in rows if r[4] not in ("-",) and not r[4].startswith("PLAN-ERROR")
     )
     max_nodes = max((r[3] for r in rows), default=0)
-    with open("/root/repo/PLAN_AUDIT.md", "w") as f:
+    with open(os.path.join(REPO, "PLAN_AUDIT.md"), "w") as f:
         f.write(
             "# PLAN_AUDIT — anti-pattern scan over every registered query\n\n"
             "Generated by `python tools/plan_audit.py` (planning only, sf0.01).\n"

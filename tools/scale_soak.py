@@ -30,7 +30,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F
 
@@ -38,7 +39,7 @@ from etl_pipeline_spark.catalog import load_tables
 from etl_pipeline_spark.session import get_spark, release_session_blocks
 
 SF_SRC = "/root/testdata/sf0.1"
-SF1_DIR = "/root/repo/.scratch/scale/sf1"
+SF1_DIR = f"{REPO}/.scratch/scale/sf1"
 COPIES = 10
 ID_OFFSET = 30_000_000  # divisible by 3 and 10: preserves %3 / %10 splits
 
@@ -284,7 +285,7 @@ def build_sf1(spark) -> None:
     out_na.repartition(1).write.mode("overwrite").parquet(f"{SF1_DIR}/nation.parquet")
 
 
-SF10_DIR = "/root/repo/.scratch/scale/sf10"
+SF10_DIR = f"{REPO}/.scratch/scale/sf10"
 SF10_QUERIES = ["q_dedup_minhash_lsh", "q_training_data_prep", "q_semdedup_scaledk"]
 
 
@@ -485,7 +486,7 @@ def main_sf10() -> None:
     print(json.dumps({"summary_sf10": summary}))
 
 
-SF100_DIR = "/root/repo/.scratch/scale/sf100"
+SF100_DIR = f"{REPO}/.scratch/scale/sf100"
 # documents-only tier: both sf100 queries read only the documents table,
 # so the embeddings copies (half the build and disk) are skipped.
 SF100_QUERIES = ["q_dedup_minhash_lsh", "q_training_data_prep"]
@@ -546,8 +547,8 @@ def build_sf100_lineitem(spark) -> None:
     out.repartition(256).write.mode("overwrite").parquet(f"{SF100_DIR}/lineitem.parquet")
 
 
-SF50_EDGE_DIR = "/root/repo/.scratch/scale/sf50_edges_s1"
-SF10_EDGE_DIR = "/root/repo/.scratch/scale/sf10_edges_s1"
+SF50_EDGE_DIR = f"{REPO}/.scratch/scale/sf50_edges_s1"
+SF10_EDGE_DIR = f"{REPO}/.scratch/scale/sf10_edges_s1"
 # support-2 canonical (u < v) frames for the triangle census — the
 # census's OWN contract graph (TRI_SUPPORT = 2). The support-1 frames
 # above are ~40x denser; their wedge volume is intrinsic (sum of
@@ -556,8 +557,8 @@ SF10_EDGE_DIR = "/root/repo/.scratch/scale/sf10_edges_s1"
 # 66 GB free before being killed at 87% host disk (boundary recorded
 # in BASELINE.md). k-core/pagerank/LPA stay on support-1, where their
 # per-round work is edge-LINEAR and feasible.
-SF50_EDGE2_DIR = "/root/repo/.scratch/scale/sf50_edges_s2"
-SF10_EDGE2_DIR = "/root/repo/.scratch/scale/sf10_edges_s2"
+SF50_EDGE2_DIR = f"{REPO}/.scratch/scale/sf50_edges_s2"
+SF10_EDGE2_DIR = f"{REPO}/.scratch/scale/sf10_edges_s2"
 PEEL_COPIES = 5  # sf50: the largest slice one host's disk carries (see below)
 
 
@@ -1294,7 +1295,7 @@ def main_sf10_tri_sampled() -> None:
     # count doubles to ~1.88B. Truth = 100 x sf1 exact (disjoint
     # copies). Predicted rel_err ~ sqrt(4095/1.88e9) ~ 0.15%.
     if "--sf100" in sys.argv:
-        SF100_EDGE_DIR = "/root/repo/.scratch/scale/sf100_edges_s1"
+        SF100_EDGE_DIR = f"{REPO}/.scratch/scale/sf100_edges_s1"
         KEEP100 = 1
         scale100 = (16 // KEEP100) ** 3
 

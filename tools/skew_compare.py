@@ -22,11 +22,13 @@ Run: python tools/skew_compare.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F
 
@@ -36,7 +38,7 @@ from etl_pipeline_spark.session import get_spark
 
 INFLATE = 20
 N_SALTS = 8
-SCRATCH = "/root/repo/.scratch/skew_compare"
+SCRATCH = f"{REPO}/.scratch/skew_compare"
 
 # AQE's skew detector defaults to 256 MB partitions — far above any local
 # fixture. These thresholds scale the detector to the test data; a real
@@ -168,7 +170,7 @@ def main() -> None:
         "```",
         "",
     ]
-    with open("/root/repo/SKEW_COMPARE.md", "w") as f:
+    with open(os.path.join(REPO, "SKEW_COMPARE.md"), "w") as f:
         f.write("\n".join(md))
     for r in results:
         print(f"{r['label']}: {r['sec']}s rows={r['rows']}")
