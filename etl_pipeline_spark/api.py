@@ -48,13 +48,11 @@ def dedupe_exact(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") 
 
 
 def shingles(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", width: int = 3) -> DataFrame:
-    """(id, shingle) distinct word n-gram pairs. Tokenizes ONCE via
-    functions/shingles.py — inline split is O(tokens^2) per doc."""
-    from etl_pipeline_spark.functions.shingles import tokenized, word_shingles
+    """(id, shingle) distinct word n-gram pairs — the posting stream of
+    functions/shingles.py, with the id column renamed."""
+    from etl_pipeline_spark.functions.shingles import postings
 
-    return tokenized(
-        df, id_col, text_col=text_col, min_tokens=width
-    ).select(F.col(id_col).alias("id"), F.explode(word_shingles(width)).alias("shingle"))
+    return postings(df, width, id_col, text_col).select(F.col(id_col).alias("id"), "shingle")
 
 
 def jaccard_near_dup_pairs(
@@ -67,29 +65,24 @@ def jaccard_near_dup_pairs(
 ) -> DataFrame:
     """Exact n-gram Jaccard pairs >= threshold via inverted-index
     self-join; ``df_cap`` drops stop-shingles (document frequency above
-    the cap) to bound posting-list blowup at scale."""
-    sh = shingles(df, text_col, id_col, shingle_width)
+    the cap) to bound posting-list blowup at scale. The cap is a window
+    count over the posting stream: a doc-frequency table joined back was
+    broadcast whole (the vocabulary) off the compressed-scan estimate at
+    sf10."""
+    from etl_pipeline_spark.functions.shingles import overlap_pairs, postings
+
+    sh = postings(df, shingle_width, id_col, text_col)
     if df_cap is not None:
-        freq = sh.groupBy("shingle").agg(F.count("*").alias("_df"))
-        sh = sh.join(freq.filter(F.col("_df") <= df_cap), "shingle").select("id", "shingle")
-    sizes = sh.groupBy("id").agg(F.count("*").alias("n_sh"))
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.id") < F.col("b.id")))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count("*").alias("n_inter"))
-    )
-    sa = sizes.select(F.col("id").alias("id_a"), F.col("n_sh").alias("na"))
-    sb = sizes.select(F.col("id").alias("id_b"), F.col("n_sh").alias("nb"))
+        sh = (
+            sh.withColumn("_df", F.count("*").over(W.partitionBy("shingle")))
+            .filter(F.col("_df") <= df_cap)
+            .select(id_col, "shingle")
+        )
     jac = F.col("n_inter") / (F.col("na") + F.col("nb") - F.col("n_inter"))
     return (
-        inter.join(sa, "id_a").join(sb, "id_b")
+        overlap_pairs(sh, directed=False)
         .filter(jac >= threshold)
-        .select(
-            F.col("id_a").alias("doc_a"),
-            F.col("id_b").alias("doc_b"),
-            F.round(jac, 4).alias("jaccard"),
-        )
+        .select("doc_a", "doc_b", F.round(jac, 4).alias("jaccard"))
     )
 
 
@@ -638,25 +631,18 @@ def containment_pairs(
     threshold — catches a short document embedded in a longer one, which
     symmetric Jaccard misses. Columns: contained_doc, container_doc,
     n_inter, containment."""
-    sh = shingles(df, text_col=text_col, id_col=id_col, width=width).localCheckpoint(
-        eager=False
-    )  # columns: (id, shingle)
-    sizes = sh.groupBy("id").agg(F.count("*").alias("__n"))
-    a, b = sh.alias("a"), sh.alias("b")
-    pair_inter = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.id") != F.col("b.id")))
-        .groupBy(
-            F.col("a.id").alias("contained_doc"),
-            F.col("b.id").alias("container_doc"),
-        )
-        .agg(F.count("*").alias("n_inter"))
-    )
-    sa = sizes.select(F.col("id").alias("contained_doc"), F.col("__n").alias("__na"))
-    c = F.col("n_inter").cast("double") / F.col("__na")
+    from etl_pipeline_spark.functions.shingles import overlap_pairs, postings
+
+    c = F.col("n_inter") / F.col("na")
     return (
-        pair_inter.join(sa, "contained_doc")
+        overlap_pairs(postings(df, width, id_col, text_col), directed=True)
         .filter(c >= threshold)
-        .select("contained_doc", "container_doc", "n_inter", F.round(c, 4).alias("containment"))
+        .select(
+            F.col("doc_a").alias("contained_doc"),
+            F.col("doc_b").alias("container_doc"),
+            "n_inter",
+            F.round(c, 4).alias("containment"),
+        )
     )
 
 

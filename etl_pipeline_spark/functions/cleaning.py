@@ -112,7 +112,3 @@ def basename(path_col: Column) -> Column:
     """``os.path.basename`` (dataflow_transform.py:93)."""
     return F.substring_index(path_col, "/", -1)
 
-
-def file_age_days(created_col: Column) -> Column:
-    """File age in whole days vs now (dataflow.py:178-180)."""
-    return F.datediff(F.current_date(), created_col.cast("date"))

@@ -86,11 +86,6 @@ def sat_cents(x: Column) -> Column:
     return sat_quantize(x, 100, MONEY_ABS_MAX)
 
 
-def sat_cents_sql(expr: str) -> str:
-    """DuckDB twin of :func:`sat_cents`."""
-    return sat_quantize_sql(expr, 100, MONEY_ABS_MAX)
-
-
 # Presentation rounding that stays order-stable at EVERY magnitude
 # (r11 judge #3). ROUND(x, 4) is an ABSOLUTE grid: it absorbs
 # summation-order low bits only while |x| <~ 1e6; a pathological

@@ -14,15 +14,16 @@ risk at 100 TB; the standard mitigation implemented here is dropping
 shingles whose document frequency exceeds a cap (they can only produce
 pairs that other, rarer shingles also produce when similarity is high).
 
-Materialization note: self-join inputs are localCheckpoint(eager=False)'d
-— lazy, so query CONSTRUCTION stays job-free (plan dumps / plan-assert
-tests don't execute the shingle explosion), while the first action still
-materializes the input exactly once and every downstream subtree reuses
-the pinned blocks (without it the explosion re-runs per subtree: 2.5x
-wall-clock at sf0.1). The blocks stay pinned for the session — a
-long-lived service calling these builders repeatedly should unpersist via
-the returned plan's RDD, and a cluster run would use persist(DISK) or a
-reliable checkpoint instead.
+Materialization note: the posting self-join operators (n-gram Jaccard,
+its capped variant and containment) read no checkpoint.
+functions/shingles.py builds the posting stream (``postings``) and pairs
+it (``overlap_pairs``): the self-join sides and the set-size aggregate
+share one shingle exchange, so the explode runs once and an executor
+loss recomputes everything from the scan. The MinHash family and the
+prefix filter (its posting stream and its verify step) still
+materialize intermediate frames with a lazy ``localCheckpoint(eager=
+False)`` — query construction stays job-free and the first action fills
+the blocks, which stay pinned until ``session.release_session_blocks``.
 """
 
 from __future__ import annotations
@@ -36,10 +37,13 @@ from pyspark.storagelevel import StorageLevel
 
 
 def wide_ckpt_level() -> StorageLevel:
-    """Storage level for the WIDE (shingle-array / feature-vector)
-    checkpoints. Default: the engine-standard deserialized memory+disk —
-    fastest when blocks fit (serializing cost a measured +7-49%
-    wall-clock across the sf1 heavies for zero benefit there).
+    """Storage level for the WIDE (shingle) checkpoints. Its callers are
+    the MinHash family's hashed-shingle docs and candidate-member docs
+    (``minhash_docs_and_candidates``, ``q_dedup_minhash_lsh``'s verify)
+    and the prefix filter's posting stream. Default: the
+    engine-standard deserialized memory+disk — fastest when blocks fit
+    (serializing cost a measured +7-49% wall-clock across the sf1
+    heavies for zero benefit there).
 
     Set ``SPARK_GRAFT_WIDE_CKPT_SER=1`` for memory-constrained
     deployments: serialized memory+disk stores these tables at ~wire
@@ -60,6 +64,7 @@ from etl_pipeline_spark.catalog import EMB_DOOR_SQL, emb_door_sql, embedding_doo
 from etl_pipeline_spark.functions.grid import sat_quantize_sql
 from etl_pipeline_spark.functions.shingles import (
     hashed_word_shingles,
+    postings,
     tokenized,
     word_shingles,
 )
@@ -158,70 +163,10 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     hot shingles; MinHash-LSH (q_dedup_minhash_lsh) is the sub-quadratic
     path at 100 TB, with this as the verify step on surviving pairs.
     """
+    from etl_pipeline_spark.api import jaccard_near_dup_pairs
+
     d = load_tables(spark, sf_dir, ("documents",))["documents"]
-    # Materialized once (lazily; see module docstring): the inverted index
-    # feeds BOTH self-join sides — without this the shingle explosion
-    # runs per subtree. scan_parallel: the shingle explode is
-    # the CPU-heavy stage, and at test SFs the scan is one split.
-    # tokenized(): min_tokens guards sequence(0, n<0) (DESCENDING in
-    # Spark — short docs drop before shingling; the oracle filters
-    # identically) AND hoists the split (functions/shingles.py).
-    # merge hint: the checkpoint preserves the origin scan's size
-    # estimate (~100:1 optimistic for text), so without it the planner
-    # statically BROADCASTS one side of the posting self-join once the
-    # corpus grows (measured at sf10: a 4.2 GiB broadcast build OOM via
-    # dedup_clusters' eager checkpoint) — the q_dedup_minhash_lsh /
-    # capped-variant incident class, same fix.
-    # r14 optimization round, POSTMORTEM of a reverted attempt: carrying
-    # n_shingles on each posting row (computed as size(sh) next to
-    # explode(sh) over a named array column) removes the sizes aggregate
-    # and both pair-keyed size joins (7 Exchanges -> 3)… and measured
-    # 13x SLOWER (0.56 s -> 7.6 s for the posting build at sf0.1):
-    # InferFiltersFromGenerate derives `size(<generator child>) > 0 AND
-    # isnotnull(...)` predicates containing the WHOLE shingle
-    # expression, predicate pushdown substitutes them through the
-    # token-array projection, and the per-element `element_at(toks, i)`
-    # references degrade to `element_at(split(text), i)` — the
-    # O(tokens^2)-per-doc trap functions/shingles.py documents, now
-    # manufactured by the optimizer inside a Filter. The sizes aggregate
-    # over the checkpointed postings is the CHEAPER plan; the extra
-    # exchanges are doc-count-sized and the posting explode runs once.
-    shingles = (
-        tokenized(
-            scan_parallel(d, spark), "doc_id", min_tokens=SHINGLE_WIDTH
-        )
-        .select("doc_id", F.explode(word_shingles(SHINGLE_WIDTH)).alias("shingle"))
-        .localCheckpoint(eager=False, storageLevel=wide_ckpt_level())
-    )
-    sizes = shingles.groupBy("doc_id").agg(F.count("*").alias("n_shingles"))
-    # r15 optimization round: the merge hint moved from the checkpointed
-    # frame to the SELF-JOIN sides only. The static-broadcast hazard the
-    # hint guards (checkpoint preserves the origin scan's ~100:1-
-    # optimistic size estimate) exists only where the checkpoint feeds a
-    # join DIRECTLY — no exchange below it, so the strategy is fixed at
-    # static-planning time. The two size joins below sit above exchanges
-    # on BOTH sides (pair_inter and sizes are aggregates), so AQE
-    # re-plans them from runtime stage stats: tiny here (broadcast,
-    # measured min 1.327 -> 0.944 interleaved at sf0.1 — the leaf-level
-    # hint was forcing two sorts of the million-row pair table), real
-    # sizes at 100 TB (falls back to SMJ on actual bytes, never the
-    # static estimate).
-    a = shingles.hint("merge").alias("a")
-    b = shingles.hint("merge").alias("b")
-    pair_inter = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count("*").alias("n_inter"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_shingles").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_shingles").alias("nb"))
-    jac = F.col("n_inter").cast("double") / (F.col("na") + F.col("nb") - F.col("n_inter"))
-    return (
-        pair_inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .filter(jac >= JACCARD_THRESHOLD)
-        .select("doc_a", "doc_b", F.round(jac, 4).alias("jaccard"))
-    )
+    return jaccard_near_dup_pairs(d, threshold=JACCARD_THRESHOLD, shingle_width=SHINGLE_WIDTH)
 
 
 # Banded LSH over a 16-permutation signature: band b's bucket key hashes
@@ -739,49 +684,11 @@ def q_dedup_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the cap turns the quadratic hot-shingle blowup into a bounded
     O(cap^2) per shingle; combined with MinHash banding this is the
     production near-dup path."""
+    from etl_pipeline_spark.api import jaccard_near_dup_pairs
+
     d = load_tables(spark, sf_dir, ("documents",))["documents"]
-    # The cap is a WINDOW count over the posting stream (r6): one
-    # shuffle of the postings by shingle, filter in place — no
-    # doc-frequency TABLE exists to join or broadcast at all. The r5
-    # join form let the planner statically broadcast the corpus
-    # VOCABULARY off the compressed-scan estimate at sf10 (the
-    # q_dedup_minhash_lsh incident class), and the shuffle-join fix for
-    # that cost 3x at sf0.1; the window form is faster than both at
-    # every measured scale AND structurally broadcast-free. The capped
-    # index is materialized once, lazily: it feeds both self-join sides
-    # and the size table.
-    shingles_all = tokenized(d, "doc_id", min_tokens=SHINGLE_WIDTH).select(
-        "doc_id", F.explode(word_shingles(SHINGLE_WIDTH)).alias("shingle")
-    )
-    # merge hint: the checkpoint preserves the origin plan's scan-derived
-    # size estimate (~100:1 optimistic for text), so without it the
-    # planner statically BROADCASTS one side of the posting self-join at
-    # sf10 and OOMs the driver — the q_dedup_minhash_lsh incident class.
-    shingles = (
-        shingles_all.withColumn("df", F.count("*").over(W.partitionBy("shingle")))
-        .filter(F.col("df") <= DF_CAP)
-        .select("doc_id", "shingle")
-        .localCheckpoint(eager=False, storageLevel=wide_ckpt_level())
-    )
-    sizes = shingles.groupBy("doc_id").agg(F.count("*").alias("n_shingles"))
-    # r15: merge hint scoped to the self-join sides only — the size
-    # joins sit above exchanges on both sides, so AQE plans them from
-    # runtime stats (see q_dedup_ngram_jaccard for the measurement and
-    # the static-vs-runtime argument).
-    a, b = shingles.hint("merge").alias("a"), shingles.hint("merge").alias("b")
-    pair_inter = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count("*").alias("n_inter"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_shingles").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_shingles").alias("nb"))
-    jac = F.col("n_inter").cast("double") / (F.col("na") + F.col("nb") - F.col("n_inter"))
-    return (
-        pair_inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .filter(jac >= JACCARD_THRESHOLD)
-        .select("doc_a", "doc_b", F.round(jac, 4).alias("jaccard"))
+    return jaccard_near_dup_pairs(
+        d, threshold=JACCARD_THRESHOLD, shingle_width=SHINGLE_WIDTH, df_cap=DF_CAP
     )
 
 
@@ -1058,41 +965,10 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     intersection rows, same asymptotics. Hot-shingle posting lists are the
     skew risk; the capped variant's stop-shingle drop applies verbatim.
     """
+    from etl_pipeline_spark.api import containment_pairs
+
     d = load_tables(spark, sf_dir, ("documents",))["documents"]
-    # merge hint for the same reason as q_dedup_ngram_jaccard: never
-    # let the checkpoint's optimistic origin-scan estimate broadcast a
-    # posting-stream side of the self-join
-    shingles = (
-        tokenized(d, "doc_id", min_tokens=SHINGLE_WIDTH)
-        .select("doc_id", F.explode(word_shingles(SHINGLE_WIDTH)).alias("shingle"))
-        .localCheckpoint(eager=False, storageLevel=wide_ckpt_level())
-    )
-    # r15: merge hint scoped to the self-join sides only — the size
-    # join sits above exchanges on both sides, so AQE plans it from
-    # runtime stats (see q_dedup_ngram_jaccard).
-    sizes = shingles.groupBy("doc_id").agg(F.count("*").alias("n_shingles"))
-    a = shingles.hint("merge").alias("a")
-    b = shingles.hint("merge").alias("b")
-    pair_inter = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc_id") != F.col("b.doc_id")))
-        .groupBy(
-            F.col("a.doc_id").alias("contained_doc"),
-            F.col("b.doc_id").alias("container_doc"),
-        )
-        .agg(F.count("*").alias("n_inter"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("contained_doc"), F.col("n_shingles").alias("na"))
-    containment = F.col("n_inter").cast("double") / F.col("na")
-    return (
-        pair_inter.join(sa, "contained_doc")
-        .filter(containment >= CONTAINMENT_THRESHOLD)
-        .select(
-            "contained_doc",
-            "container_doc",
-            "n_inter",
-            F.round(containment, 4).alias("containment"),
-        )
-    )
+    return containment_pairs(d, threshold=CONTAINMENT_THRESHOLD, width=SHINGLE_WIDTH)
 
 
 # --- SemDeDup: semantic dedup via clustering + centroid-aware pruning -------
@@ -1310,18 +1186,6 @@ REGISTRY["q_lsh_recall_report"].oracle = f"""
 # --- Prefix-filtering exact similarity join (PPJoin-style) -------------------
 
 
-def _shingle_stream(d: DataFrame) -> DataFrame:
-    """Distinct word-3-gram shingles per doc (the q_dedup_ngram_jaccard
-    construction, factored for reuse), lazily materialized once."""
-    return (
-        tokenized(
-            scan_parallel(d, d.sparkSession), "doc_id", min_tokens=SHINGLE_WIDTH
-        )
-        .select("doc_id", F.explode(word_shingles(SHINGLE_WIDTH)).alias("shingle"))
-        .localCheckpoint(eager=False, storageLevel=wide_ckpt_level())
-    )
-
-
 PF_THRESHOLD = 0.8  # prefix filtering pays off at HIGH thresholds: prefix length ~ (1-t)*n
 
 
@@ -1370,7 +1234,12 @@ def q_dedup_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact-subquadratic tier of the toolbox.
     """
     d = load_tables(spark, sf_dir, ("documents",))["documents"]
-    sh = _shingle_stream(d)
+    # checkpointed: the prefix ranking and the verify's shingle sets both
+    # read it; re-exploding measured slower (sf0.1, 7 interleaved noop
+    # reps: median 5.28 vs 4.94 s)
+    sh = postings(d, SHINGLE_WIDTH).localCheckpoint(
+        eager=False, storageLevel=wide_ckpt_level()
+    )
     # Doc frequency and doc size are WINDOW counts over the posting
     # stream (r6): one shuffle by shingle for df, one by doc_id for the
     # rank and size together — no vocabulary or size TABLE exists to
@@ -1386,9 +1255,9 @@ def q_dedup_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("n", F.count("*").over(W.partitionBy("doc_id")))
     )
-    # merge hint: same checkpoint-preserved-estimate hazard as the capped
-    # query — without it the prefix self-join can statically broadcast a
-    # text-derived side at scale.
+    # merge hint: the checkpoint above preserves the text scan's ~100:1
+    # optimistic size estimate — without it the prefix self-join can
+    # statically broadcast a text-derived side at scale.
     prefix = (
         ranked.filter(F.col("r") <= F.col("n") - F.ceil(F.lit(PF_THRESHOLD) * F.col("n")) + 1)
         .select("doc_id", "shingle")

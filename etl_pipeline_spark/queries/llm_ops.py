@@ -18,7 +18,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from etl_pipeline_spark.catalog import load_tables
-from etl_pipeline_spark.functions.shingles import tokenized, word_shingles
+from etl_pipeline_spark.functions.shingles import postings
 from etl_pipeline_spark.queries.base import query
 from etl_pipeline_spark.queries.text import TOKEN_RE
 
@@ -52,14 +52,6 @@ def _ngram_sql(width: int, who: str) -> str:
     """
 
 
-def _ngrams(df: DataFrame, width: int) -> DataFrame:
-    # tokenized() hoists the split — inline split is O(tokens^2)/doc
-    # (functions/shingles.py)
-    return tokenized(df, "doc_id", min_tokens=width).select(
-        "doc_id", F.explode(word_shingles(width)).alias("shingle")
-    )
-
-
 @query(
     "q_contamination_check",
     oracle=f"""
@@ -91,8 +83,8 @@ def q_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     all-pairs product anywhere.
     """
     d = load_tables(spark, sf_dir, ("documents",))["documents"]
-    train = _ngrams(d.filter(F.col("doc_id") % EVAL_MOD != EVAL_REMAINDER), CONTAM_NGRAM)
-    evals = _ngrams(d.filter(F.col("doc_id") % EVAL_MOD == EVAL_REMAINDER), CONTAM_NGRAM)
+    train = postings(d.filter(F.col("doc_id") % EVAL_MOD != EVAL_REMAINDER), CONTAM_NGRAM)
+    evals = postings(d.filter(F.col("doc_id") % EVAL_MOD == EVAL_REMAINDER), CONTAM_NGRAM)
     hits = train.alias("t").join(
         F.broadcast(evals.alias("e")), F.col("t.shingle") == F.col("e.shingle")
     )
@@ -633,7 +625,7 @@ def q_shingle_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     index and each batch anti-joins against it.
     """
     d = load_tables(spark, sf_dir, ("documents",))["documents"]
-    sh = _ngrams(d, NOVELTY_NGRAM)
+    sh = postings(d, NOVELTY_NGRAM)
     first_seen = sh.groupBy("shingle").agg(F.min("doc_id").alias("first_doc"))
     joined = sh.join(first_seen, "shingle")
     novel = (F.col("first_doc") == F.col("doc_id")).cast("long")
@@ -854,8 +846,8 @@ def q_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     expressed as data.
     """
     d = load_tables(spark, sf_dir, ("documents",))["documents"]
-    train = _ngrams(d.filter(F.col("doc_id") % EVAL_MOD != EVAL_REMAINDER), CONTAM_NGRAM)
-    evals = _ngrams(d.filter(F.col("doc_id") % EVAL_MOD == EVAL_REMAINDER), CONTAM_NGRAM)
+    train = postings(d.filter(F.col("doc_id") % EVAL_MOD != EVAL_REMAINDER), CONTAM_NGRAM)
+    evals = postings(d.filter(F.col("doc_id") % EVAL_MOD == EVAL_REMAINDER), CONTAM_NGRAM)
 
     def positions(col):  # k bit positions of one shingle column
         return F.array(*[

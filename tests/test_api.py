@@ -58,6 +58,31 @@ def test_df_cap_drops_stop_shingles(spark):
     assert capped.count() == 0  # only the shared stop-shingle linked them
 
 
+@pytest.mark.parametrize(
+    "query, call",
+    [
+        ("q_dedup_ngram_jaccard", lambda d, q: api.jaccard_near_dup_pairs(
+            d, threshold=q.JACCARD_THRESHOLD)),
+        ("q_dedup_ngram_jaccard_capped", lambda d, q: api.jaccard_near_dup_pairs(
+            d, threshold=q.JACCARD_THRESHOLD, df_cap=q.DF_CAP)),
+        ("q_dedup_containment", lambda d, q: api.containment_pairs(
+            d, threshold=q.CONTAINMENT_THRESHOLD)),
+    ],
+)
+def test_pair_api_matches_registry_query(spark, query, call):
+    """The api pair wrappers and the registered queries give the same
+    rows on the fixture corpus, so the two cannot drift apart again."""
+    import __spark_entry__ as contract
+    from conftest import SF_SMOKE
+
+    from etl_pipeline_spark.queries import dedup
+
+    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+    via_api = sorted(tuple(r) for r in call(docs, dedup).collect())
+    via_query = sorted(tuple(r) for r in contract.queries()[query](spark, SF_SMOKE).collect())
+    assert via_api and via_api == via_query
+
+
 def test_quality_and_sampling(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     feats = api.text_quality_features(docs)

@@ -491,16 +491,16 @@ def test_sorted_persist_elides_per_round_big_side_sort(spark):
 
 
 def test_ngram_jaccard_merge_hint_scoped_to_self_join(spark):
-    """r15: the merge hint guards the static-broadcast hazard only where
-    the checkpointed posting frame feeds a join DIRECTLY (the inverted-
-    index self-join — no exchange below it, so its strategy is fixed at
-    static-planning time). The two size joins sit above exchanges on
-    both sides and are AQE-planned from runtime stats; pinning them to
-    sort-merge cost two corpus-pair-table sorts (measured 1.327 ->
-    0.944 s at sf0.1). Assert: the self-join on `shingle` stays
-    SortMergeJoin, and no Sort-Merge machinery is forced onto the
-    doc-keyed size joins at fixture scale (they plan as broadcast)."""
-    for name in ("q_dedup_ngram_jaccard", "q_dedup_ngram_jaccard_capped"):
+    """The one merge hint (functions/shingles.py overlap_pairs) sits on
+    the posting self-join sides only. The two size joins sit above
+    exchanges on both sides and are AQE-planned from runtime stats;
+    pinning them to sort-merge cost two corpus-pair-table sorts
+    (measured 1.327 -> 0.944 s at sf0.1). Assert: the self-join on
+    `shingle` stays SortMergeJoin, and no Sort-Merge machinery is forced
+    onto the doc-keyed size joins at fixture scale (they plan as
+    broadcast). Jaccard, capped Jaccard and containment all pair through
+    the helper."""
+    for name in ("q_dedup_ngram_jaccard", "q_dedup_ngram_jaccard_capped", "q_dedup_containment"):
         df = contract.queries()[name](spark, SF)
         plan = plans.executed(df)
         smj = plan.count("SortMergeJoin")
@@ -560,3 +560,29 @@ def test_text_family_runs_from_recomputable_lineage(spark, name):
     if name in ("q_bm25_top_terms", "q_hybrid_rrf_search"):
         keys = re.findall(r"BroadcastHashJoin \[([^\]]*)\]", plan)
         assert not [k for k in keys if re.search(r"\b(doc_id|q_doc|nn_doc)#", k)], keys
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["q_dedup_ngram_jaccard", "q_dedup_ngram_jaccard_capped", "q_dedup_containment"],
+)
+def test_dedup_family_runs_from_recomputable_lineage(spark, name):
+    """The posting self-join queries (functions/shingles.py postings /
+    overlap_pairs) read no checkpoint: no `Scan ExistingRDD` in the plan
+    and no RDD block left after a write. In the final adaptive plan the
+    shingle explode runs once (both self-join sides and the set sizes
+    read one exchange) and no broadcast is fed by it without an
+    exchange in between."""
+    from tools.plan_audit import extract_plan_tree, generated_broadcast_findings
+
+    release_session_blocks(spark)
+    df = contract.queries()[name](spark, SF)
+    assert "ExistingRDD" not in plans.executed(df), plans.executed(df)[:1200]
+    df.write.format("noop").mode("overwrite").save()
+    assert release_session_blocks(spark) == 0
+    df.collect()
+    jplan = df._jdf.queryExecution().executedPlan()
+    final = jplan.toString().split("== Initial Plan ==")[0]
+    assert generated_broadcast_findings(extract_plan_tree(jplan)) == [], final[:2000]
+    explodes = re.findall(r"Generate explode\(CASE WHEN \(size\(toks", final)
+    assert len(explodes) == 1, final[:3000]

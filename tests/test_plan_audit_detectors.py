@@ -213,12 +213,16 @@ def test_wide_broadcast_detected_and_bounded_cases_clean(spark):
 
 
 def test_wide_broadcast_allowlist_names_registered_queries():
-    from tools.plan_audit import WIDE_BROADCAST_BOUNDED, WIDE_SHUFFLE_BOUNDED
+    from tools.plan_audit import (
+        GENERATED_BROADCAST_BOUNDED,
+        WIDE_BROADCAST_BOUNDED,
+        WIDE_SHUFFLE_BOUNDED,
+    )
 
     from etl_pipeline_spark.queries.base import REGISTRY, all_specs
 
     all_specs()
-    for table in (WIDE_BROADCAST_BOUNDED, WIDE_SHUFFLE_BOUNDED):
+    for table in (WIDE_BROADCAST_BOUNDED, WIDE_SHUFFLE_BOUNDED, GENERATED_BROADCAST_BOUNDED):
         for name, why in table.items():
             assert name in REGISTRY and why.strip(), name
 
@@ -360,3 +364,30 @@ def test_lazy_forms_expose_real_iterative_plans(spark):
         _flags, n_ex, _n_bc, n_nodes = audit_plan(plan)
         assert n_ex >= 1, (name, plan[:400])
         assert n_nodes > 4, name
+
+
+def test_generated_broadcast_fires_on_unhinted_posting_self_join(spark):
+    """A posting self-join with no exchange between its sides and the
+    explode broadcasts the exploded stream on the scan's (pre-explode)
+    estimate: the detector fires on the final plan. overlap_pairs (one
+    shingle exchange shared by both sides, merge-hinted) stays clean."""
+    from conftest import SF_SMOKE
+
+    from etl_pipeline_spark.functions.shingles import overlap_pairs, postings
+    from tools.plan_audit import extract_plan_tree, generated_broadcast_findings
+
+    sh = postings(spark.read.parquet(f"{SF_SMOKE}/documents.parquet"), 3)
+    a, b = sh.alias("a"), sh.alias("b")
+    naive = a.join(
+        b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc_id") < F.col("b.doc_id"))
+    ).groupBy("a.doc_id", "b.doc_id").count()
+    naive.collect()
+    assert generated_broadcast_findings(
+        extract_plan_tree(naive._jdf.queryExecution().executedPlan())
+    )
+
+    pairs = overlap_pairs(sh, directed=False)
+    pairs.collect()
+    assert generated_broadcast_findings(
+        extract_plan_tree(pairs._jdf.queryExecution().executedPlan())
+    ) == []
