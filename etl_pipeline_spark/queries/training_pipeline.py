@@ -16,21 +16,20 @@ anti-join against the near-dup pair list — COST-BASED source selection
 (see _neardup_pairs): the exact n-gram-Jaccard join below a measured
 compressed-bytes crossover (it is faster there), q_dedup_minhash_lsh's
 sub-quadratic candidate+verify pairs above it (the form that completes
-the sf100 soak); identical output at recall 1.0, oracle-verified in
-both forced modes. Everything else is narrow — the standard shape of
+the sf100 soak); identical output at recall 1.0, oracle-verified on
+both branches. Everything else is narrow — the standard shape of
 a 100 TB corpus build.
 """
 
 from __future__ import annotations
 
 import logging
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from etl_pipeline_spark.catalog import load_tables, scan_parallel
+from etl_pipeline_spark.catalog import load_tables, scan_bytes, scan_parallel
 from etl_pipeline_spark.queries.base import REGISTRY, query
 from etl_pipeline_spark.queries.dedup import q_dedup_minhash_lsh, q_dedup_ngram_jaccard
 from etl_pipeline_spark.queries.text import TOKEN_RE
@@ -53,28 +52,19 @@ def _neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     composed oracle then verifies the pipeline end-to-end through the
     exact path); above it, q_dedup_minhash_lsh's candidate+verify
     pairs (the sub-quadratic form that completes the sf100 soak).
-    ``SPARK_GRAFT_NEARDUP_LSH=1/0`` forces either path. The two emit
-    IDENTICAL (doc_a, doc_b, jaccard) sets whenever LSH candidate
-    recall is 1.0: the minhash query's own exact-SQL oracle pins that
-    at every test SF, and THIS query's oracle (built from the
-    exact-pairs SQL) is verified green in BOTH forced modes, so the
+    The two emit IDENTICAL (doc_a, doc_b, jaccard) sets whenever LSH
+    candidate recall is 1.0: the minhash query's own exact-SQL oracle
+    pins that at every test SF, and THIS query's oracle (built from the
+    exact-pairs SQL) is checked on both branches in the tests, so the
     selection can never change the answer — only the plan."""
-    forced = os.environ.get("SPARK_GRAFT_NEARDUP_LSH")
-    nbytes = None
-    if forced is not None:
-        use_lsh = forced == "1"
-        why = f"forced via SPARK_GRAFT_NEARDUP_LSH={forced}"
-    else:
-        docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-        from etl_pipeline_spark.catalog import scan_bytes
-
-        nbytes = scan_bytes(docs)
-        use_lsh = nbytes is None or nbytes >= NEARDUP_LSH_MIN_BYTES
-        why = (
-            f"scan_bytes={nbytes} vs crossover {NEARDUP_LSH_MIN_BYTES}"
-            if nbytes is not None
-            else "scan_bytes unavailable (defaulting to the scale-safe path)"
-        )
+    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
+    nbytes = scan_bytes(docs)
+    use_lsh = nbytes is None or nbytes >= NEARDUP_LSH_MIN_BYTES
+    why = (
+        f"scan_bytes={nbytes} vs crossover {NEARDUP_LSH_MIN_BYTES}"
+        if nbytes is not None
+        else "scan_bytes unavailable (defaulting to the scale-safe path)"
+    )
     # Emit the selection so an output difference at production scale is
     # ATTRIBUTABLE: above the crossover the kept-document set depends on
     # LSH candidate recall (see the caveat in q_training_data_prep's

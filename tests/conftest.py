@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+from contextlib import contextmanager
 
 import pytest
 
@@ -10,6 +11,25 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 os.environ.setdefault("SPARK_GRAFT_CPUS", "4")
 
 SF_SMOKE = "/root/testdata/sf0.001"
+
+
+@contextmanager
+def session_conf(spark, conf: dict[str, str]):
+    """Set ``conf`` on the shared test session and restore the previous
+    values on exit; a key that was not set is unset again. A blanket
+    ``spark.conf.unset`` would restore Spark's defaults, not session.py's
+    (the 64m broadcast threshold), for every test that runs later."""
+    old = {k: spark.conf.get(k, None) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 @pytest.fixture(scope="session")

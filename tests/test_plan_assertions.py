@@ -12,6 +12,8 @@ import __spark_entry__ as contract
 from etl_pipeline_spark import plans
 from etl_pipeline_spark.session import release_session_blocks
 
+from conftest import session_conf
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -109,40 +111,30 @@ def test_aqe_splits_skewed_join(spark, tmp_path_factory):
         .select("skew_key", "payload")
     )
     big.repartition(16).write.mode("overwrite").parquet(d)
-    old = {
-        k: spark.conf.get(k, None)
-        for k in (
-            "spark.sql.autoBroadcastJoinThreshold",
-            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-            "spark.sql.files.maxPartitionBytes",
-            "spark.sql.files.openCostInBytes",
-        )
+    small_splits = {
+        "spark.sql.files.maxPartitionBytes": "128k",
+        "spark.sql.files.openCostInBytes": "0",
     }
-    try:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", "128k")
-        spark.conf.set("spark.sql.files.openCostInBytes", "0")
+    skew_join = {
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "64k",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "32k",
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
+    }
+    with session_conf(spark, small_splits):
         b = spark.read.parquet(d)
         b.select("skew_key").distinct().withColumn(
             "dim_payload", F.md5("skew_key")
         ).write.mode("overwrite").parquet(ddim)
         dim = spark.read.parquet(ddim)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "64k")
-        spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "32k")
-        spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-        out = b.join(dim, "skew_key").select(
-            F.count(F.lit(1)).alias("n"), F.sum(F.length("payload")).alias("bytes")
-        )
-        n = out.collect()[0]["n"]
-        plan = plans.executed(out)
-        assert n == b.count()
-        assert "skew=true" in plan, "AQE did not split the skewed join:\n" + plan[:1200]
-    finally:
-        for k, v in old.items():
-            if v is not None:
-                spark.conf.set(k, v)
+        with session_conf(spark, skew_join):
+            out = b.join(dim, "skew_key").select(
+                F.count(F.lit(1)).alias("n"), F.sum(F.length("payload")).alias("bytes")
+            )
+            n = out.collect()[0]["n"]
+            plan = plans.executed(out)
+            assert n == b.count()
+            assert "skew=true" in plan, "AQE did not split the skewed join:\n" + plan[:1200]
 
 
 def test_ivf_probe_guard_semi_join_branch(spark, tmp_path_factory):
@@ -450,8 +442,6 @@ def test_sorted_persist_elides_per_round_big_side_sort(spark):
     label side."""
     from pyspark.sql import functions as F
 
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     edges = spark.createDataFrame([(1, 2), (2, 3), (3, 4)], "src long, dst long")
     nodes = (
         edges.select(F.col("src").alias("node"))
@@ -466,28 +456,28 @@ def test_sorted_persist_elides_per_round_big_side_sort(spark):
         .sortWithinPartitions("dst")
         .persist()
     )
-    try:
-        sym.count()
-        labels = nodes.select(F.col("node"), F.col("node").alias("label"))
-        out = (
-            sym.join(labels, F.col("dst") == labels.node)
-            .groupBy(F.col("src").alias("node"))
-            .agg(F.min("label").alias("label"))
-        )
-        out.collect()
-        final = out._jdf.queryExecution().executedPlan().toString()
-        # the top-level (round) plan: everything above the cached
-        # relation's own build plan
-        round_part = final.split("InMemoryRelation")[0]
-        assert "SortMergeJoin" in round_part, round_part[:800]
-        cache_side = round_part.split("SortMergeJoin")[1]
-        # between the join and the cache scan: a Filter is fine, a Sort
-        # means the cached ordering was not picked up
-        upto_cache = cache_side.split("InMemoryTableScan")[0]
-        assert "Sort [" not in upto_cache, round_part[:1200]
-    finally:
-        sym.unpersist()
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    with session_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
+        try:
+            sym.count()
+            labels = nodes.select(F.col("node"), F.col("node").alias("label"))
+            out = (
+                sym.join(labels, F.col("dst") == labels.node)
+                .groupBy(F.col("src").alias("node"))
+                .agg(F.min("label").alias("label"))
+            )
+            out.collect()
+            final = out._jdf.queryExecution().executedPlan().toString()
+            # the top-level (round) plan: everything above the cached
+            # relation's own build plan
+            round_part = final.split("InMemoryRelation")[0]
+            assert "SortMergeJoin" in round_part, round_part[:800]
+            cache_side = round_part.split("SortMergeJoin")[1]
+            # between the join and the cache scan: a Filter is fine, a Sort
+            # means the cached ordering was not picked up
+            upto_cache = cache_side.split("InMemoryTableScan")[0]
+            assert "Sort [" not in upto_cache, round_part[:1200]
+        finally:
+            sym.unpersist()
 
 
 def test_ngram_jaccard_merge_hint_scoped_to_self_join(spark):

@@ -7,7 +7,13 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from conftest import session_conf
 from tools.plan_audit import GLOBAL_WINDOW_BOUNDED, GLOBAL_WINDOW_TWINS, audit_plan
+
+NO_BROADCAST = {
+    "spark.sql.autoBroadcastJoinThreshold": "-1",
+    "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
+}
 
 
 def _plan(df) -> str:
@@ -121,8 +127,7 @@ def test_wide_join_shuffle_detected_on_real_plan(spark):
     #6: both r5 fixes would have fired this detector)."""
     from tools.plan_audit import extract_plan_tree, wide_join_shuffle_findings
 
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    with session_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         a = spark.range(500).select(
             "id", F.array_repeat(F.col("id").cast("string"), 20).alias("payload")
         )
@@ -139,8 +144,6 @@ def test_wide_join_shuffle_detected_on_real_plan(spark):
         )
         tree2 = extract_plan_tree(narrow._jdf.queryExecution().executedPlan())
         assert wide_join_shuffle_findings(tree2) == []
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
 
 
 def test_wide_array_join_key_not_flagged():
@@ -261,9 +264,7 @@ def test_extract_plan_tree_sees_final_adaptive_plan_post_execution(spark):
     materialized (stage-wrapped, AQEShuffleRead-interposed) join."""
     from tools.plan_audit import extract_plan_tree, wide_join_shuffle_findings
 
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    try:
+    with session_conf(spark, NO_BROADCAST):
         a = spark.range(500).select(
             "id", F.array_repeat(F.col("id").cast("string"), 20).alias("payload")
         )
@@ -286,9 +287,6 @@ def test_extract_plan_tree_sees_final_adaptive_plan_post_execution(spark):
         assert any(c.startswith("ShuffleExchange") for c in seen)
         # ... and the detector keeps firing through the final-plan shape
         assert wide_join_shuffle_findings(tree) == ["payload:array"]
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
 
 
 def test_executed_audit_flags_and_errors(spark):
@@ -302,8 +300,6 @@ def test_executed_audit_flags_and_errors(spark):
             self.fn = fn
 
     def wide(s, sf):
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        s.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
         a = s.range(300).select(
             "id", F.array_repeat(F.col("id").cast("string"), 8).alias("payload")
         )
@@ -317,13 +313,10 @@ def test_executed_audit_flags_and_errors(spark):
         raise RuntimeError("synthetic failure")
 
     specs = {"q_wide": _Spec(wide), "q_clean": _Spec(clean), "q_boom": _Spec(boom)}
-    try:
+    with session_conf(spark, NO_BROADCAST):
         rows, fails = executed_audit(
             spark, specs, ["q_wide", "q_clean", "q_boom"], "unused"
         )
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
     by_name = {r[0]: r for r in rows}
     assert "wide-shuffle(payload:array)" in by_name["q_wide"][2]
     assert by_name["q_wide"][1] == "final"

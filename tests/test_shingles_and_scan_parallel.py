@@ -89,29 +89,40 @@ def test_scan_parallel_noop_when_scan_already_parallel(spark):
 def test_neardup_pair_source_is_cost_based(spark, monkeypatch):
     """The training pipeline's near-dup prune picks its pair source by
     compressed corpus bytes: exact inverted-index join below the
-    crossover (the test fixtures), LSH above it; env var forces either.
-    The LSH plan is identifiable by its stage-2 array_intersect verify
-    (the band explode itself is checkpoint-truncated out of the final
-    plan); the exact inverted-index join has no array_intersect."""
+    crossover (the test fixtures), LSH above it. The LSH plan is
+    identifiable by its stage-2 array_intersect verify (the band explode
+    itself is checkpoint-truncated out of the final plan); the exact
+    inverted-index join has no array_intersect."""
     from etl_pipeline_spark.queries import training_pipeline as tp
 
     def plan_of(df):
         return df._jdf.queryExecution().optimizedPlan().toString()
 
-    monkeypatch.delenv("SPARK_GRAFT_NEARDUP_LSH", raising=False)
     auto = plan_of(tp._neardup_pairs(spark, SF))  # tiny fixture -> exact
     assert "array_intersect" not in auto
-    monkeypatch.setenv("SPARK_GRAFT_NEARDUP_LSH", "1")
-    forced_lsh = plan_of(tp._neardup_pairs(spark, SF))
-    assert "array_intersect" in forced_lsh
-    monkeypatch.setenv("SPARK_GRAFT_NEARDUP_LSH", "0")
-    forced_exact = plan_of(tp._neardup_pairs(spark, SF))
-    assert "array_intersect" not in forced_exact
     # above the crossover the auto path flips to LSH
-    monkeypatch.delenv("SPARK_GRAFT_NEARDUP_LSH", raising=False)
     monkeypatch.setattr(tp, "NEARDUP_LSH_MIN_BYTES", 1)
     auto_big = plan_of(tp._neardup_pairs(spark, SF))
     assert "array_intersect" in auto_big
+
+
+def test_training_prep_lsh_branch_matches_oracle(spark, monkeypatch):
+    """q_training_data_prep's LSH pair source, selected here by a 1-byte
+    crossover, gives its exact-pairs oracle's answer. The registry gate
+    sees only the exact branch, which the small fixtures select."""
+    from etl_pipeline_spark.queries import training_pipeline as tp
+    from etl_pipeline_spark.queries.base import all_specs
+    from etl_pipeline_spark.session import release_session_blocks
+    from tools.check_oracle import check_query, open_oracle
+
+    monkeypatch.setattr(tp, "NEARDUP_LSH_MIN_BYTES", 1)
+    con = open_oracle(SF)
+    try:
+        r = check_query(spark, con, all_specs()["q_training_data_prep"], SF)
+    finally:
+        con.close()
+        release_session_blocks(spark)
+    assert r["status"] == "ok", f"{r['status']} {r['detail']}"
 
 
 def test_shingle_scan_split_cap_engages_by_input_size(spark, monkeypatch):

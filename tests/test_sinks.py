@@ -3,6 +3,7 @@ plan), observe-based single-pass audit, DDL idempotency."""
 
 from __future__ import annotations
 
+from conftest import session_conf
 from pyspark.sql import functions as F
 
 from etl_pipeline_spark.sources.sinks import (
@@ -29,16 +30,13 @@ def test_bucketed_join_has_no_exchange(spark):
     # disable broadcast so the planner must choose sort-merge — at real
     # scale both sides are too big to broadcast, which is when bucketing
     # pays off
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    with session_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         joined = spark.table("b_orders").join(spark.table("b_lineitem"), "o_orderkey")
         plan = joined._jdf.queryExecution().executedPlan().toString()
         # bucket co-location: the join must run without any SHUFFLE exchange
         assert "Exchange hashpartitioning" not in plan, plan[:800]
         assert "SortMergeJoin" in plan, plan[:400]
         assert joined.count() == lineitem.count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "64m")
 
 
 def test_write_with_observed_audit_single_pass(spark):
@@ -400,9 +398,7 @@ def test_audit_record_timestamp_is_utc_instant(spark):
 
     from etl_pipeline_spark.sources.sinks import audit_record
 
-    old_tz = spark.conf.get("spark.sql.session.timeZone")
-    try:
-        spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    with session_conf(spark, {"spark.sql.session.timeZone": "America/Los_Angeles"}):
         row = audit_record(spark, "/in/x.csv", 5).collect()[0]
         # collect() returns naive datetimes in the driver's SYSTEM tz
         # (UTC on this host); with the old naive-`now` code under a
@@ -411,8 +407,6 @@ def test_audit_record_timestamp_is_utc_instant(spark):
         got = row.ingestion_time.replace(tzinfo=timezone.utc)
         now = datetime.now(timezone.utc)
         assert abs((now - got).total_seconds()) < 300
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", old_tz)
 
 
 def test_upsert_rejects_null_keys(spark, tmp_path):

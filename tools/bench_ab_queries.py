@@ -1,23 +1,25 @@
 """Targeted interleaved A/B for INDIVIDUAL registry queries — HEAD vs a
-pinned older checkout (r13 judge #2: settle the knn_pq / minhash-lsh
-contended-window drift from BENCH_r12 with same-session alternating
-reps instead of cross-round raw numbers).
+pinned older checkout, with same-host alternating reps instead of
+cross-round raw numbers.
 
 Usage:
     git clone -q . /tmp/oldcode && git -C /tmp/oldcode checkout <commit>
     python tools/bench_ab_queries.py --old /tmp/oldcode \
         --queries q_knn_pq,q_dedup_minhash_lsh [--runs 3] [--out ab.json]
 
-Each rep is a fresh subprocess (own JVM) that warms the tables, times
-each query best-of-2, and brackets itself with the same multi-process
-FNV canary bench.py uses. Reps alternate old,new,old,new,... so any
-load drift hits both sides equally; the verdict compares per-side
-MINIMA (the interleaved-minima protocol the r12 pagerank-drift
-investigation validated: interleaved minima agreed to 0.5% while
-same-side spread was 2.4x on this host class) and reports the medians
-next to them. ``--out`` also writes the verdict with every raw rep to a
-JSON file. Whole-benchmark parent-vs-change runs are perfbench's job
-(``python3 perfbench/run.py --workload analytics``, once per checkout).
+Each rep runs the side's OWN ``tools/measure_query.py --reps 2
+--no-noop`` in a fresh subprocess (own JVM, cwd = that checkout), so
+each side warms the tables and times each query best-of-2 with its own
+code, and the old checkout needs no file from HEAD. Both sides read
+$SPARK_GRAFT_SF_DIR, or measure_query.py's default when it is unset.
+Reps alternate old,new,old,new,... so any load drift hits both sides
+equally; the verdict compares per-side MINIMA (the interleaved-minima
+protocol the r12 pagerank-drift investigation validated: interleaved
+minima agreed to 0.5% while same-side spread was 2.4x on this host
+class) and reports the medians next to them. ``--out`` also writes the
+verdict with every raw rep to a JSON file. Whole-benchmark
+parent-vs-change runs are perfbench's job (``python3 perfbench/run.py
+--workload analytics``, once per checkout).
 """
 
 from __future__ import annotations
@@ -31,62 +33,19 @@ import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-# Runs inside each subprocess with cwd = the side's checkout; imports the
-# SIDE's engine code. Kept self-contained so the old checkout needs no
-# file from HEAD.
-INNER = r"""
-import json, os, sys, time
-sys.path.insert(0, os.getcwd())
-from etl_pipeline_spark.session import get_spark
-from etl_pipeline_spark.catalog import load_tables
-from etl_pipeline_spark.queries.base import all_specs
 
-names = sys.argv[1].split(",")
-sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-spark = get_spark("ab_queries")
-for df in load_tables(spark, sf).values():
-    df.count()
-specs = all_specs()
-
-
-def mt_canary():
-    import subprocess as sp
-    code = ("h=0\n"
-            "for i in range(10_000_000):\n"
-            "    h=((h^i)*1099511628211)&0xFFFFFFFFFFFFFFFF\n")
-    t0 = time.perf_counter()
-    procs = [sp.Popen([sys.executable, "-c", code]) for _ in range(8)]
-    for p in procs:
-        p.wait()
-    return round(time.perf_counter() - t0, 3)
-
-
-c0 = mt_canary()
-out = {}
-for n in names:
-    best = float("inf")
-    for _ in range(2):
-        t0 = time.perf_counter()
-        specs[n].fn(spark, sf).count()
-        best = min(best, time.perf_counter() - t0)
-    out[n] = round(best, 3)
-c1 = mt_canary()
-print(json.dumps({"queries": out, "mt_begin": c0, "mt_end": c1,
-                  "mt_canary_sec": min(c0, c1)}))
-"""
-
-
-def run_once(cwd: str, queries: str) -> dict:
+def run_once(cwd: str, names: list[str]) -> dict[str, float]:
+    """Best-of-2 seconds per query from one run of ``cwd``'s own
+    measure_query.py."""
     out = subprocess.run(
-        [sys.executable, "-c", INNER, queries],
+        [sys.executable, "tools/measure_query.py", *names, "--reps", "2", "--no-noop"],
         cwd=cwd,
         capture_output=True,
         text=True,
-        env={**os.environ, "SPARK_GRAFT_SF_DIR": os.environ.get(
-            "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")},
         check=True,
     )
-    return json.loads(out.stdout.strip().splitlines()[-1])
+    rows = [json.loads(line) for line in out.stdout.splitlines() if line.startswith("{")]
+    return {r["name"]: r["min"] for r in rows}
 
 
 def main() -> None:
@@ -97,32 +56,27 @@ def main() -> None:
     ap.add_argument("--out", default=None, help="also write the verdict JSON here")
     args = ap.parse_args()
 
-    results: dict[str, list[dict]] = {"old": [], "new": []}
+    names = args.queries.split(",")
+    results: dict[str, list[dict[str, float]]] = {"old": [], "new": []}
     for i in range(args.runs):
         for side, cwd in (("old", args.old), ("new", REPO)):
-            r = run_once(cwd, args.queries)
+            r = run_once(cwd, names)
             results[side].append(r)
-            print(f"[{i + 1}/{args.runs}] {side}: {r['queries']} "
-                  f"canary={r['mt_canary_sec']}", flush=True)
+            print(f"[{i + 1}/{args.runs}] {side}: {r}", flush=True)
 
-    names = args.queries.split(",")
     verdict: dict = {"runs_per_side": args.runs, "per_query": {}}
     for n in names:
-        mins = {s: min(r["queries"][n] for r in results[s]) for s in results}
-        meds = {s: statistics.median(r["queries"][n] for r in results[s]) for s in results}
-        ratio = round(mins["new"] / max(mins["old"], 1e-9), 3)
+        mins = {s: min(r[n] for r in results[s]) for s in results}
+        meds = {s: statistics.median(r[n] for r in results[s]) for s in results}
         verdict["per_query"][n] = {
             "old_min": mins["old"],
             "new_min": mins["new"],
-            "new_over_old": ratio,
+            "new_over_old": round(mins["new"] / max(mins["old"], 1e-9), 3),
             "old_median": meds["old"],
             "new_median": meds["new"],
-            "old_all": [r["queries"][n] for r in results["old"]],
-            "new_all": [r["queries"][n] for r in results["new"]],
+            "old_all": [r[n] for r in results["old"]],
+            "new_all": [r[n] for r in results["new"]],
         }
-    verdict["canaries"] = {
-        s: [r["mt_canary_sec"] for r in results[s]] for s in results
-    }
     print(json.dumps({"ab_verdict": verdict}))
     if args.out:
         with open(args.out, "w") as f:

@@ -1,16 +1,17 @@
-"""Focused per-query measurement for the optimization rounds.
+"""Focused per-query measurement in one Spark session.
 
-Runs the named queries in one Spark session (after the same full-table
-warmup bench.py uses), times N reps of the bench action (count) plus one
-noop-sink rep (guide §1.4 — full-column materialization, no driver
-transfer), and optionally writes .explain("formatted") to a file.
+Warms the tables and times N count() reps per query with bench.py's own
+``warm_tables`` / ``time_queries``, then adds one noop-sink rep (guide
+§1.4 — full-column materialization, no driver transfer) and optionally
+writes .explain("formatted") to a file. To compare two checkouts, run
+``tools/bench_ab_queries.py``, which runs this tool in each of them.
 
 Usage:
     python tools/measure_query.py q_pagerank q_connected_components \
-        [--reps 3] [--plans-dir plans/r14] [--suffix before]
+        [--reps 3] [--no-noop] [--plans-dir plans/r14] [--suffix before]
 
 Prints one JSON line per query:
-    {"name": ..., "reps": [..], "min": .., "noop": .., "mt_canary": ..}
+    {"name": ..., "reps": [..], "min": .., "noop": ..}
 """
 
 from __future__ import annotations
@@ -35,26 +36,18 @@ def main() -> None:
     ap.add_argument("--no-noop", action="store_true")
     args = ap.parse_args()
 
-    from bench import _mt_canary_sec
-    from etl_pipeline_spark.catalog import load_tables
+    from bench import time_queries, warm_tables
     from etl_pipeline_spark.queries.base import all_specs
     from etl_pipeline_spark.session import get_spark, release_session_blocks
 
     spark = get_spark("measure")
     specs = all_specs()
-    for df in load_tables(spark, args.sf_dir).values():
-        df.count()
+    warm_tables(spark, args.sf_dir)
 
-    canary0 = round(_mt_canary_sec(), 3)
     for name in args.names:
         fn = specs[name].fn
         spark.sparkContext.setJobDescription(f"measure:{name}")
-        reps = []
-        for _ in range(args.reps):
-            t0 = time.perf_counter()
-            fn(spark, args.sf_dir).count()
-            reps.append(round(time.perf_counter() - t0, 3))
-            release_session_blocks(spark)
+        reps = time_queries(spark, args.sf_dir, [name], args.reps)[name]
         noop = None
         if not args.no_noop:
             t0 = time.perf_counter()
@@ -69,12 +62,7 @@ def main() -> None:
                     spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
                 ))
         spark.sparkContext.setJobDescription(None)
-        canary1 = round(_mt_canary_sec(), 3)
-        print(json.dumps({
-            "name": name, "reps": reps, "min": min(reps), "noop": noop,
-            "mt_canary_begin": canary0, "mt_canary_end": canary1,
-        }), flush=True)
-        canary0 = canary1
+        print(json.dumps({"name": name, "reps": reps, "min": min(reps), "noop": noop}), flush=True)
 
 
 if __name__ == "__main__":

@@ -1437,12 +1437,6 @@ def main_sf100() -> None:
     import os
 
     os.environ.setdefault("SPARK_GRAFT_WIDE_CKPT_SER", "1")
-    # Sub-quadratic near-dup pairs for the training-prep leg (r7): the
-    # exact inverted-index join's shingle-agg stage is the measured
-    # per-JVM memory floor at sf100; the LSH candidate+verify path emits
-    # the identical pair set at recall 1.0 (oracle-pinned at the test
-    # SFs in both modes) with a memory profile that scales.
-    os.environ.setdefault("SPARK_GRAFT_NEARDUP_LSH", "1")
     spark = get_spark("scale_soak_sf100")
     spark.conf.set("spark.sql.shuffle.partitions", "256")
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(16 * 1024 * 1024))
