@@ -77,7 +77,12 @@ def warm_tables(spark, sf_dir: str) -> None:
 
 
 def time_queries(spark, sf_dir: str, names, reps: int) -> dict[str, list[float]]:
-    """Wall seconds of each of ``reps`` count() runs per query, in order.
+    """Wall seconds of each of ``reps`` count() runs per query.
+
+    Reps run rep-major: every query's rep 1, then every query's rep 2.
+    The JVM's JIT and codegen warm-up then falls in the first round, and
+    a best-of-reps figure leaves it out for every query; in query-major
+    order both reps of the first queries ran before the JVM was warm.
 
     count() forces full execution without driver-side row transfer.
     After every rep the session's RDD blocks are released, so no rep
@@ -87,10 +92,9 @@ def time_queries(spark, sf_dir: str, names, reps: int) -> dict[str, list[float]]
     from etl_pipeline_spark.session import release_session_blocks
 
     specs = all_specs()
-    timings: dict[str, list[float]] = {}
-    for name in names:
-        timings[name] = []
-        for _ in range(reps):
+    timings: dict[str, list[float]] = {name: [] for name in names}
+    for _ in range(reps):
+        for name in names:
             t0 = time.perf_counter()
             specs[name].fn(spark, sf_dir).count()
             timings[name].append(round(time.perf_counter() - t0, 3))

@@ -29,6 +29,20 @@ from etl_pipeline_spark.catalog import load_tables
 
 MAX_ITER = 20
 
+# The convergence certificate is a BIGINT SUM of labels, exact only while
+# it cannot leave the signed 64-bit range.
+SUM_CERTIFICATE_LIMIT = 2**63
+
+
+def sum_certificate_fits(n_nodes: int, min_node: int | None, max_node: int | None) -> bool:
+    """True when connected_components' label-sum certificate stays below
+    2^63 in magnitude: every label is a node id, so every partial sum of
+    a round is bounded by n_nodes * max|node id|."""
+    if not n_nodes:
+        return True
+    return n_nodes * max(abs(min_node), abs(max_node)) < SUM_CERTIFICATE_LIMIT
+
+
 # Sentinel for "round-1 seed not yet harvested" in connected_components'
 # convergence loop — None is a legitimate sum on an empty node set, so
 # it cannot double as the marker.
@@ -107,6 +121,12 @@ def connected_components(
     labels' sum. All current callers derive ``nodes`` from the edge
     endpoints; a violation still terminates correctly (the seed is
     self-consistent), it just weakens that identity.
+
+    Headroom: the certificate is a BIGINT SUM, exact while
+    n_nodes * max|node id| < 2^63 (:func:`sum_certificate_fits`, asserted
+    on round 1's observation). Under ANSI mode, the session default, a
+    SUM that overflows raises ARITHMETIC_OVERFLOW; with ANSI off it
+    would wrap and could certify a false fixpoint.
 
     Min-label propagation needs O(diameter) rounds; if the loop exhausts
     ``max_iter`` with labels still changing (a component deeper than
@@ -208,7 +228,12 @@ def connected_components(
             obs = Observation()
             metrics = [F.sum("label").alias("label_sum")]
             if rounds_done == 0 and not obs_list:
-                metrics.append(F.sum("node").alias("node_sum"))
+                metrics += [
+                    F.sum("node").alias("node_sum"),
+                    F.count("node").alias("n_nodes"),
+                    F.min("node").alias("min_node"),
+                    F.max("node").alias("max_node"),
+                ]
             cur = cc_round(sym, cur, round_splits=round_splits).observe(obs, *metrics)
             obs_list.append(obs)
         labels = cur.localCheckpoint(eager=True)
@@ -217,6 +242,9 @@ def connected_components(
             row = obs.get
             if prev_sum is _SEED_PENDING:
                 prev_sum = row["node_sum"]
+                assert sum_certificate_fits(
+                    row["n_nodes"], row["min_node"], row["max_node"]
+                ), f"label-sum certificate may overflow BIGINT: {row}"
             cur_sum = row["label_sum"]
             if cur_sum == prev_sum:
                 converged = True

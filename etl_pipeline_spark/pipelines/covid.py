@@ -102,6 +102,30 @@ def run_covid_pipeline(
     raw, corrupt, raw_cached = read_csv_with_schema(
         spark, input_csv, RAW_SCHEMA, return_raw=True
     )
+    try:
+        return load_covid(
+            spark, raw, corrupt, input_csv, main_table, audit_table, quarantine_table
+        )
+    finally:
+        # the permissive-read cache pins one full input copy per call
+        # (r9 review: leaked in ingest loops)
+        raw_cached.unpersist()
+
+
+def load_covid(
+    spark: SparkSession,
+    raw: DataFrame,
+    corrupt: DataFrame,
+    input_csv: str | list[str],
+    main_table: str,
+    audit_table: str,
+    quarantine_table: str,
+) -> CovidPipelineResult:
+    """The load body shared by :func:`run_covid_pipeline` and
+    ``run_validated_ingest``: transform ``raw`` (the parsed rows of the
+    PERMISSIVE ``RAW_SCHEMA`` read), overwrite the main and quarantine tables,
+    count, and append the audit row. Releases the caches it makes; the
+    read's cache stays with the caller."""
     audit_path = input_csv if isinstance(input_csv, str) else ",".join(input_csv)
     clean, quarantine, flagged = transform_covid(raw, return_flagged=True)
     clean = clean.cache()
@@ -113,12 +137,8 @@ def run_covid_pipeline(
         n_corrupt = corrupt.count()
         append_table(audit_record(spark, audit_path, n_out), audit_table)
     finally:
-        # release EVERYTHING this invocation pinned (r9 review: the
-        # permissive-read cache and the flagged cache each leaked one
-        # full input copy per call in ingest loops)
         clean.unpersist()
         flagged.unpersist()
-        raw_cached.unpersist()
     return CovidPipelineResult(
         input_rows=n_out + n_quar + n_corrupt,
         output_rows=n_out,

@@ -5,9 +5,10 @@ pipeline) collapsed into one driver function with one Spark session.
 The reference spread this over five Airflow tasks passing XCom dicts
 (dataflow.py:418-486) and downloaded every file into a single worker to
 validate it (dataflow.py:184). Here validation is a distributed file gate
-(one Spark job for the whole file set), the parameter contract is a plain
-dataclass (Q7 <- prepare_dataflow_parameters, dataflow.py:387-416), and
-the "launched pipeline" is a function call sharing the session/lineage.
+(one aggregate job for the whole file set), the parameter contract is a
+plain dataclass (Q7 <- prepare_dataflow_parameters, dataflow.py:387-416),
+and the "launched pipeline" is a function call sharing the session and
+the cached read: the ingest gates the same parsed batch it loads.
 """
 
 from __future__ import annotations
@@ -17,8 +18,15 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
 
-from etl_pipeline_spark.pipelines.covid import CovidPipelineResult, run_covid_pipeline
-from etl_pipeline_spark.quality.checks import FileGateError, file_gate
+from etl_pipeline_spark.pipelines.covid import RAW_SCHEMA, CovidPipelineResult, load_covid
+from etl_pipeline_spark.quality.checks import (
+    FileGateError,
+    FileValidationSummary,
+    file_gate,
+    file_verdict,
+    per_file_counts,
+)
+from etl_pipeline_spark.sources.readers import read_csv_with_schema
 from etl_pipeline_spark.sources.sinks import create_database_if_not_exists
 
 
@@ -44,21 +52,30 @@ def validate_and_prepare(
     glob (the batch stand-in for the arrival sensor), run the distributed
     file gate, assemble the parameter contract. Raises FileGateError when
     the gate fails — the reference's fail-the-DAG behavior."""
-    paths = sorted(globlib.glob(input_glob))
-    if not paths:
-        raise FileGateError(f"no files match {input_glob}")
+    paths = _list_inputs(input_glob)
     summary = file_gate(
         spark, paths, fmt=fmt, min_records=min_records, check_metadata=check_metadata
     )
+    _raise_on_hard_errors(summary)
+    return IngestParameters(
+        input_paths=paths, expected_record_count=summary.total_records
+    )
+
+
+def _list_inputs(input_glob: str) -> list[str]:
+    paths = sorted(globlib.glob(input_glob))
+    if not paths:
+        raise FileGateError(f"no files match {input_glob}")
+    return paths
+
+
+def _raise_on_hard_errors(summary: FileValidationSummary) -> None:
     # gate on HARD errors only: metadata "warning: ..." entries are
     # documented as advisory and must never fail a healthy load (r9
     # review: one 101 MB input aborted the whole ingest)
     hard = [e for e in summary.errors if not e.startswith("warning: ")]
     if not summary.all_valid or hard:
         raise FileGateError(f"validation failed: {hard or summary.errors}")
-    return IngestParameters(
-        input_paths=paths, expected_record_count=summary.total_records
-    )
 
 
 def archive_to_processed(
@@ -102,22 +119,39 @@ def run_validated_ingest(
     run pipeline -> reconcile counts against the contract (Q7) ->
     optionally archive inputs to processed/ (S11, batch path). Archiving
     runs strictly AFTER reconciliation so a failed load leaves inputs in
-    place for the retry."""
-    params = validate_and_prepare(spark, input_glob, fmt="csv", min_records=min_records)
-    create_database_if_not_exists(spark, database)
-    result = run_covid_pipeline(
-        spark,
-        params.input_paths,
-        main_table=f"{database}.covid_clean",
-        audit_table=f"{database}.covid_audit_log",
-        quarantine_table=f"{database}.covid_quarantine",
+    place for the retry.
+
+    The batch is parsed once. The PERMISSIVE read is cached with each
+    row's source path; the gate's per-file counts are one aggregate over
+    that cache (the CSV gate rule: every row counts, a file with none
+    fails), which also fills it, and the load then writes from the same
+    cache. A failed gate raises before the database or any table is
+    touched, and the read's cache is released on every exit."""
+    paths = _list_inputs(input_glob)
+    raw, corrupt, raw_cached = read_csv_with_schema(
+        spark, paths, RAW_SCHEMA, return_raw=True
     )
+    try:
+        summary = file_verdict(paths, per_file_counts(raw_cached), min_records)
+        _raise_on_hard_errors(summary)
+        create_database_if_not_exists(spark, database)
+        result = load_covid(
+            spark,
+            raw,
+            corrupt,
+            paths,
+            main_table=f"{database}.covid_clean",
+            audit_table=f"{database}.covid_audit_log",
+            quarantine_table=f"{database}.covid_quarantine",
+        )
+    finally:
+        raw_cached.unpersist()
     # reconciliation: pipeline accounting must explain every promised row
-    if result.input_rows != params.expected_record_count:
+    if result.input_rows != summary.total_records:
         raise FileGateError(
             f"count reconciliation failed: gate promised "
-            f"{params.expected_record_count}, pipeline saw {result.input_rows}"
+            f"{summary.total_records}, pipeline saw {result.input_rows}"
         )
     if archive:
-        archive_to_processed(params.input_paths)
+        archive_to_processed(paths)
     return result

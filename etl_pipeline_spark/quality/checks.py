@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import datetime as _dt
 import operator
+import re
 from dataclasses import dataclass, field
 from functools import reduce
 
@@ -21,6 +22,7 @@ from etl_pipeline_spark.functions.cleaning import (
     non_empty,
     parse_double_or_null,
 )
+from etl_pipeline_spark.sources.readers import CORRUPT_COL, SOURCE_COL
 
 
 class MissingColumnsError(ValueError):
@@ -105,20 +107,20 @@ class FileValidationSummary:
 LARGE_FILE_MB = 100.0
 OLD_FILE_DAYS = 7
 
-# per_file dicts above this cardinality stay empty: the verdict math is
-# distributed, so the driver only ever holds error rows + one summary row
+# per_file dicts above this cardinality stay empty, so a summary over a
+# huge file set stays small
 PER_FILE_COLLECT_CAP = 10_000
-# hard errors collected to the driver are capped too (a gate over a
-# million empty files should report "a lot", not OOM the driver)
+# the hard errors a summary lists are capped too (a gate over a million
+# empty files should report "a lot", not a million lines)
 ERROR_COLLECT_CAP = 1_000
 
 
-def _strip_scheme(col: Column) -> Column:
+def _norm_path(path: str) -> str:
     """Normalize a file URI to a bare absolute path so Spark's
     ``file:/...`` listings compare equal to caller-supplied ``/...``
     paths. Basename comparison is NOT enough: a/data.json and
     b/data.json must stay distinct (empty-file masking otherwise)."""
-    return F.regexp_replace(F.regexp_replace(col, r"^[a-zA-Z][a-zA-Z0-9+.-]*:", ""), r"^/+", "/")
+    return re.sub(r"^/+", "/", re.sub(r"^[a-zA-Z][a-zA-Z0-9+.-]*:", "", path))
 
 
 def probe_file_metadata(spark: SparkSession, paths: list[str]) -> DataFrame:
@@ -150,38 +152,28 @@ def file_metadata_checks(
     """Threshold probes over file metadata (S10 <- dataflow.py:169-180):
     empty files are hard errors; files larger than ``max_size_mb`` or older
     than ``max_age_days`` produce ``warning:``-prefixed entries — same
-    keep-going semantics as the reference's ``logging.warning``. The checks
-    aggregate executor-side; only the flagged rows reach the driver."""
+    keep-going semantics as the reference's ``logging.warning``. One
+    listing-only job; each finding list is capped at ``ERROR_COLLECT_CAP``."""
     now = now or _dt.datetime.now(_dt.timezone.utc)
-    meta = probe_file_metadata(spark, paths).withColumn(
-        "norm_path", _strip_scheme(F.col("path"))
-    )
     age_days = (F.lit(now) - F.col("mtime")).cast("long") / F.lit(86400.0)
-    flagged = (
-        meta.select("path", "size_mb", "size_bytes", age_days.alias("age_days"))
-        .filter((F.col("size_mb") > max_size_mb) | (F.col("age_days") > max_age_days))
-        .limit(ERROR_COLLECT_CAP)
+    listing = (
+        probe_file_metadata(spark, paths)
+        .select("path", "size_mb", age_days.alias("age_days"))
         .collect()
     )
     # The binaryFile source omits 0-byte files from its listing, so "empty"
     # is detected as input paths absent from the probe (dataflow.py:170-171
     # raises on 0 bytes; here it's a hard error entry). The comparison is on
-    # scheme-normalized FULL paths via a distributed anti-join — basename
-    # matching would let any same-named non-empty file mask an empty one,
-    # and collecting the whole listing would put every path on the driver.
-    paths_df = spark.createDataFrame(
-        [(p,) for p in paths], "path string"
-    ).withColumn("norm_path", _strip_scheme(F.col("path")))
-    missing = (
-        paths_df.join(meta.select("norm_path"), "norm_path", "left_anti")
-        .select("path")
-        .limit(ERROR_COLLECT_CAP)
-        .collect()
-    )
-    findings: list[str] = []
-    for r in missing:
-        findings.append(f"{r['path']}: empty file (0 bytes)")
-    for r in flagged:
+    # scheme-normalized FULL paths — basename matching would let any
+    # same-named non-empty file mask an empty one. The listing holds one
+    # row per file, as do ``paths`` and Spark's driver-side file index.
+    listed = {_norm_path(r["path"]) for r in listing}
+    missing = [p for p in paths if _norm_path(p) not in listed]
+    flagged = [
+        r for r in listing if r["size_mb"] > max_size_mb or r["age_days"] > max_age_days
+    ]
+    findings = [f"{p}: empty file (0 bytes)" for p in missing[:ERROR_COLLECT_CAP]]
+    for r in flagged[:ERROR_COLLECT_CAP]:
         if r["size_mb"] > max_size_mb:
             findings.append(f"warning: {r['path']}: large file {r['size_mb']:.2f} MB")
         if r["age_days"] > max_age_days:
@@ -211,9 +203,18 @@ def file_gate(
     check_metadata: bool = False,
 ) -> FileValidationSummary:
     """File-set validation gate (Q1 <- check_input_files, dataflow.py:62-134):
-    count records per file distributed (input_file_name groupBy — one Spark
-    job for the whole file set, vs the reference's sequential downloads),
-    fail when any file is empty or the total is below ``min_records``.
+    count records per file distributed (a groupBy on the source path —
+    vs the reference's sequential downloads), fail when any file is empty
+    or the total is below ``min_records``. The per-file counts are one
+    aggregate job, and :func:`file_verdict` judges its one-row-per-file
+    result on the driver; nothing is checkpointed.
+
+    This is the standalone gate: it reads the files only to count them.
+    A pipeline that loads what it gates should not read twice —
+    ``run_validated_ingest`` reads its batch once PERMISSIVE-ly, with the
+    source path projected before the cache (``split_quarantine``), and
+    passes ``per_file_counts`` of that cached frame to the same
+    :func:`file_verdict`; counting fills the cache the writes reuse.
 
     ``fmt=None`` routes each file by extension (Q2 <- dataflow.py:189-199),
     handling mixed-format directories by running one gate per format group
@@ -249,20 +250,15 @@ def file_gate(
         df = spark.read.text(paths).filter(F.length(F.trim(F.col("value"))) > 0)
     else:
         raise FileGateError(f"unsupported format: {fmt}")
-    # Distributed verdict: per-file counts stay a DataFrame; the driver
-    # receives ONE summary row plus at most ERROR_COLLECT_CAP error rows.
-    # Input paths join the counts on scheme-normalized FULL paths (never
-    # basenames — two dirs may share filenames), left outer so a file the
-    # reader produced zero records for surfaces as cnt NULL.
     # corrupt/unparseable rows must not count as records (r9 review: a
     # truncated JSON file parsed to one _corrupt_record-only row and
     # PASSED the gate). Validity derives from the PAYLOAD columns (any
     # non-null field), never from _corrupt_record: referencing only the
-    # corrupt column on a raw read is refused by Spark, and the cache
-    # workaround breaks input_file_name() (empty on InMemoryRelation) —
-    # a corrupt row has every payload field null, so the tests agree.
-    payload = [c for c in df.columns if c != "_corrupt_record"]
-    if "_corrupt_record" in df.columns:
+    # corrupt column on a raw read is refused by Spark — a corrupt row
+    # has every payload field null, so the tests agree.
+    payload = [c for c in df.columns if c != CORRUPT_COL]
+    valid_row = None
+    if CORRUPT_COL in df.columns:
         # "any non-null payload field" must be an OR over every column:
         # isNotNull never returns NULL, so a coalesce() chain would collapse
         # to the FIRST column's test alone and reject healthy rows whose
@@ -272,46 +268,48 @@ def file_gate(
             if payload
             else F.lit(False)
         )
-    else:
-        valid_row = F.lit(True)
-    # nullif(0): a file whose rows are ALL corrupt must look exactly like
-    # a no-records file to the NULL-keyed validity logic below
-    counts_df = df.groupBy(
-        _strip_scheme(F.input_file_name()).alias("norm_path")
-    ).agg(F.nullif(F.sum(valid_row.cast("long")), F.lit(0)).alias("cnt"))
-    paths_df = spark.createDataFrame(
-        [(p,) for p in paths], "path string"
-    ).withColumn("norm_path", _strip_scheme(F.col("path")))
-    joined = paths_df.join(counts_df, "norm_path", "left").localCheckpoint(eager=True)
-    totals = joined.agg(
-        F.coalesce(F.sum("cnt"), F.lit(0)).alias("total_records"),
-        F.count(F.lit(1)).alias("total_files"),
-        F.count("cnt").alias("valid_files"),
-    ).collect()[0]
-    errors = [
-        f"{r['path']}: no records"
-        for r in joined.filter(F.col("cnt").isNull())
-        .select("path")
-        .limit(ERROR_COLLECT_CAP)
-        .collect()
-    ]
-    per_file: dict[str, int] = {}
-    if len(paths) <= PER_FILE_COLLECT_CAP:
-        per_file = {
-            r["path"]: r["cnt"]
-            for r in joined.filter(F.col("cnt").isNotNull()).collect()
-        }
+    df = df.select("*", F.input_file_name().alias(SOURCE_COL))
+    summary = file_verdict(paths, per_file_counts(df, valid_row), min_records)
+    if check_metadata:
+        summary.errors.extend(file_metadata_checks(spark, paths))
+    return summary
+
+
+def per_file_counts(df: DataFrame, valid_row: Column | None = None) -> DataFrame:
+    """(source, cnt): records per source file of a frame that carries
+    ``SOURCE_COL`` (``sources.readers.split_quarantine`` projects it
+    before its cache). ``valid_row`` says which rows count; by default
+    every row does. A file with rows but no valid one gets cnt NULL
+    (nullif 0), exactly like a file the reader produced no rows for."""
+    n = F.count(F.lit(1)) if valid_row is None else F.sum(valid_row.cast("long"))
+    return df.groupBy(F.col(SOURCE_COL).alias("source")).agg(
+        F.nullif(n, F.lit(0)).alias("cnt")
+    )
+
+
+def file_verdict(
+    paths: list[str], counts: DataFrame, min_records: int = 1
+) -> FileValidationSummary:
+    """The gate's verdict: per-file counts (:func:`per_file_counts`) ->
+    :class:`FileValidationSummary`. The counts are one aggregate job
+    whose result has one row per file that has records; input paths
+    match it on scheme-normalized FULL paths (never basenames — two dirs
+    may share filenames), so a path with no row has no records. Nothing
+    is checkpointed or cached."""
+    got = {_norm_path(r["source"]): r["cnt"] for r in counts.collect()}
+    cnt = {p: got.get(_norm_path(p)) for p in paths}
+    empty = [p for p in paths if cnt[p] is None]
     summary = FileValidationSummary(
-        total_files=int(totals["total_files"]),
-        valid_files=int(totals["valid_files"]),
-        total_records=int(totals["total_records"]),
-        per_file=per_file,
-        errors=errors,
+        total_files=len(paths),
+        valid_files=len(paths) - len(empty),
+        total_records=sum(cnt[p] or 0 for p in paths),
+        per_file={p: c for p, c in cnt.items() if c is not None}
+        if len(paths) <= PER_FILE_COLLECT_CAP
+        else {},
+        errors=[f"{p}: no records" for p in empty[:ERROR_COLLECT_CAP]],
     )
     if summary.total_records < min_records:
         summary.errors.append(
             f"total records {summary.total_records} < {min_records}"
         )
-    if check_metadata:
-        summary.errors.extend(file_metadata_checks(spark, paths))
     return summary

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from etl_pipeline_spark.catalog import load_tables
 from etl_pipeline_spark.queries.base import query
+from etl_pipeline_spark.session import local_frame
 
 
 def _r2(c):
@@ -534,8 +535,9 @@ def q_join_range_value_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle of the fact side.
     """
     e = load_tables(spark, sf_dir, ("events",))["events"]
-    buckets = spark.createDataFrame(
-        [("low", 0.0, 25.0), ("mid", 25.0, 75.0), ("high", 75.0, 1e18)],
+    buckets = local_frame(
+        spark,
+        {"bucket": ["low", "mid", "high"], "lo": [0.0, 25.0, 75.0], "hi": [25.0, 75.0, 1e18]},
         "bucket string, lo double, hi double",
     )
     return (

@@ -17,6 +17,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 CORRUPT_COL = "_corrupt_record"
+# each row's source file (input_file_name), projected before the cache
+SOURCE_COL = "_source_path"
 
 
 def _with_corrupt_field(schema: T.StructType) -> T.StructType:
@@ -33,15 +35,24 @@ def split_quarantine(df: DataFrame, return_raw: bool = False):
     Spark requires caching the raw frame before filtering on the corrupt
     column (it is populated at parse time).
 
+    Before the cache, the raw frame gains ``SOURCE_COL``: the path of
+    each row's source file. It must be projected from the file scan,
+    because ``input_file_name()`` reads empty on the cached
+    ``InMemoryRelation``. It lets one read serve both the file gate and
+    the load: ``quality.checks.per_file_counts`` counts rows per file
+    from the cached frame, and that aggregate also fills the cache the
+    writes then reuse (``run_validated_ingest``). The clean and
+    quarantine frames drop it, so their columns are the read's own.
+
     Cache ownership (r9 review): the load-bearing cache() pins one copy
     of the raw input per call, which accumulates across a loop over many
     files. Callers that loop should pass ``return_raw=True`` to receive
     (clean, quarantine, raw) and ``raw.unpersist()`` once both branches
     are written; the two-element default stays for one-shot reads.
     """
-    df = df.cache()
-    bad = df.filter(F.col(CORRUPT_COL).isNotNull())
-    good = df.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
+    df = df.select("*", F.input_file_name().alias(SOURCE_COL)).cache()
+    bad = df.filter(F.col(CORRUPT_COL).isNotNull()).drop(SOURCE_COL)
+    good = df.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL, SOURCE_COL)
     if return_raw:
         return good, bad, df
     return good, bad

@@ -15,6 +15,8 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_pipeline_spark.session import local_frame
+
 AUDIT_SCHEMA = (
     "file_name string, ingestion_time timestamp, record_count long, "
     "input_path string, pipeline_status string, processed_timestamp timestamp"
@@ -49,22 +51,27 @@ def audit_record(
     status: str = "completed",
 ) -> DataFrame:
     """One-row audit entry (Q5 <- dataflow_transform.py:91-106): basename,
-    ingestion time, the load's record count, full input path, status."""
-    # tz-AWARE: PySpark converts aware datetimes to the correct instant;
-    # a naive datetime is interpreted in the SESSION timezone, shifting
+    ingestion time, the load's record count, full input path, status.
+
+    Built from Arrow (``session.local_frame``): every batch ingest and
+    every streaming micro-batch writes one, and a frame built from a
+    Python list would start Python worker tasks each time for one row."""
+    # tz-AWARE: the aware datetime is converted to its true instant; a
+    # naive datetime is interpreted in the SESSION timezone, shifting
     # audit times by the UTC offset on non-UTC clusters (r9 review)
     now = datetime.now(timezone.utc)
-    row = [
-        (
-            os.path.basename(input_path),
-            now,
-            record_count,
-            input_path,
-            status,
-            now,
-        )
-    ]
-    return spark.createDataFrame(row, AUDIT_SCHEMA)
+    return local_frame(
+        spark,
+        {
+            "file_name": [os.path.basename(input_path)],
+            "ingestion_time": [now],
+            "record_count": [record_count],
+            "input_path": [input_path],
+            "pipeline_status": [status],
+            "processed_timestamp": [now],
+        },
+        AUDIT_SCHEMA,
+    )
 
 
 def write_with_audit(

@@ -40,6 +40,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from etl_pipeline_spark.session import local_frame
 
 
 def _latest_marker(dim_dir: str) -> tuple[int | None, int | None, str | None]:
@@ -75,7 +78,8 @@ def _read_latest(spark: SparkSession, dim_dir: str, schema: str) -> DataFrame:
     version = _latest_version(dim_dir)
     if version is not None:
         return spark.read.parquet(os.path.join(dim_dir, f"v={version}"))
-    return spark.createDataFrame([], schema)
+    names = T.StructType.fromDDL(schema).fieldNames()
+    return local_frame(spark, {n: [] for n in names}, schema)
 
 
 def _publish(

@@ -254,3 +254,22 @@ def test_wcc_registry_row_on_fixture(spark):
     assert r["is_fixpoint"]
     # one component labeled by its minimum member: checksum = 200 * min
     assert r["label_checksum"] % r["n_nodes"] == 0
+
+
+def test_wcc_sum_certificate_headroom_bound():
+    """connected_components certifies its fixpoint with a BIGINT label
+    SUM. The documented bound is n_nodes * max|node id| < 2^63; this pins
+    it at its edge. (Under ANSI mode an overflowing SUM raises rather
+    than wraps, so the bound, not a silent wrap, is what is checked.)"""
+    from etl_pipeline_spark.operators.cluster import (
+        SUM_CERTIFICATE_LIMIT,
+        sum_certificate_fits,
+    )
+
+    assert SUM_CERTIFICATE_LIMIT == 2**63
+    assert sum_certificate_fits(2, 0, 2**62 - 1)
+    assert not sum_certificate_fits(2, 0, 2**62)
+    assert not sum_certificate_fits(2, -(2**62), 5)
+    assert sum_certificate_fits(0, None, None)  # empty node set
+    # a billion nodes with 32-bit ids keeps 2^31-fold headroom
+    assert sum_certificate_fits(10**9, 0, 2**32)

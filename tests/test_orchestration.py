@@ -64,3 +64,47 @@ def test_archive_to_processed_moves_once_idempotent(spark, tmp_path_factory):
     moved = archive_to_processed([str(d / "a.csv"), str(d / "b.csv")])
     assert moved == []  # dest exists: keep the archive copy, skip
     assert os.path.exists(d / "a.csv")
+
+
+def test_validated_ingest_leaves_no_blocks(spark, tmp_path_factory):
+    """One read serves the gate and the load, and every cache the ingest
+    makes (the read's, the flagged and clean frames') is released: no
+    RDD block outlives the call, the gate's included."""
+    from etl_pipeline_spark.session import release_session_blocks
+
+    d = tmp_path_factory.mktemp("ingest_blocks")
+    (d / "a.csv").write_text(GOOD)
+    (d / "b.csv").write_text(MORE)
+    release_session_blocks(spark)
+    res = run_validated_ingest(spark, str(d / "*.csv"), database="etl_t_blocks")
+    assert (res.input_rows, res.output_rows) == (4, 3)
+    assert release_session_blocks(spark) == 0
+
+
+def test_gate_raises_before_any_write(spark, tmp_path_factory):
+    """A header-only CSV beside good files fails the gate: no database
+    or table is created, and the read's cache is released on the
+    failure path too."""
+    from etl_pipeline_spark.session import release_session_blocks
+
+    d = tmp_path_factory.mktemp("ingest_header_only")
+    (d / "a.csv").write_text(GOOD)
+    (d / "b.csv").write_text(MORE)
+    (d / "c.csv").write_text("entity,Day,total_confirmed_deaths\n")
+    release_session_blocks(spark)
+    with pytest.raises(FileGateError, match="c.csv: no records"):
+        run_validated_ingest(spark, str(d / "*.csv"), database="etl_t_gate_first")
+    assert not spark.catalog.databaseExists("etl_t_gate_first")
+    assert not spark.catalog.tableExists("etl_t_gate_first.covid_clean")
+    assert release_session_blocks(spark) == 0
+
+
+def test_audit_record_is_a_local_table_scan(spark):
+    """The audit row is built through Arrow: it plans as a JVM-side
+    LocalTableScan, not a Python-worker RDD scan."""
+    from etl_pipeline_spark.sources.sinks import audit_record
+
+    df = audit_record(spark, "/in/x.csv", 5)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    assert df.collect()[0]["record_count"] == 5

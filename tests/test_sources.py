@@ -168,10 +168,9 @@ def test_empty_file_detection_not_masked_by_same_basename(spark, tmp_path):
 
 
 def test_file_gate_distributed_bounded_driver(spark, tmp_path, monkeypatch):
-    """The gate's verdict math is distributed: over a many-file dir with
-    PER_FILE_COLLECT_CAP forced to 0, the driver gets totals + error rows
-    only (per_file stays empty), and zero-record files are matched by full
-    path, not basename."""
+    """Over a many-file dir with PER_FILE_COLLECT_CAP forced to 0, the
+    summary carries totals + error rows only (per_file stays empty), and
+    zero-record files are matched by full path, not basename."""
     from etl_pipeline_spark.quality import checks
 
     paths = []
