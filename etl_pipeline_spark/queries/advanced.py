@@ -11,6 +11,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from etl_pipeline_spark.catalog import EMB_DOOR_SQL, emb_door_sql, load_tables
+from etl_pipeline_spark.functions.grid import exact_sum
 from etl_pipeline_spark.queries.base import query
 
 
@@ -401,9 +402,7 @@ def q_window_sliding_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.groupBy(F.window("ts", "2 hours", "1 hour").alias("w"))
         .agg(
             F.count("*").alias("n_events"),
-            F.round(
-                F.sum(F.round(F.col("value") * 100).cast("decimal(38,0)")).cast("double") / 100, 2
-            ).alias("sum_value"),
+            F.round(exact_sum(F.col("value"), 2), 2).alias("sum_value"),
         )
         .select(
             F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
@@ -1014,11 +1013,7 @@ def q_ratio_to_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(t["orders"], t["orders"].o_custkey == t["customer"].c_custkey)
         .groupBy(F.col("n_regionkey").alias("regionkey"), F.col("n_name").alias("nation"))
         .agg(
-            F.round(
-                F.sum(F.round(F.col("o_totalprice") * 100).cast("decimal(38,0)")).cast("double")
-                / 100,
-                2,
-            ).alias("nation_total")
+            F.round(exact_sum(F.col("o_totalprice"), 2), 2).alias("nation_total")
         )
     )
     w_region = W.partitionBy("regionkey")

@@ -17,33 +17,13 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from etl_pipeline_spark.catalog import load_tables
+from etl_pipeline_spark.functions.grid import exact_sum, exact_sum_sql
 from etl_pipeline_spark.queries.base import query
 from etl_pipeline_spark.session import local_frame
 
 
 def _r2(c):
     return F.round(c, 2)
-
-
-def _exact_sum(expr, decimals: int):
-    """Order-independent sum of an exact-decimal expression: each row's
-    value is an exact ``decimals``-place decimal (prices/discounts/taxes
-    are 2dp, so their products are 4dp/6dp), so scaling to an integer and
-    summing as DECIMAL(38,0) is exact regardless of partition/summation
-    order. The result is cast back to double — both engines then round
-    the SAME double, so ROUND(...,2) can no longer flip on true .xx5
-    ties (which double-order drift turned into cross-engine hash
-    mismatches after fixture regenerations).
-    """
-    scale = 10 ** decimals
-    scaled = F.round(expr * scale).cast("decimal(38,0)")
-    return F.sum(scaled).cast("double") / scale
-
-
-def _exact_sum_sql(expr: str, decimals: int) -> str:
-    """DuckDB spelling of :func:`_exact_sum` (HUGEINT-safe via DECIMAL)."""
-    scale = 10 ** decimals
-    return f"(CAST(SUM(CAST(ROUND(({expr}) * {scale}) AS DECIMAL(38,0))) AS DOUBLE) / {scale})"
 
 
 # ---------------------------------------------------------------------------
@@ -54,16 +34,16 @@ def _exact_sum_sql(expr: str, decimals: int) -> str:
 @query(
     "q01_pricing_summary",
     # money sums/avgs via exact integer-scaled decimal sums (see
-    # _exact_sum): immune to summation-order .xx5 rounding ties
+    # exact_sum): immune to summation-order .xx5 rounding ties
     oracle=f"""
     SELECT l_returnflag, l_linestatus,
            ROUND(SUM(l_quantity), 2)                                        AS sum_qty,
-           ROUND({_exact_sum_sql('l_extendedprice', 2)}, 2)                 AS sum_base_price,
-           ROUND({_exact_sum_sql('l_extendedprice * (1 - l_discount)', 4)}, 2) AS sum_disc_price,
-           ROUND({_exact_sum_sql('l_extendedprice * (1 - l_discount) * (1 + l_tax)', 6)}, 2) AS sum_charge,
+           ROUND({exact_sum_sql('l_extendedprice', 2)}, 2)                 AS sum_base_price,
+           ROUND({exact_sum_sql('l_extendedprice * (1 - l_discount)', 4)}, 2) AS sum_disc_price,
+           ROUND({exact_sum_sql('l_extendedprice * (1 - l_discount) * (1 + l_tax)', 6)}, 2) AS sum_charge,
            ROUND(AVG(l_quantity), 2)                                        AS avg_qty,
-           ROUND({_exact_sum_sql('l_extendedprice', 2)} / COUNT(*), 2)      AS avg_price,
-           ROUND({_exact_sum_sql('l_discount', 2)} / COUNT(*), 2)           AS avg_disc,
+           ROUND({exact_sum_sql('l_extendedprice', 2)} / COUNT(*), 2)      AS avg_price,
+           ROUND({exact_sum_sql('l_discount', 2)} / COUNT(*), 2)           AS avg_disc,
            COUNT(*)                                                         AS count_order
     FROM lineitem
     WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
@@ -85,12 +65,12 @@ def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
             _r2(F.sum("l_quantity")).alias("sum_qty"),
-            _r2(_exact_sum(F.col("l_extendedprice"), 2)).alias("sum_base_price"),
-            _r2(_exact_sum(disc_price, 4)).alias("sum_disc_price"),
-            _r2(_exact_sum(disc_price * (1 + F.col("l_tax")), 6)).alias("sum_charge"),
+            _r2(exact_sum(F.col("l_extendedprice"), 2)).alias("sum_base_price"),
+            _r2(exact_sum(disc_price, 4)).alias("sum_disc_price"),
+            _r2(exact_sum(disc_price * (1 + F.col("l_tax")), 6)).alias("sum_charge"),
             _r2(F.avg("l_quantity")).alias("avg_qty"),
-            _r2(_exact_sum(F.col("l_extendedprice"), 2) / F.count("*")).alias("avg_price"),
-            _r2(_exact_sum(F.col("l_discount"), 2) / F.count("*")).alias("avg_disc"),
+            _r2(exact_sum(F.col("l_extendedprice"), 2) / F.count("*")).alias("avg_price"),
+            _r2(exact_sum(F.col("l_discount"), 2) / F.count("*")).alias("avg_disc"),
             F.count("*").alias("count_order"),
         )
     )
@@ -99,7 +79,7 @@ def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q06_revenue_delta",
     oracle=f"""
-    SELECT ROUND({_exact_sum_sql('l_extendedprice * l_discount', 4)}, 2) AS revenue_delta,
+    SELECT ROUND({exact_sum_sql('l_extendedprice * l_discount', 4)}, 2) AS revenue_delta,
            COUNT(*) AS n_rows
     FROM lineitem
     WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
@@ -126,7 +106,7 @@ def q06_revenue_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("l_quantity") < 24)
         )
         .agg(
-            _r2(_exact_sum(F.col("l_extendedprice") * F.col("l_discount"), 4)).alias(
+            _r2(exact_sum(F.col("l_extendedprice") * F.col("l_discount"), 4)).alias(
                 "revenue_delta"
             ),
             F.count("*").alias("n_rows"),
@@ -214,7 +194,7 @@ def q_cube_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_tables(spark, sf_dir, ("orders",))["orders"]
     return (
         o.cube("o_orderstatus", "o_orderpriority")
-        .agg(_r2(_exact_sum(F.col("o_totalprice"), 2)).alias("sum_price"), F.count("*").alias("cnt"))
+        .agg(_r2(exact_sum(F.col("o_totalprice"), 2)).alias("sum_price"), F.count("*").alias("cnt"))
         .select(
             F.coalesce("o_orderstatus", F.lit("ALL")).alias("orderstatus"),
             F.coalesce("o_orderpriority", F.lit("ALL")).alias("orderpriority"),
@@ -249,7 +229,7 @@ def q_conditional_split_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("total_orders"),
         F.count(F.when(delivered, 1)).alias("delivered_count"),
         F.count(F.when(~delivered, 1)).alias("other_status_count"),
-        _r2(_exact_sum(F.when(delivered, F.col("o_totalprice")).otherwise(F.lit(0.0)), 2)).alias("delivered_value"),
+        _r2(exact_sum(F.when(delivered, F.col("o_totalprice")).otherwise(F.lit(0.0)), 2)).alias("delivered_value"),
     )
 
 
@@ -298,7 +278,7 @@ def q_distinct_nation_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q03_order_revenue_topk",
     oracle=f"""
     SELECT l.l_orderkey AS orderkey,
-           ROUND({_exact_sum_sql('l.l_extendedprice * (1 - l.l_discount)', 4)}, 2) AS revenue,
+           ROUND({exact_sum_sql('l.l_extendedprice * (1 - l.l_discount)', 4)}, 2) AS revenue,
            CAST(o.o_orderdate AS DATE) AS orderdate
     FROM customer c
     JOIN orders o   ON c.c_custkey = o.o_custkey
@@ -337,7 +317,7 @@ def q03_order_revenue_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_orderdate").cast("date").alias("orderdate"),
         )
         .agg(
-            _r2(_exact_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4)).alias(
+            _r2(exact_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4)).alias(
                 "revenue"
             )
         )
@@ -351,7 +331,7 @@ def q03_order_revenue_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q05_nation_revenue",
     oracle=f"""
     SELECT n.n_name AS nation,
-           ROUND({_exact_sum_sql('l.l_extendedprice * (1 - l.l_discount)', 4)}, 2) AS revenue
+           ROUND({exact_sum_sql('l.l_extendedprice * (1 - l.l_discount)', 4)}, 2) AS revenue
     FROM customer c
     JOIN orders o   ON c.c_custkey = o.o_custkey
     JOIN lineitem l ON l.l_orderkey = o.o_orderkey
@@ -393,7 +373,7 @@ def q05_nation_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(r), F.col("n_regionkey") == F.col("r_regionkey"))
         .groupBy(F.col("n_name").alias("nation"))
         .agg(
-            _r2(_exact_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4)).alias(
+            _r2(exact_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4)).alias(
                 "revenue"
             )
         )
@@ -543,7 +523,7 @@ def q_join_range_value_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         e.join(F.broadcast(buckets), (e.value >= buckets.lo) & (e.value < buckets.hi))
         .groupBy("bucket")
-        .agg(F.count("*").alias("n_events"), _r2(_exact_sum(F.col("value"), 2)).alias("sum_value"))
+        .agg(F.count("*").alias("n_events"), _r2(exact_sum(F.col("value"), 2)).alias("sum_value"))
     )
 
 
@@ -846,7 +826,7 @@ def q_window_tumbling_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_tables(spark, sf_dir, ("events",))["events"]
     return (
         e.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count("*").alias("n_events"), _r2(_exact_sum(F.col("value"), 2)).alias("sum_value"))
+        .agg(F.count("*").alias("n_events"), _r2(exact_sum(F.col("value"), 2)).alias("sum_value"))
         .select(
             F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
             "event_type",

@@ -108,3 +108,36 @@ def test_audit_record_is_a_local_table_scan(spark):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
     assert df.collect()[0]["record_count"] == 5
+
+
+def test_release_with_no_blocks_raises_no_py4j_error(spark, monkeypatch):
+    """With no persistent RDD the release returns 0 without iterating the
+    empty Java map, so no Java exception reaches PySpark's converter.
+    One ``persist()``ed frame is released and counted."""
+    import pyspark.errors.exceptions.captured as captured
+
+    from etl_pipeline_spark.session import release_session_blocks
+
+    release_session_blocks(spark)
+    calls = []
+    convert = captured.convert_exception
+    monkeypatch.setattr(captured, "convert_exception", lambda e: calls.append(e) or convert(e))
+    assert release_session_blocks(spark) == 0
+    assert calls == []
+    monkeypatch.undo()
+
+    df = spark.range(10).persist()
+    assert df.count() == 10
+    assert release_session_blocks(spark) == 1
+    assert release_session_blocks(spark) == 0
+
+
+def test_session_has_no_call_site_capture_but_named_errors(spark):
+    """PySpark's DataFrame call-site capture is off, and an analysis
+    error still arrives as a named AnalysisException with its class."""
+    from pyspark.errors import AnalysisException
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    with pytest.raises(AnalysisException) as err:
+        spark.range(3).select("no_such_column").collect()
+    assert err.value.getCondition().startswith("UNRESOLVED_COLUMN"), err.value.getCondition()
