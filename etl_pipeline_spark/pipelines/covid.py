@@ -12,6 +12,7 @@ of a log line (Q6 upgrade) — conservation law: input = output + quarantine.
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -24,8 +25,13 @@ from etl_pipeline_spark.functions.cleaning import (
     truncating_int_cast,
     utc_now_iso,
 )
-from etl_pipeline_spark.sources.readers import read_csv_with_schema
-from etl_pipeline_spark.sources.sinks import audit_record, append_table, overwrite_table
+from etl_pipeline_spark.sources.readers import CORRUPT_COL, SOURCE_COL, permissive
+from etl_pipeline_spark.sources.sinks import (
+    append_table,
+    audit_record,
+    observe_count,
+    overwrite_table,
+)
 
 # Raw CSV arrives all-strings with these headers (dataflow_transform.py:22).
 RAW_SCHEMA = T.StructType(
@@ -37,17 +43,11 @@ RAW_SCHEMA = T.StructType(
 )
 
 
-def transform_covid(raw: DataFrame, return_flagged: bool = False):
-    """P2-P8 chain. Returns (clean, quarantine) — or, with
-    ``return_flagged=True``, (clean, quarantine, flagged) so looping
-    callers can release the load-bearing flagged cache once both
-    branches are written (r9 review: one leaked cache per invocation).
-
-    Clean rows: trimmed entity, strict-parsed Day, truncating int cast,
-    deaths > 0 (the warehouse-side WHERE, airflow.py:115), plus the
-    processed_timestamp audit column (F8/F9 <- dataflow_transform.py:64-69).
-    Quarantine rows keep raw values plus a reject_reason.
-    """
+def flag_covid(raw: DataFrame) -> DataFrame:
+    """P2-P8 flags: ``raw`` plus the typed columns ``_entity`` (trimmed),
+    ``_day`` (strict-parsed Day) and ``_deaths`` (truncating int cast),
+    and ``reject_reason``, NULL for a clean row. Raw values stay, so a
+    quarantined row keeps what arrived."""
     typed = raw.select(
         "*",
         F.trim(F.col("entity")).alias("_entity"),
@@ -65,7 +65,16 @@ def transform_covid(raw: DataFrame, return_flagged: bool = False):
         .when(F.col("_deaths").isNull(), "invalid_number")
         .when(F.col("_deaths") <= 0, "non_positive_deaths")
     )
-    flagged = typed.withColumn("reject_reason", reason).cache()
+    return typed.withColumn("reject_reason", reason)
+
+
+def split_flagged(flagged: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(clean, quarantine) of a :func:`flag_covid` frame.
+
+    Clean rows: the typed columns, deaths > 0 (the warehouse-side WHERE,
+    airflow.py:115), plus the processed_timestamp audit column (F8/F9 <-
+    dataflow_transform.py:64-69). Quarantine rows keep raw values plus a
+    reject_reason."""
     clean = flagged.filter(F.col("reject_reason").isNull()).select(
         F.col("_entity").alias("entity"),
         F.col("_day").alias("Day"),
@@ -77,9 +86,54 @@ def transform_covid(raw: DataFrame, return_flagged: bool = False):
     quarantine = flagged.filter(F.col("reject_reason").isNotNull()).select(
         "entity", "Day", "total_confirmed_deaths", "reject_reason"
     )
-    if return_flagged:
-        return clean, quarantine, flagged
     return clean, quarantine
+
+
+def transform_covid(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """P2-P8 chain over parsed rows: (clean, quarantine). Nothing is
+    cached; a caller that writes both branches caches the
+    :func:`flag_covid` frame instead, as :func:`read_covid` does."""
+    return split_flagged(flag_covid(raw))
+
+
+def read_covid(spark: SparkSession, input_csv: str | list[str]) -> DataFrame:
+    """The ingest's one cache: the PERMISSIVE ``RAW_SCHEMA`` scan with
+    each row's source file (``SOURCE_COL``), flagged by
+    :func:`flag_covid`, cached once and not yet filled. The caller
+    releases it.
+
+    ``SOURCE_COL`` is projected from the file scan, because
+    ``input_file_name()`` reads empty on the cached relation. Unparseable
+    lines stay in the cache with ``CORRUPT_COL`` set, so one aggregate
+    over it counts every row and every parse failure, and
+    :func:`write_split` filters them out of the cache afterwards (see
+    ``sources.readers.split_quarantine`` for why that filter must read a
+    cache, not the scan)."""
+    scan = permissive(spark.read, RAW_SCHEMA).option("header", "true").csv(input_csv)
+    return flag_covid(scan.select("*", F.input_file_name().alias(SOURCE_COL))).cache()
+
+
+def write_split(
+    flagged: DataFrame,
+    write_clean: Callable[[DataFrame], None],
+    write_quarantine: Callable[[DataFrame], None],
+) -> tuple[int, int]:
+    """The load body of every covid ingest, batch or streaming: split the
+    parsed rows of a cached :func:`flag_covid` frame, hand the clean rows
+    to ``write_clean`` and the rejected ones to ``write_quarantine``, and
+    return (clean, quarantined) as counted by the writes themselves.
+
+    Each frame handed to a writer carries its own ``Observation``, so its
+    count is what that write job saw, taken with no job of its own (the
+    reference's CountRecords DoFn, dataflow_transform.py:75-89). A row
+    lost between the cache and a write shows up in these counts, never
+    in the aggregate that filled the cache."""
+    clean, quarantine = split_flagged(flagged.filter(F.col(CORRUPT_COL).isNull()))
+    clean, n_clean = observe_count(clean)
+    quarantine, n_quarantined = observe_count(quarantine)
+    write_clean(clean)
+    write_quarantine(quarantine)
+    return int(n_clean.get["n"]), int(n_quarantined.get["n"])
 
 
 @dataclass
@@ -98,50 +152,46 @@ def run_covid_pipeline(
     quarantine_table: str = "covid_quarantine",
 ) -> CovidPipelineResult:
     """End-to-end: CSV -> quarantine-split parse -> transform -> overwrite
-    main + quarantine tables -> append audit row (pipeline A+B complete)."""
-    raw, corrupt, raw_cached = read_csv_with_schema(
-        spark, input_csv, RAW_SCHEMA, return_raw=True
-    )
+    main + quarantine tables -> append audit row (pipeline A+B complete).
+    One aggregate over :func:`read_covid`'s cache counts the parse
+    failures and fills it for the writes."""
+    flagged = read_covid(spark, input_csv)
     try:
+        parse_failures = flagged.select(F.count(CORRUPT_COL)).first()[0]
         return load_covid(
-            spark, raw, corrupt, input_csv, main_table, audit_table, quarantine_table
+            spark, flagged, parse_failures, input_csv, main_table, audit_table, quarantine_table
         )
     finally:
-        # the permissive-read cache pins one full input copy per call
-        # (r9 review: leaked in ingest loops)
-        raw_cached.unpersist()
+        flagged.unpersist()
 
 
 def load_covid(
     spark: SparkSession,
-    raw: DataFrame,
-    corrupt: DataFrame,
+    flagged: DataFrame,
+    parse_failures: int,
     input_csv: str | list[str],
     main_table: str,
     audit_table: str,
     quarantine_table: str,
 ) -> CovidPipelineResult:
-    """The load body shared by :func:`run_covid_pipeline` and
-    ``run_validated_ingest``: transform ``raw`` (the parsed rows of the
-    PERMISSIVE ``RAW_SCHEMA`` read), overwrite the main and quarantine tables,
-    count, and append the audit row. Releases the caches it makes; the
-    read's cache stays with the caller."""
+    """The table load shared by :func:`run_covid_pipeline` and
+    ``run_validated_ingest``: :func:`write_split` overwrites the main and
+    quarantine tables from :func:`read_covid`'s cache, which the caller
+    filled with its aggregate (that aggregate also gave
+    ``parse_failures``), then the audit row is appended. No job counts
+    anything: the clean and quarantined counts come from the two writes,
+    so ``input_rows`` is an independent tally a caller can reconcile
+    against the aggregate's total. The cache stays with the caller."""
     audit_path = input_csv if isinstance(input_csv, str) else ",".join(input_csv)
-    clean, quarantine, flagged = transform_covid(raw, return_flagged=True)
-    clean = clean.cache()
-    try:
-        overwrite_table(clean, main_table)
-        overwrite_table(quarantine, quarantine_table)
-        n_out = clean.count()
-        n_quar = quarantine.count()
-        n_corrupt = corrupt.count()
-        append_table(audit_record(spark, audit_path, n_out), audit_table)
-    finally:
-        clean.unpersist()
-        flagged.unpersist()
+    n_out, n_quar = write_split(
+        flagged,
+        lambda df: overwrite_table(df, main_table),
+        lambda df: overwrite_table(df, quarantine_table),
+    )
+    append_table(audit_record(spark, audit_path, n_out), audit_table)
     return CovidPipelineResult(
-        input_rows=n_out + n_quar + n_corrupt,
+        input_rows=n_out + n_quar + parse_failures,
         output_rows=n_out,
         quarantined_rows=n_quar,
-        parse_failures=n_corrupt,
+        parse_failures=parse_failures,
     )

@@ -9,6 +9,11 @@ validate it (dataflow.py:184). Here validation is a distributed file gate
 plain dataclass (Q7 <- prepare_dataflow_parameters, dataflow.py:387-416),
 and the "launched pipeline" is a function call sharing the session and
 the cached read: the ingest gates the same parsed batch it loads.
+
+One batch holds one cache, ``pipelines.covid.read_covid``'s flagged
+PERMISSIVE read. The gate's aggregate fills it and counts parse failures;
+the two table writes read it and count their own rows; the audit append
+follows. No job only counts.
 """
 
 from __future__ import annotations
@@ -18,7 +23,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
 
-from etl_pipeline_spark.pipelines.covid import RAW_SCHEMA, CovidPipelineResult, load_covid
+from etl_pipeline_spark.pipelines.covid import CovidPipelineResult, load_covid, read_covid
 from etl_pipeline_spark.quality.checks import (
     FileGateError,
     FileValidationSummary,
@@ -26,7 +31,6 @@ from etl_pipeline_spark.quality.checks import (
     file_verdict,
     per_file_counts,
 )
-from etl_pipeline_spark.sources.readers import read_csv_with_schema
 from etl_pipeline_spark.sources.sinks import create_database_if_not_exists
 
 
@@ -121,31 +125,37 @@ def run_validated_ingest(
     runs strictly AFTER reconciliation so a failed load leaves inputs in
     place for the retry.
 
-    The batch is parsed once. The PERMISSIVE read is cached with each
-    row's source path; the gate's per-file counts are one aggregate over
-    that cache (the CSV gate rule: every row counts, a file with none
-    fails), which also fills it, and the load then writes from the same
-    cache. A failed gate raises before the database or any table is
-    touched, and the read's cache is released on every exit."""
+    The batch is parsed once, into one cache (``read_covid``: the
+    PERMISSIVE read with each row's source file and the transform's flag
+    columns). The gate's per-file counts are one aggregate over that
+    cache (the CSV gate rule: every row counts, a file with none fails),
+    which also counts the parse failures and fills the cache; the load
+    then writes from the same cache. A failed gate raises before the
+    database or any table is touched, and the cache is released on every
+    exit.
+
+    Reconciliation compares two independent tallies: the gate's total
+    (every row in the cache) against what the writes observed (clean +
+    quarantined) plus the parse failures. A row lost between the cache and
+    a write fails it."""
     paths = _list_inputs(input_glob)
-    raw, corrupt, raw_cached = read_csv_with_schema(
-        spark, paths, RAW_SCHEMA, return_raw=True
-    )
+    flagged = read_covid(spark, paths)
     try:
-        summary = file_verdict(paths, per_file_counts(raw_cached), min_records)
+        counts = per_file_counts(flagged).collect()
+        summary = file_verdict(paths, counts, min_records)
         _raise_on_hard_errors(summary)
         create_database_if_not_exists(spark, database)
         result = load_covid(
             spark,
-            raw,
-            corrupt,
+            flagged,
+            sum(r["corrupt"] for r in counts),
             paths,
             main_table=f"{database}.covid_clean",
             audit_table=f"{database}.covid_audit_log",
             quarantine_table=f"{database}.covid_quarantine",
         )
     finally:
-        raw_cached.unpersist()
+        flagged.unpersist()
     # reconciliation: pipeline accounting must explain every promised row
     if result.input_rows != summary.total_records:
         raise FileGateError(

@@ -14,7 +14,7 @@ import re
 from dataclasses import dataclass, field
 from functools import reduce
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from etl_pipeline_spark.functions.cleaning import (
@@ -211,10 +211,12 @@ def file_gate(
 
     This is the standalone gate: it reads the files only to count them.
     A pipeline that loads what it gates should not read twice —
-    ``run_validated_ingest`` reads its batch once PERMISSIVE-ly, with the
-    source path projected before the cache (``split_quarantine``), and
-    passes ``per_file_counts`` of that cached frame to the same
-    :func:`file_verdict`; counting fills the cache the writes reuse.
+    ``run_validated_ingest`` gates its one cache
+    (``pipelines.covid.read_covid``: the PERMISSIVE read with the source
+    path projected before the cache) with ``per_file_counts`` and the
+    same :func:`file_verdict`; that aggregate fills the cache the writes
+    reuse, and counts its parse failures, which stay in the cache until
+    the writes filter them out of it.
 
     ``fmt=None`` routes each file by extension (Q2 <- dataflow.py:189-199),
     handling mixed-format directories by running one gate per format group
@@ -268,35 +270,42 @@ def file_gate(
             if payload
             else F.lit(False)
         )
-    df = df.select("*", F.input_file_name().alias(SOURCE_COL))
-    summary = file_verdict(paths, per_file_counts(df, valid_row), min_records)
+    # valid_row already rejects corrupt rows; dropping the column keeps the
+    # aggregate from reading it alone when the payload is empty
+    df = df.drop(CORRUPT_COL).select("*", F.input_file_name().alias(SOURCE_COL))
+    counts = per_file_counts(df, valid_row).collect()
+    summary = file_verdict(paths, counts, min_records)
     if check_metadata:
         summary.errors.extend(file_metadata_checks(spark, paths))
     return summary
 
 
 def per_file_counts(df: DataFrame, valid_row: Column | None = None) -> DataFrame:
-    """(source, cnt): records per source file of a frame that carries
-    ``SOURCE_COL`` (``sources.readers.split_quarantine`` projects it
+    """(source, cnt, corrupt): records per source file of a frame that
+    carries ``SOURCE_COL`` (``pipelines.covid.read_covid`` projects it
     before its cache). ``valid_row`` says which rows count; by default
     every row does. A file with rows but no valid one gets cnt NULL
-    (nullif 0), exactly like a file the reader produced no rows for."""
+    (nullif 0), exactly like a file the reader produced no rows for.
+    ``corrupt`` counts the rows with ``CORRUPT_COL`` set (0 when the
+    frame has no such column): under the default rule they are records,
+    and a load needs their number apart from the rows it writes."""
     n = F.count(F.lit(1)) if valid_row is None else F.sum(valid_row.cast("long"))
+    corrupt = F.count(CORRUPT_COL) if CORRUPT_COL in df.columns else F.lit(0)
     return df.groupBy(F.col(SOURCE_COL).alias("source")).agg(
-        F.nullif(n, F.lit(0)).alias("cnt")
+        F.nullif(n, F.lit(0)).alias("cnt"), corrupt.alias("corrupt")
     )
 
 
 def file_verdict(
-    paths: list[str], counts: DataFrame, min_records: int = 1
+    paths: list[str], counts: list[Row], min_records: int = 1
 ) -> FileValidationSummary:
-    """The gate's verdict: per-file counts (:func:`per_file_counts`) ->
-    :class:`FileValidationSummary`. The counts are one aggregate job
-    whose result has one row per file that has records; input paths
+    """The gate's verdict: the collected rows of :func:`per_file_counts`
+    -> :class:`FileValidationSummary`. The counts come from one aggregate
+    job whose result has one row per file that has records; input paths
     match it on scheme-normalized FULL paths (never basenames — two dirs
     may share filenames), so a path with no row has no records. Nothing
     is checkpointed or cached."""
-    got = {_norm_path(r["source"]): r["cnt"] for r in counts.collect()}
+    got = {_norm_path(r["source"]): r["cnt"] for r in counts}
     cnt = {p: got.get(_norm_path(p)) for p in paths}
     empty = [p for p in paths if cnt[p] is None]
     summary = FileValidationSummary(

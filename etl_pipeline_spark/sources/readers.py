@@ -17,14 +17,22 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 CORRUPT_COL = "_corrupt_record"
-# each row's source file (input_file_name), projected before the cache
+# each row's source file (input_file_name), projected before a cache
 SOURCE_COL = "_source_path"
 
 
-def _with_corrupt_field(schema: T.StructType) -> T.StructType:
-    if CORRUPT_COL in schema.fieldNames():
-        return schema
-    return T.StructType([*schema.fields, T.StructField(CORRUPT_COL, T.StringType(), True)])
+def permissive(reader, schema: T.StructType):
+    """``reader`` (a ``DataFrameReader`` or ``DataStreamReader``) with the
+    declared ``schema`` plus ``CORRUPT_COL``, in PERMISSIVE mode: a line
+    the parser cannot read keeps whatever fields it could fill and gets
+    its raw text in ``CORRUPT_COL`` instead of failing the read."""
+    if CORRUPT_COL not in schema.fieldNames():
+        schema = T.StructType([*schema.fields, T.StructField(CORRUPT_COL, T.StringType(), True)])
+    return (
+        reader.schema(schema)
+        .option("mode", "PERMISSIVE")
+        .option("columnNameOfCorruptRecord", CORRUPT_COL)
+    )
 
 
 def split_quarantine(df: DataFrame, return_raw: bool = False):
@@ -32,17 +40,18 @@ def split_quarantine(df: DataFrame, return_raw: bool = False):
 
     Quarantined rows keep the raw record text for later repair — the
     reference logged a warning and dropped them (dataflow_transform.py:26-30).
-    Spark requires caching the raw frame before filtering on the corrupt
-    column (it is populated at parse time).
 
-    Before the cache, the raw frame gains ``SOURCE_COL``: the path of
-    each row's source file. It must be projected from the file scan,
-    because ``input_file_name()`` reads empty on the cached
-    ``InMemoryRelation``. It lets one read serve both the file gate and
-    the load: ``quality.checks.per_file_counts`` counts rows per file
-    from the cached frame, and that aggregate also fills the cache the
-    writes then reuse (``run_validated_ingest``). The clean and
-    quarantine frames drop it, so their columns are the read's own.
+    The frame is cached before either filter, and the corrupt filter
+    reads the cache. ``CORRUPT_COL`` is filled at parse time, from the
+    columns the scan reads: a filter on it pushed into a raw scan either
+    reads it alone, which Spark refuses, or reads it beside a pruned
+    column set, under which a line with too many fields can parse as a
+    good one. The cache holds the whole parse once.
+
+    The covid ingest does not come through here: it caches its own frame
+    (``pipelines.covid.read_covid``), which also holds each row's source
+    file and the typed and flag columns, and filters that cache on
+    ``CORRUPT_COL`` for the same reason.
 
     Cache ownership (r9 review): the load-bearing cache() pins one copy
     of the raw input per call, which accumulates across a loop over many
@@ -50,9 +59,9 @@ def split_quarantine(df: DataFrame, return_raw: bool = False):
     (clean, quarantine, raw) and ``raw.unpersist()`` once both branches
     are written; the two-element default stays for one-shot reads.
     """
-    df = df.select("*", F.input_file_name().alias(SOURCE_COL)).cache()
-    bad = df.filter(F.col(CORRUPT_COL).isNotNull()).drop(SOURCE_COL)
-    good = df.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL, SOURCE_COL)
+    df = df.cache()
+    bad = df.filter(F.col(CORRUPT_COL).isNotNull())
+    good = df.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
     if return_raw:
         return good, bad, df
     return good, bad
@@ -63,7 +72,6 @@ def read_csv_with_schema(
     path: str,
     schema: T.StructType,
     header: bool = True,
-    return_raw: bool = False,
     **options: str,
 ):
     """CSV scan with declared schema (S1+S2): header skipped like
@@ -74,15 +82,10 @@ def read_csv_with_schema(
     hardcoded-headers parser (dataflow_transform.py:22); pass
     ``header=False`` for headerless files.
     """
-    reader = (
-        spark.read.schema(_with_corrupt_field(schema))
-        .option("header", str(header).lower())
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", CORRUPT_COL)
-    )
+    reader = permissive(spark.read, schema).option("header", str(header).lower())
     for k, v in options.items():
         reader = reader.option(k, v)
-    return split_quarantine(reader.csv(path), return_raw=return_raw)
+    return split_quarantine(reader.csv(path))
 
 
 def read_csv_autodetect(spark: SparkSession, path: str, **options: str) -> DataFrame:
@@ -120,12 +123,7 @@ def read_jsonl(
     if schema is None:
         inferred = spark.read.json(path).schema
         schema = T.StructType([f for f in inferred.fields if f.name != CORRUPT_COL])
-    reader = (
-        spark.read.schema(_with_corrupt_field(schema))
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", CORRUPT_COL)
-    )
-    return split_quarantine(reader.json(path))
+    return split_quarantine(permissive(spark.read, schema).json(path))
 
 
 def read_text_nonempty(spark: SparkSession, path: str) -> DataFrame:

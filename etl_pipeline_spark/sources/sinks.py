@@ -3,8 +3,8 @@
 The reference writes a main table (WRITE_TRUNCATE) and appends an audit
 row per ingest (dataflow_transform.py:180-214). Spark equivalents:
 ``mode("overwrite")`` / ``mode("append")`` saveAsTable, plus a one-row
-audit DataFrame synthesized from the load's own count — the multi-sink
-fan-out (S16) reuses one cached DataFrame for both writes.
+audit DataFrame synthesized from the load's own count — observed during
+the main write, so the multi-sink fan-out (S16) runs the pipeline once.
 """
 
 from __future__ import annotations
@@ -12,7 +12,7 @@ from __future__ import annotations
 import os
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from etl_pipeline_spark.session import local_frame
@@ -74,6 +74,19 @@ def audit_record(
     )
 
 
+def observe_count(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` with an unnamed ``Observation`` that counts its rows while
+    the action that runs it does (A3's accumulator pattern, SURVEY §2.4 <-
+    CountRecords DoFn dataflow_transform.py:75-89): ``obs.get["n"]``
+    after the action, with no count job. Observe the frame handed to the
+    writer, so the count is what was written. The Observation is
+    unnamed: Spark refuses a plan with two observations of one name
+    (``DUPLICATED_METRICS_NAME``), so a fixed name breaks any frame built
+    from two observed ones."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("n")), obs
+
+
 def write_with_audit(
     df: DataFrame,
     main_table: str,
@@ -82,18 +95,13 @@ def write_with_audit(
     mode: str = "overwrite",
 ) -> int:
     """Multi-sink fan-out (S16 <- dataflow_transform.py:166-214): one
-    processed DataFrame feeds the main table and the audit log. The frame
-    is cached so the audit count does not recompute the pipeline; at scale
-    ``df.observe`` metrics could replace the extra count action entirely."""
-    spark = df.sparkSession
-    df = df.cache()
-    try:
-        df.write.mode(mode).saveAsTable(main_table)
-        n = df.count()
-        append_table(audit_record(spark, input_path, n), audit_table)
-    finally:
-        # a failed write must not leak the cache for the app lifetime
-        df.unpersist()
+    processed DataFrame feeds the main table and the audit log. The
+    record count is observed during the main write (:func:`observe_count`),
+    so the pipeline runs once: no cache and no count job."""
+    observed, obs = observe_count(df)
+    observed.write.mode(mode).saveAsTable(main_table)
+    n = int(obs.get["n"])
+    append_table(audit_record(df.sparkSession, input_path, n), audit_table)
     return n
 
 
@@ -112,28 +120,6 @@ def write_bucketed(
     if sort_cols:
         writer = writer.sortBy(*sort_cols)
     writer.saveAsTable(table)
-
-
-def write_with_observed_audit(
-    df: DataFrame,
-    main_table: str,
-    audit_table: str,
-    input_path: str,
-    mode: str = "overwrite",
-) -> int:
-    """Single-pass variant of write_with_audit: the record count is
-    captured by ``df.observe`` DURING the write (A3's accumulator pattern,
-    SURVEY §2.4 <- CountRecords DoFn dataflow_transform.py:75-89), so the
-    pipeline is executed exactly once — no cache, no second count job."""
-    from pyspark.sql import Observation
-
-    spark = df.sparkSession
-    obs = Observation("load_metrics")
-    observed = df.observe(obs, F.count(F.lit(1)).alias("n"))
-    observed.write.mode(mode).saveAsTable(main_table)
-    n = int(obs.get["n"])
-    append_table(audit_record(spark, input_path, n), audit_table)
-    return n
 
 
 class ConcurrentWriterError(RuntimeError):
@@ -502,12 +488,8 @@ def upsert_parquet(
         tmp = path.rstrip("/") + "__compacting"
         # observe captures the row count DURING the rewrite — the old
         # final count() re-scanned the entire merged table (r9 review)
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        merged.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
-            "overwrite"
-        ).parquet(tmp)
+        merged, obs = observe_count(merged)
+        merged.write.mode("overwrite").parquet(tmp)
         if os.path.isdir(path):
             _verified_swap(spark, path, tmp)
         else:

@@ -12,10 +12,10 @@ via the checkpoint.
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from etl_pipeline_spark.pipelines.covid import RAW_SCHEMA, transform_covid
+from etl_pipeline_spark.pipelines.covid import RAW_SCHEMA, flag_covid, write_split
+from etl_pipeline_spark.sources.readers import permissive
 from etl_pipeline_spark.sources.sinks import audit_record
 
 
@@ -30,12 +30,19 @@ def start_file_ingest(
     """Watch ``input_dir`` for CSV arrivals; per micro-batch run the covid
     transform and write main/quarantine/audit parquet under ``output_dir``.
 
+    The stream reads PERMISSIVE-ly with the corrupt-record column, like the
+    batch ingest, and each micro-batch runs the batch ingest's load body
+    (``pipelines.covid.write_split``) on one persisted flagged frame: a
+    line the parser cannot read is counted out of both sinks instead of
+    landing in ``main`` with its extra fields dropped. Only the sinks
+    differ from the batch ingest: ``batch_id=`` parquet directories.
+
     ``availableNow`` processes the backlog then stops (batch-like test
     mode); drop it for a continuously-running ingest. At scale the same
     query runs unchanged on a cluster — state lives in the checkpoint.
     """
     reader = (
-        spark.readStream.schema(RAW_SCHEMA)
+        permissive(spark.readStream, RAW_SCHEMA)
         .option("header", "true")
         .option("maxFilesPerTrigger", "16")
     )
@@ -46,31 +53,23 @@ def start_file_ingest(
     raw = reader.csv(input_dir)
 
     def process_batch(batch_df, batch_id: int) -> None:
-        from pyspark.sql import Observation
-
-        # persist: the clean and quarantine branches otherwise each
-        # re-read the micro-batch's CSV files and re-run the transform
-        # lineage (r9 review) — one cached scan feeds both writes
-        batch_df.persist()
-        clean, quarantine = transform_covid(batch_df)
-        # observe captures the clean count DURING the main write (A3), so
-        # the covid transform and the batch read run exactly once — no
-        # second count() job recomputing the whole micro-batch.
-        obs = Observation()
-        observed = clean.observe(obs, F.count(F.lit(1)).alias("n"))
         # batch_id-keyed overwrite subdirectories make every sink write
         # idempotent under foreachBatch replay (restart between write and
         # checkpoint commit re-delivers the same batch_id — the overwrite
         # replaces, never duplicates; same for the audit row).
-        observed.write.mode("overwrite").parquet(f"{output_dir}/main/batch_id={batch_id}")
-        n = int(obs.get["n"] or 0)
-        quarantine.write.mode("overwrite").parquet(
-            f"{output_dir}/quarantine/batch_id={batch_id}"
-        )
-        audit_record(spark, f"{input_dir} (batch {batch_id})", n).write.mode(
-            "overwrite"
-        ).parquet(f"{output_dir}/audit/batch_id={batch_id}")
-        batch_df.unpersist()
+        def sink(name: str):
+            return lambda df: df.write.mode("overwrite").parquet(
+                f"{output_dir}/{name}/batch_id={batch_id}"
+            )
+
+        # one persisted parse feeds both writes; the corrupt filter inside
+        # write_split reads it, not the micro-batch's files
+        flagged = flag_covid(batch_df).persist()
+        try:
+            n, _ = write_split(flagged, sink("main"), sink("quarantine"))
+        finally:
+            flagged.unpersist()
+        sink("audit")(audit_record(spark, f"{input_dir} (batch {batch_id})", n))
 
     writer = raw.writeStream.foreachBatch(process_batch).option(
         "checkpointLocation", checkpoint_dir

@@ -3,6 +3,7 @@ from __future__ import annotations
 import os
 import sys
 from contextlib import contextmanager
+from itertools import count
 
 import pytest
 
@@ -11,6 +12,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 os.environ.setdefault("SPARK_GRAFT_CPUS", "4")
 
 SF_SMOKE = "/root/testdata/sf0.001"
+
+_job_groups = count()
 
 
 @contextmanager
@@ -30,6 +33,21 @@ def session_conf(spark, conf: dict[str, str]):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+@contextmanager
+def jobs_started(spark):
+    """Collect the ids of the Spark jobs started inside the block."""
+    sc = spark.sparkContext
+    group = f"jobs-started-{next(_job_groups)}"
+    ids: list[int] = []
+    sc.setJobGroup(group, group)
+    try:
+        yield ids
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture(scope="session")

@@ -10,12 +10,10 @@ from __future__ import annotations
 import os
 import subprocess
 import sys
-from contextlib import contextmanager
-from itertools import count
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from conftest import SF_SMOKE
+from conftest import SF_SMOKE, jobs_started
 from pyspark.sql import functions as F
 
 from etl_pipeline_spark import catalog
@@ -39,23 +37,6 @@ ANALYTICS = (
     "q_text_quality_score",
     "q_knn_bruteforce_cosine",
 )
-
-_groups = count()
-
-
-@contextmanager
-def jobs_started(spark):
-    """Collect the ids of the Spark jobs started inside the block."""
-    sc = spark.sparkContext
-    group = f"catalog-cache-{next(_groups)}"
-    ids: list[int] = []
-    sc.setJobGroup(group, group)
-    try:
-        yield ids
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def write_table(sf_dir, name, table):

@@ -3,8 +3,14 @@ pipeline -> count reconciliation (Q1/Q7/S15)."""
 
 from __future__ import annotations
 
-import pytest
+import threading
+from concurrent.futures import Future
 
+import pytest
+from conftest import jobs_started
+from pyspark.sql import functions as F
+
+from etl_pipeline_spark.pipelines import covid
 from etl_pipeline_spark.pipelines.orchestration import run_validated_ingest
 from etl_pipeline_spark.quality.checks import FileGateError
 
@@ -67,17 +73,21 @@ def test_archive_to_processed_moves_once_idempotent(spark, tmp_path_factory):
 
 
 def test_validated_ingest_leaves_no_blocks(spark, tmp_path_factory):
-    """One read serves the gate and the load, and every cache the ingest
-    makes (the read's, the flagged and clean frames') is released: no
-    RDD block outlives the call, the gate's included."""
+    """One read serves the gate and the load, and the one cache the
+    ingest makes is released: no RDD block outlives the call. No job only
+    counts: the gate's aggregate, the two table writes and the audit
+    append are the only Spark jobs (at most 6 under AQE; 12 when the load
+    counted after its writes)."""
     from etl_pipeline_spark.session import release_session_blocks
 
     d = tmp_path_factory.mktemp("ingest_blocks")
     (d / "a.csv").write_text(GOOD)
     (d / "b.csv").write_text(MORE)
     release_session_blocks(spark)
-    res = run_validated_ingest(spark, str(d / "*.csv"), database="etl_t_blocks")
+    with jobs_started(spark) as jobs:
+        res = run_validated_ingest(spark, str(d / "*.csv"), database="etl_t_blocks")
     assert (res.input_rows, res.output_rows) == (4, 3)
+    assert len(jobs) <= 6, jobs
     assert release_session_blocks(spark) == 0
 
 
@@ -97,6 +107,67 @@ def test_gate_raises_before_any_write(spark, tmp_path_factory):
     assert not spark.catalog.databaseExists("etl_t_gate_first")
     assert not spark.catalog.tableExists("etl_t_gate_first.covid_clean")
     assert release_session_blocks(spark) == 0
+
+
+def test_row_lost_before_the_writes_fails_reconciliation(
+    spark, tmp_path_factory, monkeypatch
+):
+    """The load's counts come from the writes, not from the gate's
+    aggregate: a clean row dropped between the cache and the main write
+    makes the observed tally one short of the gate's total."""
+    split = covid.split_flagged
+
+    def lossy(flagged):
+        clean, quarantine = split(flagged)
+        return clean.filter(F.col("entity") != "A"), quarantine
+
+    monkeypatch.setattr(covid, "split_flagged", lossy)
+    d = tmp_path_factory.mktemp("ingest_lossy")
+    (d / "a.csv").write_text(GOOD)
+    (d / "b.csv").write_text(MORE)
+    lost = "count reconciliation failed: gate promised 4, pipeline saw 3"
+    with pytest.raises(FileGateError, match=lost):
+        run_validated_ingest(spark, str(d / "*.csv"), database="etl_t_lossy")
+
+
+def _within(seconds, fn):
+    """``fn()``'s result, or TimeoutError after ``seconds`` (the call is
+    left running on a daemon thread)."""
+    fut = Future()
+
+    def run():
+        try:
+            fut.set_result(fn())
+        except BaseException as exc:
+            fut.set_exception(exc)
+
+    threading.Thread(target=run, daemon=True).start()
+    return fut.result(timeout=seconds)
+
+
+@pytest.mark.parametrize(
+    "body, counts",
+    [
+        # every row rejected: the clean write gets no row
+        ("A,2021-01-01,0\nB,not-a-date,5\n,2021-01-01,3\n", (0, 3, 0)),
+        # every line malformed: both writes get no row
+        ("A,2021-01-01,5,extra\nB,2021-01-02,6,extra\n", (0, 0, 2)),
+    ],
+    ids=["all_rejected", "all_malformed"],
+)
+def test_batch_with_an_empty_side_finishes(spark, tmp_path_factory, body, counts):
+    """A write that gets no row still reports its observed count (0), so
+    the load finishes and reconciles: (clean, quarantined, parse
+    failures) == ``counts``."""
+    d = tmp_path_factory.mktemp("ingest_empty_side")
+    (d / "a.csv").write_text("entity,Day,total_confirmed_deaths\n" + body)
+    res = _within(
+        300, lambda: run_validated_ingest(spark, str(d / "*.csv"), database="etl_t_empty_side")
+    )
+    assert (res.output_rows, res.quarantined_rows, res.parse_failures) == counts
+    assert res.input_rows == sum(counts)
+    assert spark.table("etl_t_empty_side.covid_clean").count() == counts[0]
+    assert spark.table("etl_t_empty_side.covid_quarantine").count() == counts[1]
 
 
 def test_audit_record_is_a_local_table_scan(spark):

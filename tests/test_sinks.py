@@ -3,14 +3,14 @@ plan), observe-based single-pass audit, DDL idempotency."""
 
 from __future__ import annotations
 
-from conftest import session_conf
+from conftest import jobs_started, session_conf
 from pyspark.sql import functions as F
 
 from etl_pipeline_spark.sources.sinks import (
     create_database_if_not_exists,
     create_table_if_not_exists,
     write_bucketed,
-    write_with_observed_audit,
+    write_with_audit,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -39,9 +39,13 @@ def test_bucketed_join_has_no_exchange(spark):
         assert joined.count() == lineitem.count()
 
 
-def test_write_with_observed_audit_single_pass(spark):
+def test_write_with_audit_single_pass(spark):
+    """The audit count is observed during the main write: one write job,
+    no cache and no count job."""
     df = spark.read.parquet(f"{SF}/region.parquet")
-    n = write_with_observed_audit(df, "obs_main", "obs_audit", "/data/region.parquet")
+    with jobs_started(spark) as jobs:
+        n = write_with_audit(df, "obs_main", "obs_audit", "/data/region.parquet")
+    assert len(jobs) == 2, jobs  # the main write and the audit append
     assert n == 5
     audit = spark.table("obs_audit").collect()[-1]
     assert audit["record_count"] == 5

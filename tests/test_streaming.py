@@ -41,6 +41,28 @@ def test_file_ingest_end_to_end(spark, tmp_path_factory):
     assert spark.read.parquet(str(out / "main")).count() == 2
 
 
+def test_stream_counts_malformed_lines_out_like_the_batch_ingest(spark, tmp_path_factory):
+    """A line with an extra field is a parse failure in the stream as in
+    the batch ingest: it is in neither sink, and the stream's main and
+    quarantine rows match ``run_validated_ingest`` on the same files."""
+    from etl_pipeline_spark.pipelines.orchestration import run_validated_ingest
+
+    base = tmp_path_factory.mktemp("stream_malformed")
+    inp, out, ckpt = base / "in", base / "out", base / "ckpt"
+    inp.mkdir()
+    (inp / "f1.csv").write_text(CSV1 + "Mexico,2021-03-01,17,extra-field\n")
+    (inp / "f2.csv").write_text(CSV2)
+    q = start_file_ingest(spark, str(inp), str(out), str(ckpt))
+    q.awaitTermination(120)
+    main = spark.read.parquet(str(out / "main"))
+    quarantine = spark.read.parquet(str(out / "quarantine"))
+    assert "Mexico" not in {r["entity"] for r in main.collect()}
+    res = run_validated_ingest(spark, str(inp / "*.csv"), database="etl_t_stream_parity")
+    assert (res.output_rows, res.quarantined_rows, res.parse_failures) == (2, 1, 1)
+    assert main.count() == res.output_rows
+    assert quarantine.count() == res.quarantined_rows
+
+
 @pytest.fixture(scope="module")
 def event_stream(spark, tmp_path_factory):
     d = tmp_path_factory.mktemp("events_src")
