@@ -323,36 +323,6 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def dedup_clusters_lazy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pre-checkpoint plan-audit twin of :func:`dedup_clusters`: the CC
-    fixpoint runs EAGER per-round checkpoints (convergence is observed
-    per round), so the production query's executed plan is a bare
-    `Scan ExistingRDD` — blind to the audit (the r8 judge finding's
-    fourth instance, caught by the is_checkpoint_root detector). This
-    twin builds the edge list plus ONE un-checkpointed cc_round plus the
-    output projection — the repeating plan unit at scale. Never
-    executed — plan-only."""
-    from etl_pipeline_spark.queries.dedup import q_dedup_ngram_jaccard
-
-    d = load_tables(spark, sf_dir, ("documents",))["documents"]
-    pairs = q_dedup_ngram_jaccard(spark, sf_dir).select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    )
-    nodes = d.select(F.col("doc_id").alias("node"))
-    sym = (
-        pairs.select("src", "dst")
-        .union(pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .union(nodes.select(F.col("node").alias("src"), F.col("node").alias("dst")))
-    )
-    labels = nodes.select(F.col("node"), F.col("node").alias("label"))
-    comp = cc_round(sym, labels)
-    return comp.select(
-        F.col("node").alias("doc_id"),
-        F.col("label").alias("cluster_id"),
-        (F.col("node") == F.col("label")).alias("is_keeper"),
-    )
-
-
 # Recursive transitive-closure oracle: cluster_id = min reachable doc_id.
 # The edge set is the same jaccard-pairs SQL used by q_dedup_ngram_jaccard.
 def clusters_oracle(pairs_sql: str) -> str:

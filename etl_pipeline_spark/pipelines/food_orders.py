@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from etl_pipeline_spark.functions.cleaning import clean_special_chars, strip_trailing_colons
-from etl_pipeline_spark.sources.readers import read_csv_with_schema
+from etl_pipeline_spark.sources.readers import permissive, split_quarantine
 from etl_pipeline_spark.sources.sinks import overwrite_table
 
 # README.md:18 column list; raw CSV is all-strings.
@@ -67,19 +67,25 @@ def run_food_orders_pipeline(
     other_table: str = "other_status_orders",
 ) -> FoodOrdersResult:
     """Clean -> 2-way status split (P6, one cached scan, two filters) ->
-    three counts (A2) -> two tables (README.md:37-38,233)."""
-    raw, _corrupt = read_csv_with_schema(spark, input_csv, FOOD_SCHEMA)
+    three counts (A2) -> two tables (README.md:37-38,233). Both caches,
+    the PERMISSIVE read's and the cleaned frame's, are released on every
+    exit."""
+    reader = permissive(spark.read, FOOD_SCHEMA).option("header", "true")
+    raw, _corrupt, parsed = split_quarantine(reader.csv(input_csv), return_raw=True)
     cleaned = clean_food_orders(raw).cache()
-    delivered_pred = F.col("order_status") == "delivered"
-    delivered = cleaned.filter(delivered_pred)
-    other = cleaned.filter(~delivered_pred | F.col("order_status").isNull())
-    overwrite_table(delivered, delivered_table)
-    overwrite_table(other, other_table)
-    counts = cleaned.agg(
-        F.count("*").alias("total"),
-        F.count(F.when(delivered_pred, 1)).alias("delivered"),
-    ).collect()[0]
-    cleaned.unpersist()
+    try:
+        delivered_pred = F.col("order_status") == "delivered"
+        delivered = cleaned.filter(delivered_pred)
+        other = cleaned.filter(~delivered_pred | F.col("order_status").isNull())
+        overwrite_table(delivered, delivered_table)
+        overwrite_table(other, other_table)
+        counts = cleaned.agg(
+            F.count("*").alias("total"),
+            F.count(F.when(delivered_pred, 1)).alias("delivered"),
+        ).collect()[0]
+    finally:
+        cleaned.unpersist()
+        parsed.unpersist()
     return FoodOrdersResult(
         total_count=counts["total"],
         delivered_count=counts["delivered"],

@@ -2027,16 +2027,6 @@ def q_node_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange); e1, the closure semi-join, and the corner count
     exchange wedge- or node-sized streams only.
     """
-    out, edges = _node_clustering_frame_lazy(spark, sf_dir)
-    out = out.localCheckpoint(eager=True)
-    edges.unpersist()
-    return out
-
-
-def _node_clustering_frame_lazy(spark: SparkSession, sf_dir: str):
-    """q_node_clustering minus the final eager checkpoint; returns
-    (frame, edges) — shared by the query and the plan audit's lazy twin
-    (see q_pagerank_lazy for the blind-root rationale)."""
     from etl_pipeline_spark.queries.analytics_ml import co_purchase_edges
 
     li = load_tables(spark, sf_dir, ("lineitem",))["lineitem"]
@@ -2081,14 +2071,8 @@ def _node_clustering_frame_lazy(spark: SparkSession, sf_dir: str):
             6,
         ).alias("clustering"),
     )
-    return out, und
-
-
-def q_node_clustering_lazy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pre-checkpoint plan-audit twin of q_node_clustering (see
-    q_pagerank_lazy for the rationale). Never executed — plan-only."""
-    out, edges = _node_clustering_frame_lazy(spark, sf_dir)
-    edges.unpersist()  # see q_pagerank_lazy
+    out = out.localCheckpoint(eager=True)
+    und.unpersist()
     return out
 
 
@@ -2145,16 +2129,6 @@ def q_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     form (unknown partitioning, three full edge shuffles at a fixed
     width) at 12.7x/decade — this form exists because of that number.
     """
-    out, edges = _assortativity_frame_lazy(spark, sf_dir)
-    out = out.localCheckpoint(eager=True)
-    edges.unpersist()
-    return out
-
-
-def _assortativity_frame_lazy(spark: SparkSession, sf_dir: str):
-    """q_degree_assortativity minus the final eager checkpoint; returns
-    (frame, edges) — shared by the query and the plan audit's lazy twin
-    (see q_pagerank_lazy for the blind-root rationale)."""
     from etl_pipeline_spark.queries.analytics_ml import pagerank_edges
 
     li = load_tables(spark, sf_dir, ("lineitem",))["lineitem"]
@@ -2182,14 +2156,8 @@ def _assortativity_frame_lazy(spark: SparkSession, sf_dir: str):
             6,
         ).alias("assortativity"),
     )
-    return out, edges
-
-
-def q_degree_assortativity_lazy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pre-checkpoint plan-audit twin of q_degree_assortativity (see
-    q_pagerank_lazy for the rationale). Never executed — plan-only."""
-    out, edges = _assortativity_frame_lazy(spark, sf_dir)
-    edges.unpersist()  # see q_pagerank_lazy
+    out = out.localCheckpoint(eager=True)
+    edges.unpersist()
     return out
 
 
@@ -2262,19 +2230,6 @@ def q_link_prediction_aa(spark: SparkSession, sf_dir: str) -> DataFrame:
     existing-edge exclusion is an anti-join on the narrow (u, v) key;
     top-k plans as TakeOrderedAndProject.
     """
-    out, edges = _aa_frame_lazy(spark, sf_dir)
-    out = out.localCheckpoint(eager=True)
-    edges.unpersist()
-    return out
-
-
-q_link_prediction_aa.__doc__ = q_link_prediction_aa.__doc__.format(K=AA_TOPK)
-
-
-def _aa_frame_lazy(spark: SparkSession, sf_dir: str):
-    """q_link_prediction_aa minus the final eager checkpoint; returns
-    (frame, edges) — shared by the query and the plan audit's lazy twin
-    (see q_pagerank_lazy for the blind-root rationale)."""
     from etl_pipeline_spark.queries.analytics_ml import pagerank_edges
 
     li = load_tables(spark, sf_dir, ("lineitem",))["lineitem"]
@@ -2304,12 +2259,9 @@ def _aa_frame_lazy(spark: SparkSession, sf_dir: str):
         F.col("n_common").cast("long").alias("n_common"),
         "aa_micro",
     ).orderBy(F.desc("aa_micro"), "part_a", "part_b").limit(AA_TOPK)
-    return out, edges
-
-
-def q_link_prediction_aa_lazy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pre-checkpoint plan-audit twin of q_link_prediction_aa (see
-    q_pagerank_lazy for the rationale). Never executed — plan-only."""
-    out, edges = _aa_frame_lazy(spark, sf_dir)
-    edges.unpersist()  # see q_pagerank_lazy
+    out = out.localCheckpoint(eager=True)
+    edges.unpersist()
     return out
+
+
+q_link_prediction_aa.__doc__ = q_link_prediction_aa.__doc__.format(K=AA_TOPK)

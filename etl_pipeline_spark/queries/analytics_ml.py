@@ -312,7 +312,6 @@ def pagerank_edges(li: DataFrame, support: int = PR_SUPPORT) -> DataFrame:
 
 def pagerank_ranks_lazy(
     li: DataFrame | None,
-    checkpoint_last: bool = True,
     hub_broadcast_degree: int | None = None,
     edges: DataFrame | None = None,
 ):
@@ -324,10 +323,9 @@ def pagerank_ranks_lazy(
 
     Edge derivation: co_purchase_edges (shared with q_triangle_count).
 
-    Returns (rank_frame, edges, extra_caches) LAZILY — callers either
-    eagerly checkpoint and unpersist everything (pagerank_ranks, the
-    production path) or audit the un-checkpointed plan
-    (q_pagerank_lazy). extra_caches holds the hub-mode persisted edge
+    Returns (rank_frame, edges, extra_caches) LAZILY — callers
+    eagerly checkpoint and unpersist everything (see pagerank_ranks,
+    what q_pagerank runs). extra_caches holds the hub-mode persisted edge
     splits ([] when hub_broadcast_degree is None); callers must
     unpersist them alongside edges.
 
@@ -403,7 +401,7 @@ def pagerank_ranks_lazy(
             .persist()
         )
         edges_cold = edges.join(F.broadcast(hot_nodes), "u", "left_anti").persist()
-    for it in range(PR_ITERS):
+    for _ in range(PR_ITERS):
         contrib = r.select(F.col("node"), F.expr("r div od").alias("c"))
         if hub_broadcast_degree is None:
             inc = (
@@ -446,12 +444,7 @@ def pagerank_ranks_lazy(
             ).alias("r"),
             "_n",
         )
-        # checkpoint_last=False is the plan-audit form: even a LAZY
-        # checkpoint plans as a bare `Scan ExistingRDD`, so auditing
-        # requires the final round left un-truncated (the audited plan
-        # is then one real round: the repeating unit at scale)
-        if checkpoint_last or it < PR_ITERS - 1:
-            r = r.localCheckpoint(eager=False)
+        r = r.localCheckpoint(eager=False)
     out = r.select(
         "node", F.col("od").cast("long").alias("degree"), F.col("r").alias("rank_scaled")
     )
@@ -488,23 +481,6 @@ def pagerank_ranks(
     for c in extra:
         c.unpersist()
     return out
-
-
-def q_pagerank_lazy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pre-checkpoint (lazy) form of q_pagerank for the plan audit: an
-    eagerly checkpointed result plans as a bare `Scan ExistingRDD`,
-    which blinded tools/plan_audit.py to the iterative plan it exists
-    to police (r8 judge finding). This twin is the SAME construction
-    minus the final eager checkpoint, so the audit sees the real
-    final-iteration join/aggregate shape. Never executed — plan-only."""
-    li = load_tables(spark, sf_dir, ("lineitem",))["lineitem"]
-    out, edges, _extra = pagerank_ranks_lazy(li, checkpoint_last=False)
-    # release the never-materialized persist registration immediately:
-    # "plan-only" is a caller promise, and a later same-session action
-    # whose plan matches the cached fragment would otherwise materialize
-    # blocks no code path releases (review find, r9)
-    edges.unpersist()
-    return out.orderBy(F.desc("rank_scaled"), "node").limit(PR_TOPK)
 
 
 q_pagerank.__doc__ = q_pagerank.__doc__.format(I=PR_ITERS, K=PR_TOPK)
@@ -587,27 +563,9 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     The per-dst argmax is a struct-min aggregate, not a window — no
     single-partition stage anywhere.
     """
-    out, edges = _lpa_frame_lazy(spark, sf_dir)
-    out = out.localCheckpoint(eager=True)
-    edges.unpersist()
-    return out
-
-
-q_label_propagation.__doc__ = q_label_propagation.__doc__.format(
-    I=LPA_ITERS, K=LPA_TOPK
-)
-
-
-def _lpa_frame_lazy(
-    spark: SparkSession, sf_dir: str, checkpoint_last: bool = True
-):
-    """q_label_propagation's construction minus the final eager
-    checkpoint; returns (frame, edges). Shared by the query (which
-    checkpoints and unpersists) and q_label_propagation_lazy (which
-    the plan audit uses to see the real iterative plan)."""
     li = load_tables(spark, sf_dir, ("lineitem",))["lineitem"]
     edges = pagerank_edges(li)
-    labels = lpa_labels(edges, checkpoint_last=checkpoint_last)
+    labels = lpa_labels(edges)
     out = (
         labels.groupBy("label")
         .agg(
@@ -624,21 +582,19 @@ def _lpa_frame_lazy(
         .orderBy(F.desc("n_members"), "community")
         .limit(LPA_TOPK)
     )
-    return out, edges
-
-
-def q_label_propagation_lazy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pre-checkpoint plan-audit twin of q_label_propagation (see
-    q_pagerank_lazy for the rationale). Never executed — plan-only."""
-    out, edges = _lpa_frame_lazy(spark, sf_dir, checkpoint_last=False)
-    edges.unpersist()  # see q_pagerank_lazy
+    out = out.localCheckpoint(eager=True)
+    edges.unpersist()
     return out
+
+
+q_label_propagation.__doc__ = q_label_propagation.__doc__.format(
+    I=LPA_ITERS, K=LPA_TOPK
+)
 
 
 def lpa_labels(
     edges: DataFrame,
     iters: int = LPA_ITERS,
-    checkpoint_last: bool = True,
     eager_rounds: bool = False,
     round_splits: int = 1,
 ) -> DataFrame:
@@ -696,7 +652,7 @@ def lpa_labels(
             .select(F.col("dst").alias("node"), F.col("s.label").alias("label"))
         )
 
-    for it in range(iters):
+    for _ in range(iters):
         if round_splits > 1:
             parts = [
                 # eager per-pass: this pass's join/groupBy shuffles are
@@ -713,10 +669,7 @@ def lpa_labels(
             # nothing further to checkpoint for scratch bounding
             continue
         labels = round_labels(edges, labels)
-        # see pagerank_ranks_lazy: the audit form leaves the final round
-        # un-checkpointed so the plan shows the real per-round shape
-        if checkpoint_last or it < iters - 1:
-            labels = labels.localCheckpoint(eager=eager_rounds)
+        labels = labels.localCheckpoint(eager=eager_rounds)
     return labels
 
 
@@ -2298,7 +2251,9 @@ def q_kcore_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     key — the edge frame never re-shuffles (q_pagerank's
     exchange-budget argument) and the alive vector only shrinks.
     """
-    out, edges = _kcore_frame_lazy(spark, sf_dir)
+    li = load_tables(spark, sf_dir, ("lineitem",))["lineitem"]
+    edges = pagerank_edges(li)
+    out = kcore_peel(edges)
     out = out.localCheckpoint(eager=True)
     edges.unpersist()
     return out
@@ -2311,7 +2266,6 @@ def kcore_peel(
     edges: DataFrame,
     k: int = KCORE_K,
     rounds: int = KCORE_ROUNDS,
-    checkpoint_last: bool = True,
     early_exit: bool = True,
 ) -> DataFrame:
     """Fixed-round synchronous k-core peel over a directed both-ways
@@ -2332,14 +2286,14 @@ def kcore_peel(
     round past the fixpoint is an identity, so the result is exactly
     the fixed-``rounds`` answer (the unrolled oracle still matches).
     Costs one count() action per round, so the rounds materialize
-    eagerly — callers that must stay plan-only (the audit's lazy twin)
-    pass early_exit=False."""
+    eagerly; early_exit=False runs all ``rounds`` lazily (the reference
+    form tests/test_r8_operators.py compares against)."""
     alive = edges.select(F.col("u").alias("node")).distinct().localCheckpoint(
         eager=False
     )
     deg = None
     prev_n = None
-    for it in range(rounds):
+    for _ in range(rounds):
         au = alive.select(F.col("node").alias("un"))
         av = alive.select(F.col("node").alias("vn"))
         deg = (
@@ -2348,10 +2302,7 @@ def kcore_peel(
             .groupBy(edges["u"].alias("node"))
             .agg(F.count("*").alias("deg"))
         )
-        # see pagerank_ranks_lazy: the audit form leaves the final round
-        # un-checkpointed so the plan shows the real peel-round shape
-        if checkpoint_last or it < rounds - 1:
-            deg = deg.localCheckpoint(eager=False)
+        deg = deg.localCheckpoint(eager=False)
         alive = deg.filter(F.col("deg") >= k).select("node")
         if early_exit:
             alive = alive.localCheckpoint(eager=True)
@@ -2363,30 +2314,6 @@ def kcore_peel(
         F.col("node").cast("long").alias("node"),
         F.col("deg").cast("long").alias("core_degree"),
     )
-
-
-def _kcore_frame_lazy(
-    spark: SparkSession, sf_dir: str, checkpoint_last: bool = True
-):
-    """q_kcore_nodes' construction minus the final eager checkpoint;
-    returns (frame, edges). Shared by the query (which checkpoints and
-    unpersists) and q_kcore_nodes_lazy (which the plan audit uses to
-    see the real peel-round plan)."""
-    li = load_tables(spark, sf_dir, ("lineitem",))["lineitem"]
-    edges = pagerank_edges(li)
-    # the lazy (plan-only) form must not run actions: no early exit
-    out = kcore_peel(
-        edges, checkpoint_last=checkpoint_last, early_exit=checkpoint_last
-    )
-    return out, edges
-
-
-def q_kcore_nodes_lazy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pre-checkpoint plan-audit twin of q_kcore_nodes (see
-    q_pagerank_lazy for the rationale). Never executed — plan-only."""
-    out, edges = _kcore_frame_lazy(spark, sf_dir, checkpoint_last=False)
-    edges.unpersist()  # see q_pagerank_lazy
-    return out
 
 
 @query(
@@ -2416,13 +2343,3 @@ def q_kcore_support1(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 q_kcore_support1.__doc__ = q_kcore_support1.__doc__.format(K=KCORE_K)
-
-
-def q_kcore_support1_lazy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pre-checkpoint plan-audit twin of q_kcore_support1 (see
-    q_pagerank_lazy for the rationale). Never executed — plan-only."""
-    li = load_tables(spark, sf_dir, ("lineitem",))["lineitem"]
-    edges = pagerank_edges(li, support=1)
-    out = kcore_peel(edges, checkpoint_last=False, early_exit=False)
-    edges.unpersist()  # see q_pagerank_lazy
-    return out

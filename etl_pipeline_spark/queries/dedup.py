@@ -69,6 +69,7 @@ from etl_pipeline_spark.functions.shingles import (
     word_shingles,
 )
 from etl_pipeline_spark.operators.minhash import xxhash_minhash_from_hashed
+from etl_pipeline_spark.operators.ranking import global_row_number
 from etl_pipeline_spark.operators.semdedup import (
     semdedup_assign,
     semdedup_pairs,
@@ -1379,16 +1380,16 @@ def q_snm_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: sorting is the shuffle Spark does best; the neighborhood
     expansion is a bounded {W}-row fan-out joined on rank (the
     covered-days trick), never a self-join on the key. The global rank
-    decomposes into range-partitioned ranks + broadcast prefix offsets
-    at cluster scale (same note as q_corpus_gini).
+    is range-partitioned ranks + broadcast prefix offsets
+    (operators/ranking.py), never a single-partition window.
     """
     d = load_tables(spark, sf_dir, ("documents",))["documents"]
     key = F.substring(
         F.lower(F.regexp_replace(F.trim(F.col("text")), r"\s+", " ")), 1, SNM_PREFIX_CHARS
     )
-    ranked = d.select(
-        "doc_id", F.row_number().over(W.orderBy(key, F.col("doc_id"))).alias("r")
-    ).localCheckpoint(eager=False)
+    ranked = global_row_number(
+        d.select("doc_id", key.alias("k")), [F.col("k"), F.col("doc_id")], "r"
+    ).select("doc_id", "r")
     probes = ranked.select(
         F.col("doc_id").alias("id_a"),
         F.explode(F.sequence(F.col("r") + 1, F.col("r") + SNM_WINDOW)).alias("r"),

@@ -215,34 +215,3 @@ def q_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     comp = connected_components(nodes, edges, rounds_per_job=rounds_per_job)
     return wcc_summary(edges, comp)
-
-
-def q_connected_components_lazy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Plan-audit twin (never executed): the public form's label frame is
-    an eager per-round checkpoint, so its executed plan hides the
-    repeating iteration unit behind a checkpoint scan. This twin builds
-    the co-purchase edges plus ONE un-checkpointed cc_round plus the full
-    summary aggregation — the join/aggregate shape that repeats at scale,
-    same pattern as dedup_clusters_lazy (operators/cluster.py)."""
-    from etl_pipeline_spark.operators.cluster import cc_round
-    from etl_pipeline_spark.queries.analytics_ml import co_purchase_edges
-
-    li = load_tables(spark, sf_dir, ("lineitem",))["lineitem"]
-    edges = co_purchase_edges(li, TRI_SUPPORT).select(
-        F.col("u").alias("src"), F.col("v").alias("dst")
-    )
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select("dst"))
-        .distinct()
-    )
-    sym = (
-        edges.select("src", "dst")
-        .union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .union(nodes.select(F.col("node").alias("src"), F.col("node").alias("dst")))
-    )
-    labels = nodes.select(F.col("node"), F.col("node").alias("label"))
-    comp = cc_round(sym, labels).select(
-        "node", F.col("label").alias("cluster_id")
-    )
-    return wcc_summary(edges, comp)

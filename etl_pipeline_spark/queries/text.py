@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from etl_pipeline_spark.catalog import EMB_DOOR_SQL, embedding_door, load_tables
 from etl_pipeline_spark.functions.shingles import bigrams, doc_terms
+from etl_pipeline_spark.operators.ranking import global_row_number
 from etl_pipeline_spark.queries.base import query
 
 # BPE-ish pre-tokenizer: letter runs, digit runs, or single non-space symbol
@@ -1037,17 +1038,15 @@ def q_corpus_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents dominate training (the doc-level twin of the source-mix
     and domain-cap queries).
 
-    Scale: one global ascending rank (at 100 TB: sort by the value key
-    range-partitioned, then per-partition counts + a broadcast prefix
-    offset — the standard distributed ranking decomposition), then a
+    Scale: one global ascending rank, range-partitioned with per-partition
+    counts and a broadcast prefix offset (operators/ranking.py), then a
     3-term integer aggregate. The rank-sum identity avoids materializing
     a Lorenz curve.
     """
     d = load_tables(spark, sf_dir, ("documents",))["documents"]
-    ranked = d.select(
-        "n_chars",
-        F.row_number().over(W.orderBy(F.asc("n_chars"), F.asc("doc_id"))).alias("i"),
-    ).localCheckpoint(eager=False)
+    ranked = global_row_number(
+        d.select("n_chars", "doc_id"), [F.asc("n_chars"), F.asc("doc_id")], "i"
+    ).select("n_chars", "i")
     s = ranked.agg(
         F.count("*").alias("n"),
         F.sum("n_chars").alias("total"),

@@ -48,3 +48,26 @@ def test_daily_report(result):
     assert rep["2024-01-01"]["n_orders"] == 1
     assert rep["2024-01-01"]["revenue"] == 25.50
     assert rep["2024-01-02"]["revenue"] == 40.00
+
+
+def test_pipeline_releases_its_caches(spark, tmp_path):
+    """A call leaves nothing cached: the PERMISSIVE read's cache entry is
+    gone (a new read of the same file is not served from it) and no
+    persisted RDD is left behind, so calls over many files do not pile
+    up cached inputs."""
+    from pyspark import StorageLevel
+
+    from etl_pipeline_spark.pipelines.food_orders import FOOD_SCHEMA
+    from etl_pipeline_spark.sources.readers import permissive
+
+    p = tmp_path / "food_daily.csv"
+    p.write_text(CSV)
+    held = spark.sparkContext._jsc.getPersistentRDDs().size
+    before = held()
+    res = run_food_orders_pipeline(
+        spark, str(p), delivered_table="delivered_rel", other_table="other_rel"
+    )
+    assert (res.total_count, res.delivered_count) == (4, 2)
+    read = permissive(spark.read, FOOD_SCHEMA).option("header", "true").csv(str(p))
+    assert read.storageLevel == StorageLevel.NONE
+    assert held() <= before

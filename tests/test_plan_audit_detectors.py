@@ -4,6 +4,7 @@ built in-session (audit_plan is a pure function over the plan string)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -326,37 +327,78 @@ def test_executed_audit_flags_and_errors(spark):
     assert fails == ["q_boom", "q_wide"] or fails == ["q_wide", "q_boom"]
 
 
-def test_is_checkpoint_root_detects_blind_shape(spark):
-    """The r8 judge finding, mechanized: an eagerly localCheckpointed
-    result plans as a bare `Scan ExistingRDD` that the audit must
-    detect (and re-route to the query's lazy form); a real aggregate
-    plan must not trip the detector."""
-    from tools.plan_audit import is_checkpoint_root
+def test_recorder_sees_the_plan_behind_an_eager_checkpoint(spark):
+    """An eagerly checkpointed result plans as a bare `Scan ExistingRDD`;
+    the recorder keeps the executed plan of the checkpoint itself, so
+    the aggregate and its exchange stay in the audit's sight."""
+    from tools.plan_audit import recorded_plans
 
-    ck = spark.range(100).selectExpr("id % 5 AS k").groupBy("k").count()
-    ck = ck.localCheckpoint(eager=True)
-    assert is_checkpoint_root(ck._jdf.queryExecution().executedPlan().toString())
+    with recorded_plans(spark) as built:
+        ck = (
+            spark.range(100)
+            .selectExpr("id % 5 AS k")
+            .groupBy("k")
+            .count()
+            .localCheckpoint(eager=True)
+        )
+    final = _plan(ck)
+    assert "Scan ExistingRDD" in final and "Exchange" not in final
+    plans = [p.toString() for p in built]
+    assert any(
+        "HashAggregate" in p and "Exchange hashpartitioning" in p for p in plans
+    ), plans
 
-    real = spark.range(100).selectExpr("id % 5 AS k").groupBy("k").count()
-    assert not is_checkpoint_root(
-        real._jdf.queryExecution().executedPlan().toString()
-    )
+
+def test_recorder_unregisters_on_exit(spark):
+    """On exit the recorder leaves the session's listeners as it found
+    them, also when another listener is registered beside it (removal
+    then compares the two), and a later action records nothing."""
+    from tools.plan_audit import recorded_plans
+
+    manager = spark._jsparkSession.listenerManager()
+    before = len(manager.listListeners())
+    with recorded_plans(spark) as outer:
+        with recorded_plans(spark) as built:
+            spark.range(10).count()
+        assert len(manager.listListeners()) == before + 1
+    n = len(built)
+    assert n >= 1 and len(outer) == n
+    assert len(manager.listListeners()) == before
+    spark.range(20).count()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(built) == n and len(outer) == n
 
 
-def test_lazy_forms_expose_real_iterative_plans(spark):
-    """Every registered lazy-form twin must produce a NON-blind plan
-    with at least one exchange — the audit rows for the iterative graph
-    queries must show real shuffle/node counts, not '0 shuffles, 1
-    node' (r8 judge finding)."""
-    from tools.plan_audit import _lazy_forms, audit_plan, is_checkpoint_root
+@pytest.mark.parametrize(
+    "name",
+    [
+        "q_pagerank",
+        "q_label_propagation",
+        "q_kcore_nodes",
+        "q_kcore_support1",
+        "q_node_clustering",
+        "q_degree_assortativity",
+        "q_link_prediction_aa",
+        "q_connected_components",
+        "q_dedup_clusters",
+    ],
+)
+def test_recorded_plans_show_iterative_rounds(spark, name):
+    """The iterative graph queries end in an eager checkpoint; the plans
+    their build executes must show the rounds: at least one exchange,
+    and the scan of the persisted edge frame every round reads."""
+    from conftest import SF_SMOKE
 
-    for name, fn in _lazy_forms().items():
-        df = fn(spark, "/root/testdata/sf0.001")
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert not is_checkpoint_root(plan), name
-        _flags, n_ex, _n_bc, n_nodes = audit_plan(plan)
-        assert n_ex >= 1, (name, plan[:400])
-        assert n_nodes > 4, name
+    from etl_pipeline_spark.queries.base import all_specs
+    from etl_pipeline_spark.session import release_session_blocks
+    from tools.plan_audit import recorded_plans
+
+    with recorded_plans(spark) as built:
+        all_specs()[name].fn(spark, SF_SMOKE)
+    plans = [p.toString() for p in built]
+    release_session_blocks(spark)
+    assert any("Exchange" in p for p in plans), name
+    assert any("InMemoryTableScan" in p for p in plans), name
 
 
 def test_generated_broadcast_fires_on_unhinted_posting_self_join(spark):

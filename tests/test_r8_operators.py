@@ -463,3 +463,33 @@ def test_lpa_round_splits_equivalence(spark):
         }
         assert split == base, k
     edges.unpersist()
+
+
+def test_global_row_number_matches_the_single_partition_window(spark):
+    """operators/ranking.global_row_number must give exactly the numbers
+    of ``row_number() OVER (ORDER BY ...)`` when the rows are spread over
+    several range partitions (coalescing off, so they stay several):
+    ties on the first key, nulls first, and the tie-break column."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from conftest import session_conf
+    from etl_pipeline_spark.operators.ranking import global_row_number
+
+    df = spark.range(2000).select(
+        F.when(F.col("id") % 97 == 0, None)
+        .otherwise(F.col("id") % 37)
+        .alias("k"),
+        "id",
+    )
+    order = [F.col("k"), F.col("id")]
+    want = {
+        (r["id"], r["r"])
+        for r in df.select("id", F.row_number().over(Window.orderBy(*order)).alias("r"))
+        .collect()
+    }
+    with session_conf(spark, {"spark.sql.adaptive.coalescePartitions.enabled": "false"}):
+        ranked = global_row_number(df, order, "r")
+        got = {(r["id"], r["r"]) for r in ranked.collect()}
+        assert ranked.select(F.spark_partition_id()).distinct().count() > 1
+    assert got == want

@@ -124,29 +124,29 @@ def main() -> None:
         "`AdaptiveSparkPlan` marks runtime re-planning (AQE).",
         "",
     ]
-    # Iterative fixpoint queries execute eager per-round checkpoints at
-    # CONSTRUCTION time, so their public form's plan is a blind
-    # `Scan ExistingRDD` stub (q_pagerank rendered as 2 nodes here until
-    # r14). Render the plan-audit lazy twins instead — the repeating
-    # per-round join/aggregate shape, same substitution plan_audit makes.
-    from plan_audit import _lazy_forms
+    # Iterative fixpoint queries run eager checkpoints while they are
+    # built, so their final plan is a bare `Scan ExistingRDD`. Record
+    # the plans the build executes and render the largest one that
+    # shuffles: the per-round join/aggregate shape that repeats at scale
+    # (the temp-view commands of the table loads shuffle nothing).
+    from plan_audit import recorded_plans
 
-    lazy = _lazy_forms()
     for name in BENCH_QUERIES + SCALE_QUERIES + EXTRA_QUERIES:
-        note = ""
-        if name in lazy:
-            df = lazy[name](spark, sf)
-            note = (
-                "(pre-checkpoint lazy twin — the public form's executed "
-                "plan is a checkpoint scan; this is the per-round shape "
-                "that repeats at scale)"
-            )
-        else:
+        with recorded_plans(spark) as built:
             df = specs[name].fn(spark, sf)
-        parts += [f"## {name}", ""]
-        if note:
-            parts += [note, ""]
-        parts += ["```", trim(formatted_plan(df)), "```", ""]
+        parts += [f"## {name}", "", "```", trim(formatted_plan(df)), "```", ""]
+        rounds = [p.toString() for p in built]
+        rounds = [p for p in rounds if "Exchange" in p]
+        if rounds:
+            largest = max(rounds, key=lambda p: len(p.splitlines()))
+            parts += [
+                f"Largest of the {len(rounds)} shuffling plans its build executed:",
+                "",
+                "```",
+                trim(largest),
+                "```",
+                "",
+            ]
     # fold in the measured skew comparison (tools/skew_compare.py) so the
     # evidence survives PLANS.md regeneration
     skew = os.path.join(REPO, "SKEW_COMPARE.md")

@@ -1,7 +1,10 @@
-"""Anti-pattern audit across EVERY registered query's physical plan —
-the automated version of the judge's scale-killer scan. For each of the
-registry's queries (built at sf0.01, planning only, nothing executed)
-it records:
+"""Anti-pattern audit across EVERY registered query's physical plans —
+the automated version of the judge's scale-killer scan. Each of the
+registry's queries is built at sf0.01 inside ``recorded_plans``, which
+keeps the executed plan of every SQL execution the build itself runs
+(eager checkpoints, counts, collects); the query's final plan is then
+planned, not executed. The detectors run over all of those plans and
+record:
 
 - ``CartesianProduct``: a non-broadcast cartesian join — quadratic row
   explosion at scale (broadcast nested-loop joins of 1-row/bounded
@@ -35,7 +38,7 @@ it records:
   (text ~100:1 — the r6 sf10 driver-OOM incident). Hard failure
   unless WIDE_BROADCAST_BOUNDED states why the side is input-bounded
   by construction.
-- ``generated-broadcast`` (executed pass only): a BroadcastExchange
+- ``generated-broadcast`` (executed plans only): a BroadcastExchange
   whose subtree reaches a ``Generate`` with no exchange in between.
   Without an exchange below it, AQE has no runtime size for that side,
   so the broadcast was admitted on a static estimate taken BEFORE the
@@ -45,18 +48,19 @@ it records:
 - exchange count (hash + range shuffles), broadcast count, and plan
   node count, for the record.
 
-Writes PLAN_AUDIT.md with one row per query plus a summary; exits
-non-zero if a hard anti-pattern (cartesian, row-python, undocumented
-global-window) appears so the audit can gate CI.
+Writes PLAN_AUDIT.md with one row per query plus a summary (shuffles
+and broadcasts summed over the query's plans, nodes of its largest
+plan); exits non-zero if a hard anti-pattern (cartesian, row-python,
+undocumented global-window) appears so the audit can gate CI.
 
-Two passes (r7): the STATIC sweep above covers every registered
-query at planning time; a DYNAMIC pass then EXECUTES the bench + scale
-sets and the posting self-join family at sf0.01 and re-runs the
-wide-column and generated-broadcast detectors over each FINAL adaptive
-plan, because AQE can convert a sort-merge join to a broadcast at
-runtime (the r6 sf10 driver-OOM mechanism) in ways no static plan
-shows. Findings from either pass hard-fail unless
-allowlisted below.
+Two passes (r7): the sweep above covers every registered query (the
+plans its build executed, and its final plan, planned only); a DYNAMIC
+pass then EXECUTES the bench + scale sets and the posting self-join
+family at sf0.01 and re-runs the wide-column and generated-broadcast
+detectors over each FINAL adaptive plan, because AQE can convert a
+sort-merge join to a broadcast at runtime (the r6 sf10 driver-OOM
+mechanism) in ways no unexecuted plan shows. Findings from either pass
+hard-fail unless allowlisted below.
 
 Intentional exceptions live in the expected-flags tables below and are
 ASSERTED to still fire: an allowlist entry whose flag no longer appears
@@ -71,88 +75,73 @@ from __future__ import annotations
 import os
 import re
 import sys
+from contextlib import contextmanager
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from etl_pipeline_spark.queries.base import REGISTRY, all_specs
-from etl_pipeline_spark.session import get_spark
+from etl_pipeline_spark.session import get_spark, release_session_blocks
 
 SF = "/root/testdata/sf0.01"
 
 # Plan trees past this many nodes risk planning-time blowup (driver CPU
-# and memory scale with tree size under AQE re-planning); the ceiling is
-# ~2x the largest legitimate unrolled-iteration plan at HEAD
+# and memory scale with tree size under AQE re-planning); the ceiling was
+# set at ~2x the largest legitimate unrolled-iteration plan then
 # (q_pca_top_component, 718 nodes) so growth is caught while it is
-# still one checkpoint away from fixable.
+# still one checkpoint away from fixable. The largest recorded build
+# plan is q_node_clustering's wedge census, 909 nodes at sf0.01.
 PLAN_NODE_CEILING = 1500
 
-# Queries whose public form ends in an EAGER localCheckpoint (iterative
-# fixpoints that must materialize to truncate lineage and release their
-# persisted edge cache): their executed plan is a bare checkpoint scan —
-# `Scan ExistingRDD`, ~1-2 nodes, zero exchanges — which blinds this
-# audit to the very iterative plans it polices (r8 judge finding: LPA
-# and k-core recorded as "0 shuffles, 1 plan node"). Each entry maps the
-# query to its exposed PRE-CHECKPOINT twin, which is audited instead.
-# The twin still truncates at the per-round lazy checkpoints, so the
-# audited plan is the FINAL ROUND's join/aggregate shape — the unit that
-# repeats at scale — not the full unrolled recursion.
-# `is_checkpoint_root` detects the blind shape; a query that exhibits it
-# WITHOUT an entry here hard-fails, so future eager-checkpoint queries
-# cannot silently opt out of the audit.
-def _lazy_forms():
-    from etl_pipeline_spark.operators.cluster import dedup_clusters_lazy
-    from etl_pipeline_spark.queries.advanced_behavioral import (
-        q_degree_assortativity_lazy,
-        q_link_prediction_aa_lazy,
-        q_node_clustering_lazy,
-    )
-    from etl_pipeline_spark.queries.analytics_ml import (
-        q_kcore_nodes_lazy,
-        q_kcore_support1_lazy,
-        q_label_propagation_lazy,
-        q_pagerank_lazy,
-    )
-    from etl_pipeline_spark.queries.graph_components import (
-        q_connected_components_lazy,
-    )
 
-    return {
-        "q_pagerank": q_pagerank_lazy,
-        "q_label_propagation": q_label_propagation_lazy,
-        "q_kcore_nodes": q_kcore_nodes_lazy,
-        # r10: the support-1 peel registered as an oracle query (r9
-        # judge #2) gets the same audit twin as its support-2 sibling
-        "q_kcore_support1": q_kcore_support1_lazy,
-        # the detector's own find (the judge listed three; this was the
-        # fourth blind query): the CC fixpoint eagerly checkpoints per
-        # round for convergence observation
-        "q_dedup_clusters": dedup_clusters_lazy,
-        # r14: the co-purchase WCC census shares the CC fixpoint's eager
-        # per-round checkpoints; audit the one-round + summary twin
-        "q_connected_components": q_connected_components_lazy,
-        # r9: rewritten onto the persisted edge frame after its sf10
-        # slope exposed the lazily-checkpointed triple-shuffle form
-        "q_degree_assortativity": q_degree_assortativity_lazy,
-        # r9: same persisted-edge rewrite (wedge legs join on the edge
-        # source key, so the whole wedge census reuses one partitioning)
-        "q_link_prediction_aa": q_link_prediction_aa_lazy,
-        # r10: same persisted-edge rewrite (id-oriented wedge census kept
-        # — orientation beats exchange count here, measured at sf10)
-        "q_node_clustering": q_node_clustering_lazy,
-    }
+class _PlanRecorder:
+    """Python side of a py4j ``QueryExecutionListener``: keeps the
+    executed plan of every SQL execution the session finishes."""
+
+    def __init__(self) -> None:
+        self.plans: list = []
+
+    def onSuccess(self, _func, qe, _duration_ns) -> None:  # noqa: N802
+        self.plans.append(qe.executedPlan())
+
+    def onFailure(self, _func, qe, _exception) -> None:  # noqa: N802
+        self.plans.append(qe.executedPlan())
+
+    # Java calls these on the proxy too: unregistering compares the
+    # other listeners of the session with it
+    def equals(self, other) -> bool:
+        return other is self
+
+    def hashCode(self) -> int:  # noqa: N802
+        return id(self) & 0x7FFFFFFF
+
+    class Java:
+        implements = ["org.apache.spark.sql.util.QueryExecutionListener"]
 
 
-def is_checkpoint_root(plan: str) -> bool:
-    """True when a query's executed plan is nothing but a scan of an
-    already-materialized (checkpointed) RDD — the audit-blind shape.
-    Pure over the plan string so tests can drive it."""
-    lines = [ln for ln in plan.splitlines() if ln.strip()]
-    return (
-        "Scan ExistingRDD" in plan
-        and "Exchange" not in plan
-        and len(lines) <= 4
-    )
+@contextmanager
+def recorded_plans(spark):
+    """Record the executed plan of every SQL execution started inside the
+    block — the eager checkpoints, counts and collects an iterative query
+    runs while it is being built, whose plans its final plan (a bare
+    `Scan ExistingRDD` after an eager checkpoint) no longer shows. Yields
+    a list that is complete once the block exits."""
+    from pyspark.java_gateway import ensure_callback_server_started
+
+    ensure_callback_server_started(spark.sparkContext._gateway)
+    recorder = _PlanRecorder()
+    manager = spark._jsparkSession.listenerManager()
+    manager.register(recorder)
+    # py4j hands Java a new proxy on every call and Spark unregisters by
+    # reference, so keep the proxy the manager now holds (the last one)
+    held = manager.listListeners()
+    proxy = held[len(held) - 1]
+    try:
+        yield recorder.plans
+    finally:
+        # execution-end events reach listeners asynchronously
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        manager.unregister(proxy)
 
 
 # Queries whose flagged node is the documented point of the query.
@@ -220,6 +209,8 @@ WIDE_BROADCAST_BOUNDED: dict[str, str] = {
     "q_knn_pq": "256-cap codebook + per-query distance maps",
     "q_hard_negatives": "fixed query set (explicit broadcast)",
     "q_knn_classifier_eval": "fixed eval query set (explicit broadcast)",
+    "q_kmeans_lloyd": "k-row integer centroid table (explicit broadcast)",
+    "q_mmr_rerank": "1-row query vector + limit-capped candidate pool",
 }
 
 # The shingle self-join family (functions/shingles.py overlap_pairs and
@@ -240,6 +231,8 @@ GENERATED_BROADCAST_BOUNDED: dict[str, str] = {
     "q_knn_pq": "explicit codebook broadcast: <= 256 centroids x 8 subspaces",
     # ROADMAP item 4: make the per-distinct-bigram score table the build side
     "q_lm_bigram_score": "OPEN: whole bigram stream (2.66E+5 rows at sf0.1) on the text-scan estimate",
+    # ROADMAP item 1: the candidate self-join broadcasts one posexploded side
+    "q_dedup_minhash_lsh": "OPEN: docs x LSH tables bucket rows on the signature checkpoint's estimate",
 }
 
 # Global windows whose input is structurally bounded far below the
@@ -253,6 +246,7 @@ GLOBAL_WINDOW_BOUNDED: dict[str, str] = {
     "q_cliffs_delta": "distinct-value collapse before ranking",
     "q_poisson_bootstrap_ci": "B bootstrap replicas after map-combine",
     "q_seasonal_anomaly_days": "day-keyed series after one aggregate",
+    "q_seasonal_decompose": "day-keyed series after one aggregate",
     "q_linear_interp_gapfill": "densified day spine (horizon-sized, not event-sized)",
     "q_skyline_parts": "distinct prices (catalog-bounded)",
     "q_text_zipf_fit": "vocabulary-sized after term-count collapse (Heaps-sublinear)",
@@ -319,9 +313,10 @@ def extract_plan_tree(jnode) -> dict:
         # executedPlan is the CURRENT adaptive tree: identical to
         # initialPlan before any execution, and the re-planned final tree
         # (including runtime SMJ->broadcast conversions) once the query has
-        # run. The audit sweep builds plans without executing them, so ITS
-        # verdicts are static-plan-scoped: an AQE runtime conversion of a
-        # wide side is out of the sweep's sight, which is why the corpus
+        # run. The audit sweep does not execute a query's final plan, so
+        # that plan's verdicts are static-plan-scoped: an AQE runtime
+        # conversion of a wide side is out of the sweep's sight, which is
+        # why the corpus
         # queries pin `merge` hints rather than rely on this gate alone.
         # Callers that execute first (soak tools, plan-assert tests) get
         # the final adaptive plan through this same entry point.
@@ -489,6 +484,36 @@ def stale_allowlist_entries(observed: dict[str, set[str]]) -> list[str]:
     return stale
 
 
+def audit_query_plans(built: list, final) -> tuple[set[str], int, int, int, dict]:
+    """Run the detectors over one query's plans: ``built``, the executed
+    plans its build ran (from ``recorded_plans``), and ``final``, its
+    planned but unexecuted final plan. Returns (flags, shuffles summed,
+    broadcasts summed, nodes of the largest plan, {tree flag: findings});
+    generated-broadcast needs runtime sizes, so it reads executed plans
+    only."""
+    flags: set[str] = set()
+    n_ex = n_bc = n_nodes = 0
+    finds: dict[str, set[str]] = {}
+    for jp in [*built, final]:
+        plan = jp.toString()
+        f, e, b, n = audit_plan(plan)
+        flags |= f
+        n_ex, n_bc, n_nodes = n_ex + e, n_bc + b, max(n_nodes, n)
+        if "Join" not in plan and "Broadcast" not in plan:
+            continue
+        tree = extract_plan_tree(jp)
+        found = {"wide-broadcast": wide_broadcast_findings(tree)}
+        if "SortMergeJoin" in plan or "ShuffledHashJoin" in plan:
+            found["wide-shuffle"] = wide_join_shuffle_findings(tree)
+        if jp is not final:
+            found["generated-broadcast"] = generated_broadcast_findings(tree)
+        for flag, cols in found.items():
+            if cols:
+                finds.setdefault(flag, set()).update(cols)
+    flags |= set(finds)
+    return flags, n_ex, n_bc, n_nodes, {k: sorted(v) for k, v in finds.items()}
+
+
 def executed_audit(
     spark, specs, names: list[str], sf: str
 ) -> tuple[list[tuple[str, str, str]], list[str]]:
@@ -577,59 +602,32 @@ def main() -> None:
     rows = []
     hard_fail: list[str] = []
     observed: dict[str, set[str]] = {}
-    lazy_forms = _lazy_forms()
-    for lf in lazy_forms:
-        if lf not in REGISTRY:
-            raise SystemExit(f"lazy-form table names unknown query: {lf}")
+    bounded = {
+        "wide-shuffle": WIDE_SHUFFLE_BOUNDED,
+        "wide-broadcast": WIDE_BROADCAST_BOUNDED,
+        "generated-broadcast": GENERATED_BROADCAST_BOUNDED,
+    }
     for name, spec in specs.items():
-        lazy_note = ""
         try:
-            df = spec.fn(spark, SF)
-            plan = df._jdf.queryExecution().executedPlan().toString()
-            if is_checkpoint_root(plan):
-                if name in lazy_forms:
-                    # re-audit the exposed pre-checkpoint twin: the real
-                    # final-round iterative plan, not the bare RDD scan
-                    df = lazy_forms[name](spark, SF)
-                    plan = df._jdf.queryExecution().executedPlan().toString()
-                    lazy_note = "lazy-form"
-                else:
-                    rows.append((name, 0, 0, 1, "CHECKPOINT-BLIND: no lazy form"))
-                    hard_fail.append(name)
-                    continue
+            with recorded_plans(spark) as built:
+                df = spec.fn(spark, SF)
+            flags, n_ex, n_bc, n_nodes, finds = audit_query_plans(
+                built, df._jdf.queryExecution().executedPlan()
+            )
+            # the builds run checkpoints and persists; 279 of them in one
+            # session must not pile up
+            release_session_blocks(spark)
         except Exception as ex:  # noqa: BLE001
-            rows.append((name, -1, -1, -1, f"PLAN-ERROR: {str(ex)[:80]}"))
+            rows.append((name, -1, -1, -1, -1, f"PLAN-ERROR: {str(ex)[:80]}"))
             hard_fail.append(name)
             continue
-        flags, n_ex, n_bc, n_nodes = audit_plan(plan)
-        if lazy_note:
-            flags.add(lazy_note)
-        wide: list[str] = []
-        wbc: list[str] = []
-        if "Join" in plan or "Broadcast" in plan:
-            tree = extract_plan_tree(df._jdf.queryExecution().executedPlan())
-            if "SortMergeJoin" in plan or "ShuffledHashJoin" in plan:
-                wide = wide_join_shuffle_findings(tree)
-                if wide:
-                    flags.add("wide-shuffle")
-            wbc = wide_broadcast_findings(tree)
-            if wbc:
-                flags.add("wide-broadcast")
         observed[name] = flags
-        shown = set(flags)
-        if "wide-shuffle" in flags:
-            shown.discard("wide-shuffle")
-            if name in WIDE_SHUFFLE_BOUNDED:
-                shown.add(f"wide-shuffle(bounded: {','.join(wide)})")
+        shown = flags - set(finds)
+        for flag, cols in finds.items():
+            if name in bounded[flag]:
+                shown.add(f"{flag}(bounded: {','.join(cols)})")
             else:
-                shown.add(f"wide-shuffle({','.join(wide)})")
-                hard_fail.append(name)
-        if "wide-broadcast" in flags:
-            shown.discard("wide-broadcast")
-            if name in WIDE_BROADCAST_BOUNDED:
-                shown.add(f"wide-broadcast(bounded: {','.join(wbc)})")
-            else:
-                shown.add(f"wide-broadcast({','.join(wbc)})")
+                shown.add(f"{flag}({','.join(cols)})")
                 hard_fail.append(name)
         if "global-window" in flags:
             if name in GLOBAL_WINDOW_TWINS:
@@ -645,11 +643,13 @@ def main() -> None:
             and name not in GLOBAL_WINDOW_BOUNDED
         ):
             hard_fail.append(name)
-        rows.append((name, n_ex, n_bc, n_nodes, ",".join(sorted(shown)) or "-"))
+        rows.append(
+            (name, len(built) + 1, n_ex, n_bc, n_nodes, ",".join(sorted(shown)) or "-")
+        )
 
     # dynamic pass over the judge-facing bench + scale sets and the
     # posting self-join family: final adaptive plans, catching AQE
-    # runtime conversions the static pass cannot see (ADVICE r6)
+    # runtime conversions the unexecuted final plans cannot show (ADVICE r6)
     from bench import BENCH_QUERIES, SCALE_QUERIES
 
     exec_rows, exec_fails = executed_audit(
@@ -667,13 +667,19 @@ def main() -> None:
     )
 
     n_flagged = sum(
-        1 for r in rows if r[4] not in ("-",) and not r[4].startswith("PLAN-ERROR")
+        1 for r in rows if r[5] not in ("-",) and not r[5].startswith("PLAN-ERROR")
     )
-    max_nodes = max((r[3] for r in rows), default=0)
+    max_nodes = max((r[4] for r in rows), default=0)
     with open(os.path.join(REPO, "PLAN_AUDIT.md"), "w") as f:
         f.write(
             "# PLAN_AUDIT — anti-pattern scan over every registered query\n\n"
-            "Generated by `python tools/plan_audit.py` (planning only, sf0.01).\n"
+            "Generated by `python tools/plan_audit.py` at sf0.01. Each query\n"
+            "is built inside `recorded_plans`, a QueryExecutionListener that\n"
+            "keeps the executed plan of every SQL execution the build runs\n"
+            "(eager checkpoints, counts, collects); the detectors read those\n"
+            "plans plus the query's final plan, which is planned, not run.\n"
+            "`plans` counts them; shuffles and broadcasts are summed over\n"
+            "them; `plan nodes` is the largest plan's size.\n"
             "Hard anti-patterns: `cartesian` (non-broadcast cartesian join),\n"
             "`row-python` (row-at-a-time Python UDF), `global-window` without\n"
             "a registered scale twin (un-partitioned WindowExec; conformance\n"
@@ -687,21 +693,21 @@ def main() -> None:
             f"Queries audited: {len(rows)}; flagged: {n_flagged}; "
             f"hard failures: {len(hard_fail)}; "
             f"largest plan: {max_nodes} nodes (ceiling {PLAN_NODE_CEILING})\n\n"
-            "| query | shuffles | broadcasts | plan nodes | flags |\n"
-            "|---|---|---|---|---|\n"
+            "| query | plans | shuffles | broadcasts | plan nodes | flags |\n"
+            "|---|---|---|---|---|---|\n"
         )
-        for name, n_ex, n_bc, n_nodes, flags in rows:
-            f.write(f"| {name} | {n_ex} | {n_bc} | {n_nodes} | {flags} |\n")
+        for name, n_plans, n_ex, n_bc, n_nodes, flags in rows:
+            f.write(f"| {name} | {n_plans} | {n_ex} | {n_bc} | {n_nodes} | {flags} |\n")
         f.write(
             "\n## Executed-plan audit (bench + scale sets, posting self-joins)\n\n"
-            "The table above is STATIC (plans built, never run), so an AQE\n"
-            "runtime SMJ-to-broadcast conversion of a wide side — the r6\n"
-            "sf10 driver-OOM mechanism — is out of its sight. This second\n"
+            "The final plans in the table above are planned, never run, so\n"
+            "an AQE runtime SMJ-to-broadcast conversion of a wide side — the\n"
+            "r6 sf10 driver-OOM mechanism — is out of their sight. This second\n"
             "pass EXECUTES the judge-facing bench/scale queries and the\n"
             "shingle self-join family at sf0.01 and runs the wide-column\n"
             "and generated-broadcast detectors over each FINAL adaptive\n"
             "plan (`plan` column: `final` = AQE re-planned tree audited).\n"
-            "Same allowlists and hard-fail discipline as the static pass.\n\n"
+            "Same allowlists and hard-fail discipline as the first pass.\n\n"
             "| query | plan | findings |\n|---|---|---|\n"
         )
         for name, kind, notes in exec_rows:
