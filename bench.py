@@ -120,7 +120,7 @@ def _pagerank_phases(spark, sf_dir: str) -> dict[str, float]:
     edges = pagerank_edges(li)
     edges.count()
     t_edges = time.perf_counter() - t0
-    out, edges2, _extra = pagerank_ranks_lazy(li)
+    out, edges2 = pagerank_ranks_lazy(li)
     t1 = time.perf_counter()
     out.count()
     t_iter = time.perf_counter() - t1

@@ -107,8 +107,6 @@ def connected_components(
     nodes: DataFrame,
     edges: DataFrame,
     max_iter: int = MAX_ITER,
-    disk_only: bool = False,
-    round_splits: int = 1,
     rounds_per_job: int = 1,
 ) -> DataFrame:
     """nodes(node), edges(src, dst) undirected -> (node, cluster_id) with
@@ -134,22 +132,6 @@ def connected_components(
     falls back to :func:`connected_components_two_phase`, which converges
     in O(log n) rounds on any topology and has the same fixpoint.
 
-    ``disk_only`` (r14, billion-edge soaks): persist the symmetric edge
-    frame DISK_ONLY — the deserialized default holds ~2x|E| two-long
-    rows on-heap, which starves execution memory at the sf10+ frames
-    exactly as the r13 census OOM documented; what every round reuses
-    is the dst partitioning, not block residency.
-
-    ``round_splits`` (r14, same lever as lpa_labels' r13 closure): a
-    node's neighborhood minimum depends only on edges with that node as
-    the propagation TARGET (cc_round's src after symmetrization), so the
-    round partitions exactly by pmod(src, K). Pass k computes and
-    eagerly materializes the closed-neighborhood min for its src slice;
-    the round's label table is the disjoint union of the K passes, so
-    simultaneous shuffle scratch drops ~K-fold for K-fold more passes
-    over the map-side filter. The label table per round is identical by
-    construction; set-equality pinned in tests/test_graph_components.py.
-
     ``rounds_per_job`` (r14 optimization round, guide §1/§2 — fixed
     per-job latency, not data volume, dominates small-graph rounds):
     chain B propagation rounds into ONE lazy plan per checkpoint, with a
@@ -164,14 +146,10 @@ def connected_components(
     load). The trade at scale: up to B-1 rounds may execute past the
     fixpoint inside the final batch, each a full node-sized shuffle —
     callers choose B from measured graph size (q_connected_components
-    batches only under WCC_BATCH_MAX_EDGES; the billion-edge soaks keep
-    B=1, where overshoot is real money and per-job latency is noise).
-    Ignored (forced to 1) when ``round_splits`` > 1: split rounds
-    eagerly materialize per-pass slices, which a lazy chain would
-    re-execute per downstream round.
+    batches only under WCC_BATCH_MAX_EDGES and keeps B=1 above it, where
+    overshoot costs more than per-job latency).
     """
     from pyspark.sql import Observation
-    from pyspark.storagelevel import StorageLevel
 
     # persist, not localCheckpoint: the edge frame is the BIG side of
     # every round's join and persist keeps the dst-key partitioning
@@ -182,7 +160,7 @@ def connected_components(
     # reads the eagerly-checkpointed labels, never this frame.
     # Self-loops ride the symmetric frame (r14 optimization round): with
     # (node, node) present, one join + MIN over the CLOSED neighborhood
-    # IS the new label, so the old cc_round's second join back to the
+    # IS the new label, so the old round's second join back to the
     # previous labels (the least/coalesce re-attach) and its node-sized
     # exchange are gone — 3 exchanges per round -> 2. This is also
     # exactly the oracle's `adj` construction (graph_components.py), so
@@ -201,7 +179,7 @@ def connected_components(
         .repartition(F.col("dst"))
         .sortWithinPartitions("dst")
     )
-    sym = sym.persist(StorageLevel.DISK_ONLY) if disk_only else sym.persist()
+    sym = sym.persist()
     labels = nodes.select(F.col("node"), F.col("node").alias("label"))
     # Convergence probe without the _old column: labels are elementwise
     # non-increasing round over round (each new label is a min over a
@@ -216,7 +194,6 @@ def connected_components(
     # init is node = label) and both sums ride round 1's observation.
     prev_sum: object = _SEED_PENDING
     converged = False
-    batch = rounds_per_job if round_splits == 1 else 1
     rounds_done = 0
     while rounds_done < max_iter and not converged:
         # one action per BATCH: the eager localCheckpoint materializes
@@ -224,7 +201,7 @@ def connected_components(
         # observation in the same job
         obs_list = []
         cur = labels
-        for _ in range(min(batch, max_iter - rounds_done)):
+        for _ in range(min(rounds_per_job, max_iter - rounds_done)):
             obs = Observation()
             metrics = [F.sum("label").alias("label_sum")]
             if rounds_done == 0 and not obs_list:
@@ -234,7 +211,14 @@ def connected_components(
                     F.min("node").alias("min_node"),
                     F.max("node").alias("max_node"),
                 ]
-            cur = cc_round(sym, cur, round_splits=round_splits).observe(obs, *metrics)
+            # one synchronous round: every node adopts the minimum label
+            # of its closed neighborhood (the self-loops in sym)
+            cur = (
+                sym.join(cur, sym.dst == cur.node)
+                .groupBy(F.col("src").alias("node"))
+                .agg(F.min("label").alias("label"))
+                .observe(obs, *metrics)
+            )
             obs_list.append(obs)
         labels = cur.localCheckpoint(eager=True)
         for obs in obs_list:
@@ -260,39 +244,8 @@ def connected_components(
             "large-star/small-star",
             stacklevel=2,
         )
-        return connected_components_two_phase(nodes, edges, disk_only=disk_only)
+        return connected_components_two_phase(nodes, edges)
     return labels.select("node", F.col("label").alias("cluster_id"))
-
-
-def cc_round(sym: DataFrame, labels: DataFrame, round_splits: int = 1) -> DataFrame:
-    """One synchronous min-label propagation round over a symmetric edge
-    frame that INCLUDES per-node self-loops: every node adopts the
-    minimum label of its CLOSED neighborhood, so one join + one
-    aggregation is the whole round (two node-sized exchanges; the r13
-    form re-attached the previous labels with a second join —
-    least/coalesce — costing a third exchange per round). Returns
-    (node, label). A node's full closed neighborhood shares one src
-    value, so with ``round_splits`` > 1 the round is the disjoint union
-    of K eagerly-materialized pmod(src, K) passes — see
-    connected_components' docstring for the scratch-for-passes trade."""
-    if round_splits > 1:
-        parts = [
-            sym.filter(F.pmod(F.col("src"), round_splits) == k)
-            .join(labels, F.col("dst") == labels.node)
-            .groupBy(F.col("src").alias("node"))
-            .agg(F.min("label").alias("label"))
-            .localCheckpoint(eager=True)
-            for k in range(round_splits)
-        ]
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionAll(p)
-        return out
-    return (
-        sym.join(labels, sym.dst == labels.node)
-        .groupBy(F.col("src").alias("node"))
-        .agg(F.min("label").alias("label"))
-    )
 
 
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -353,7 +306,6 @@ def connected_components_two_phase(
     edges: DataFrame,
     max_iter: int = MAX_ITER,
     with_rounds: bool = False,
-    disk_only: bool = False,
 ):
     """Alternating large-star/small-star connected components (Kiveris et
     al., "Connected Components in MapReduce and Beyond") — converges in
@@ -392,27 +344,13 @@ def connected_components_two_phase(
     10^4, 18 at 10^5), so a deeper graph than ``2^max_iter`` must
     raise, not lie; callers at that scale pass a larger ``max_iter``.
 
-    ``with_rounds=True`` returns ``(comp, rounds_used)`` — the observed
-    contraction depth, which the deep-topology soak records against the
-    O(log n) bound (tools/scale_soak.py --wcc-deep).
-
-    ``disk_only`` (r14): store the per-round checkpoint generations
-    DISK_ONLY. Two generations are live at once (the round's input and
-    output, compared by the convergence probe), and the edge set stays
-    ~|V| rows through the whole contraction — at the 100M-node deep
-    leg that is 2 x ~5-6 GB deserialized, which OOMed the 8 GB heap
-    (measured: heap death in round 2 right after 'Not enough space to
-    cache rdd_6_11'). On disk the generations cost the heap nothing;
-    what each round reuses is the row set, not block residency — the
-    same lever as connected_components(disk_only=True).
+    ``with_rounds=True`` returns ``(comp, rounds_used)``, the observed
+    contraction depth, which tests/test_graph_components.py checks
+    against the O(log n) bound.
     """
     from pyspark.storagelevel import StorageLevel
 
-    ckpt_level = (
-        StorageLevel.DISK_ONLY
-        if disk_only
-        else StorageLevel.MEMORY_AND_DISK_DESER
-    )
+    ckpt_level = StorageLevel.MEMORY_AND_DISK_DESER
     # canonical (hi > lo) orientation, self-loops dropped; isolated
     # nodes re-enter at the end via the left join (they never need to
     # move — their component is themselves)
@@ -471,9 +409,8 @@ def connected_components_two_phase(
         # Spark's ContextCleaner reclaims shuffle files/metadata via
         # weak refs, so a ~30-round contraction in one JVM accumulates
         # every round's shuffle state until a GC happens to run — the
-        # r14 100M-path leg died of heap creep at round ~25 (measured;
-        # DISK_ONLY generations alone fixed only the block-storage
-        # half). Per-round collection keeps the live set at ~2 rounds.
+        # r14 100M-path leg died of heap creep at round ~25 (measured).
+        # Per-round collection keeps the live set at ~2 rounds.
         import gc
 
         gc.collect()

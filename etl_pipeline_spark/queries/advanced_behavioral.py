@@ -87,26 +87,12 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     return triangle_census(edges)
 
 
-def orient_edges_by_degree(
-    edges: DataFrame, deg: DataFrame | None = None, checkpoint: bool = True
-) -> DataFrame:
+def orient_edges_by_degree(edges: DataFrame, deg: DataFrame) -> DataFrame:
     """Re-orient an undirected (canonical u < v) edge frame from the
     lower-(degree, id) endpoint to the higher — the Chiba-Nishizeki
-    wedge-mass cap shared by the exact census below and the DOULION
-    sampled census (queries/graph_sampling.py). ``deg`` is the (k, d)
-    degree frame if the caller already built it. Returns a lazily
-    checkpointed frame (read multiple times by every wedge join);
-    ``checkpoint=False`` hands back the raw plan so a caller that owns
-    its own materialization (e.g. sampled_triangles' DISK_ONLY persist
-    at billion-edge scale, where two MEMORY_AND_DISK block sets OOMed
-    an 8 GB heap — r13 sf50 leg) doesn't double-store the frame."""
-    if deg is None:
-        deg = (
-            edges.select(F.col("u").alias("k"))
-            .unionAll(edges.select(F.col("v").alias("k")))
-            .groupBy("k")
-            .agg(F.count("*").alias("d"))
-        )
+    wedge-mass cap behind triangle_census(orient_by_degree=True).
+    ``deg`` is the caller's (k, d) degree frame. Returns a lazily
+    checkpointed frame (read multiple times by every wedge join)."""
     du = deg.select(F.col("k").alias("u"), F.col("d").alias("du"))
     dv = deg.select(F.col("k").alias("v"), F.col("d").alias("dv"))
     keyed = edges.join(du, "u").join(dv, "v")
@@ -115,16 +101,14 @@ def orient_edges_by_degree(
         F.when(fwd, F.col("u")).otherwise(F.col("v")).alias("u"),
         F.when(fwd, F.col("v")).otherwise(F.col("u")).alias("v"),
     )
-    return out.localCheckpoint(eager=False) if checkpoint else out
+    return out.localCheckpoint(eager=False)
 
 
 def triangle_census(edges: DataFrame, orient_by_degree: bool = False) -> DataFrame:
     """The census over a CANONICALLY ORIENTED (u < v) undirected edge
-    frame — extracted from q_triangle_count so the scale soak can run it
-    on the stamped parquet edge frames (tools/scale_soak.py
-    --sf50-graph; a directed both-ways frame filters u < v to recover
-    this form exactly). Caller owns the frame's persistence; the census
-    reads it five times.
+    frame, extracted from q_triangle_count (a directed both-ways frame
+    filters u < v to recover this form exactly). Caller owns the
+    frame's persistence; the census reads it five times.
 
     ``orient_by_degree`` (r12) wires the mitigation the q_triangle_count
     docstring previously only NAMED: re-orient every edge from its
@@ -140,9 +124,9 @@ def triangle_census(edges: DataFrame, orient_by_degree: bool = False) -> DataFra
     The id order has no such bound — one high-degree hub whose
     neighbors carry larger ids contributes d^2 wedges. The degree/id
     re-orientation is one extra edge-sized broadcast-degree join, so
-    the default stays id-order for the small fixtures and the scale
-    soak turns it on. n_vertices/n_edges/n_wedges read the UNDIRECTED
-    structure and are orientation-independent by construction."""
+    the default stays id-order for the small fixtures.
+    n_vertices/n_edges/n_wedges read the UNDIRECTED structure and are
+    orientation-independent by construction."""
     deg = (
         edges.select(F.col("u").alias("k"))
         .unionAll(edges.select(F.col("v").alias("k")))

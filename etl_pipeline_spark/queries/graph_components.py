@@ -30,8 +30,7 @@ frame; rounds = component diameter (co-purchase graphs are shallow —
 measured 4-11 sync rounds across fixtures). The summary output is a
 single row, so driver transfer is O(1) regardless of |V|. At 100 TB
 the same plan holds: the edge frame shuffles once into its persisted
-partitioning, every round reuses it, and the disjoint-copy scale oracle
-(tools/scale_soak.py) pins component counts at exactly N x sf1.
+partitioning and every round reuses it.
 
 Reference parity note: the reference pipeline (826 LoC of Beam/Airflow
 orchestration) has no graph analytics; this is part of the mandated

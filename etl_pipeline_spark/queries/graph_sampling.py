@@ -38,9 +38,8 @@ from etl_pipeline_spark.queries.base import query
 # Keep an edge iff md5("u:v")'s first nibble < KEEP_NIBBLES, i.e.
 # p = KEEP_NIBBLES/16. The registry query uses 8 (p = 1/2): the scale
 # factor p^-3 = 8 is an exact integer, so every output column stays
-# integer-exact across engines. The scale soak samples harder (4 ->
-# p = 1/4, wedge mass cut 16x, scale 64) where the graph is dense
-# enough to pay for it.
+# integer-exact across engines. A denser graph can sample harder (4 ->
+# p = 1/4, wedge mass cut 16x, scale 64) through sampled_triangles.
 DOULION_KEEP_NIBBLES = 8
 
 
@@ -60,49 +59,16 @@ def doulion_keep_sql(u: str, v: str, keep_nibbles: int) -> str:
     )
 
 
-def sampled_triangles(
-    edges: DataFrame,
-    keep_nibbles: int,
-    orient_by_degree: bool = False,
-    disk_only: bool = False,
-) -> DataFrame:
+def sampled_triangles(edges: DataFrame, keep_nibbles: int) -> DataFrame:
     """One-row frame: sampled-edge count, sampled triangle count, and the
     DOULION estimate scaled by (16/keep)^3. ``edges`` must be canonically
     oriented (u < v); caller owns persistence. The wedge join runs on the
     SPARSIFIED frame, so its row count — the cost that walls exact
-    counting on dense graphs — is p^2 of the exact census's.
-
-    ``orient_by_degree`` composes the Chiba-Nishizeki degree
-    re-orientation (shared with triangle_census) AFTER sampling: the
-    kept-edge set is hashed on the canonical (u, v) pair so the sample
-    is orientation-independent, and any acyclic orientation counts each
-    surviving triangle exactly once — the soak's dense support-1 runs
-    turn both mitigations on together.
-
-    ``disk_only`` stores the (single) materialization of the sampled
-    frame at StorageLevel.DISK_ONLY instead of a localCheckpoint's
-    MEMORY_AND_DISK blocks — the billion-edge lever: at the sf50 leg,
-    deserialized blocks of the ~75M-edge sample plus 32 concurrent sort
-    buffers OOMed the 8 GB heap (r13); DISK_ONLY keeps the heap for the
-    wedge sort. Caller owns the unpersist (the frame is consumed by the
-    returned plan's single action in practice)."""
+    counting on dense graphs — is p^2 of the exact census's."""
     assert 16 % keep_nibbles == 0, "scale p^-3 must stay integer-exact"
     scale = (16 // keep_nibbles) ** 3
     s = edges.filter(doulion_keep(F.col("u"), F.col("v"), keep_nibbles))
-    if orient_by_degree:
-        from etl_pipeline_spark.queries.advanced_behavioral import (
-            orient_edges_by_degree,
-        )
-
-        # checkpoint=False: the materialization below is the ONE store
-        # of this frame (a second block set OOMed the sf50 leg)
-        s = orient_edges_by_degree(s, checkpoint=False)
-    if disk_only:
-        from pyspark.storagelevel import StorageLevel
-
-        s = s.persist(StorageLevel.DISK_ONLY)
-    else:
-        s = s.localCheckpoint(eager=False)  # read 4x below; materialize once
+    s = s.localCheckpoint(eager=False)  # read 4x below; materialize once
     e1 = s.select(F.col("u").alias("x"), F.col("v").alias("y"))
     e2 = s.select(F.col("u").alias("y"), F.col("v").alias("z"))
     e3 = s.select(F.col("u").alias("x"), F.col("v").alias("z"))
@@ -265,11 +231,7 @@ def q_triangle_census_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     makes the estimator's error VISIBLE and oracle-checked; at the scale
     where the estimator earns its keep (the support-1 graph whose exact
     wedge stream burned >48x its parquet in scratch before the r12 sf10
-    kill) only the sampled side runs — tools/scale_soak.py
-    --sf10-tri-sampled drives :func:`sampled_triangles` on the stamped
-    support-1 frame under the disk preflight, with the estimator
-    validated against the exact count at the largest SF where exact is
-    feasible.
+    kill) only the sampled side would run.
 
     Scale: the sampling predicate is a map-side Column filter (md5 of
     the join key pair — no shuffle, no RNG state); everything downstream

@@ -61,34 +61,6 @@ def test_wcc_is_fixpoint_flips_on_wrong_labels(spark):
     assert not r2["is_fixpoint"]
 
 
-def test_wcc_round_splits_and_disk_only_equivalence(spark):
-    """round_splits partitions each propagation round by pmod(src, K):
-    the label set per round — and therefore the fixpoint — is identical
-    by construction; disk_only only changes the edge frame's storage
-    level. Pinned at K=3 and K=4 against the single-pass labels on the
-    two-component graph plus a path long enough to need several rounds."""
-    from etl_pipeline_spark.operators.cluster import connected_components
-
-    path = [(i, i + 1) for i in range(20, 27)]  # 8-node path, diameter 7
-    edges = spark.createDataFrame(EDGES + path, "src long, dst long")
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select("dst"))
-        .distinct()
-    )
-    want = sorted(
-        tuple(r) for r in connected_components(nodes, edges).collect()
-    )
-    for k in (3, 4):
-        got = sorted(
-            tuple(r)
-            for r in connected_components(
-                nodes, edges, round_splits=k, disk_only=True
-            ).collect()
-        )
-        assert got == want, f"round_splits={k} diverged"
-
-
 def test_wcc_rounds_per_job_equivalence(spark):
     """r14 optimization round: rounds_per_job chains B propagation
     rounds into one job per checkpoint — pure scheduling, identical

@@ -219,55 +219,3 @@ def test_stateful_profiles_null_ts_and_value(spark, tmp_path_factory):
     assert rows[2]["n_events"] == 1 and rows[2]["total_value"] == 0.0
     assert rows[3]["n_events"] == 1 and rows[3]["total_value"] == 0.0
     assert rows[3]["last_ts"] is None
-
-
-def test_pagerank_hub_broadcast_equivalence(spark):
-    """r10 judge #5: the hub-skew escape hatch must be wired, not just
-    named. On a synthetic hub graph (one part co-ordered with every
-    other part, so its out-degree dominates), pagerank with
-    hub_broadcast_degree set — hot-u edges v-partitioned and joined
-    against broadcast contributions, cold edges on the normal
-    u-partitioned path — must produce the IDENTICAL integer rank vector
-    as the plain path (same sums over the same rows; integer arithmetic
-    is order-free)."""
-    from pyspark.sql import functions as F
-
-    from etl_pipeline_spark.queries.analytics_ml import (
-        PR_SUPPORT,
-        pagerank_ranks,
-    )
-
-    # hub graph: orders repeat (hub=0, spoke i) pairs PR_SUPPORT times so
-    # every hub-spoke edge passes support; spokes also chain (i, i+1) so
-    # the cold path has real work too
-    rows = []
-    ok = 0
-    n_spokes = 12
-    for i in range(1, n_spokes + 1):
-        for rep in range(PR_SUPPORT):
-            rows += [(ok, 0), (ok, i)]
-            ok += 1
-    for i in range(1, n_spokes):
-        for rep in range(PR_SUPPORT):
-            rows += [(ok, i), (ok, i + 1)]
-            ok += 1
-    li = spark.createDataFrame(rows, "l_orderkey long, l_partkey long")
-
-    plain = {
-        r["node"]: (r["degree"], r["rank_scaled"])
-        for r in pagerank_ranks(li).collect()
-    }
-    # hub out-degree is 2*n_spokes directed... threshold chosen so ONLY
-    # the hub crosses it (spokes have directed degree <= 3)
-    hub = {
-        r["node"]: (r["degree"], r["rank_scaled"])
-        for r in pagerank_ranks(li, hub_broadcast_degree=5).collect()
-    }
-    assert plain == hub
-    assert plain[0][0] == n_spokes  # the hub really is the hub
-    # degenerate threshold: nothing hot -> still identical
-    none_hot = {
-        r["node"]: (r["degree"], r["rank_scaled"])
-        for r in pagerank_ranks(li, hub_broadcast_degree=10**9).collect()
-    }
-    assert plain == none_hot

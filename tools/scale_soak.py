@@ -19,8 +19,11 @@ is ~25% MORE bytes than a native 10x — the handicap makes the
 near-linear claim conservative.
 
 Run: python tools/scale_soak.py [--skip-build] [--queries a,b,c]
-Writes .scratch/scale/sf1/ and prints one JSON line per (sf, query);
-summary table is appended to BASELINE.md by hand from the JSON.
+     python tools/scale_soak.py --sf10 [--graph | --softdedup] [--skip-build]
+     python tools/scale_soak.py --sf100-peel | --sf100-graph | --sf100 [--skip-build]
+The default leg writes .scratch/scale/sf1/; every leg prints one JSON
+line per (sf, query); summary table is appended to BASELINE.md by hand
+from the JSON. Any other flag exits 2 before a session starts.
 """
 
 from __future__ import annotations
@@ -549,16 +552,6 @@ def build_sf100_lineitem(spark) -> None:
 
 SF50_EDGE_DIR = f"{REPO}/.scratch/scale/sf50_edges_s1"
 SF10_EDGE_DIR = f"{REPO}/.scratch/scale/sf10_edges_s1"
-# support-2 canonical (u < v) frames for the triangle census — the
-# census's OWN contract graph (TRI_SUPPORT = 2). The support-1 frames
-# above are ~40x denser; their wedge volume is intrinsic (sum of
-# oriented out-deg^2) and exceeds one host's disk at sf10 already —
-# measured r12: the degree-oriented wedge join spilled past 68 GB into
-# 66 GB free before being killed at 87% host disk (boundary recorded
-# in BASELINE.md). k-core/pagerank/LPA stay on support-1, where their
-# per-round work is edge-LINEAR and feasible.
-SF50_EDGE2_DIR = f"{REPO}/.scratch/scale/sf50_edges_s2"
-SF10_EDGE2_DIR = f"{REPO}/.scratch/scale/sf10_edges_s2"
 PEEL_COPIES = 5  # sf50: the largest slice one host's disk carries (see below)
 
 
@@ -652,716 +645,6 @@ def main_sf100_peel() -> None:
         ),
         flush=True,
     )
-
-
-def main_sf50_graph() -> None:
-    """One sf50 rep each for the REST of the graph family (r11 judge
-    #7): pagerank, LPA, and the triangle census reuse the SAME stamped
-    edge frames the k-core peel proved feasible (sf10 239M / sf50 1.196B
-    directed edges; run --sf100-peel first, or --skip-build here reuses
-    the parquet dirs on disk). Each operator runs at sf10 and sf50 from
-    the materialized frames, so the recorded slope isolates the
-    iterate/join machinery from the (already-laddered) edge build.
-
-    Built-in correctness at scale: the fixture copies are node-disjoint,
-    so every count (vertices, edges, wedges, triangles, communities,
-    rank rows) must be EXACTLY 5x the sf10 value and the global
-    clustering coefficient must be bit-equal — any drift is a real
-    defect in the operator at the billion-edge regime, not noise.
-
-    Memory regime: the k-core sf50 lesson verbatim — 512 reduce
-    partitions, 32m scan splits, DISK_ONLY edge persistence, and run
-    under SPARK_GRAFT_CPUS=8 (32 threads starve the SMJ sorters at this
-    scale; see BASELINE.md r11 ladder)."""
-    spark = get_spark("scale_soak_sf50_graph")
-    spark.conf.set("spark.sql.shuffle.partitions", "512")
-    spark.conf.set("spark.sql.files.maxPartitionBytes", "32m")
-
-    from pyspark.storagelevel import StorageLevel
-
-    from etl_pipeline_spark.queries.advanced_behavioral import (
-        TRI_SUPPORT,
-        triangle_census,
-    )
-    from etl_pipeline_spark.queries.analytics_ml import (
-        co_purchase_edges,
-        lpa_labels,
-        pagerank_ranks_lazy,
-    )
-
-    if not os.path.isdir(SF10_EDGE2_DIR):
-        # stamp the census's support-2 canonical frames once (same
-        # disjoint-copy construction as the support-1 peel frames)
-        li = load_tables(spark, SF10_DIR, ("lineitem",))["lineitem"]
-        e2 = co_purchase_edges(li, TRI_SUPPORT).localCheckpoint(eager=True)
-        e2.write.mode("overwrite").parquet(SF10_EDGE2_DIR)
-        e2r = spark.read.parquet(SF10_EDGE2_DIR)
-        for k in range(PEEL_COPIES):
-            e2r.select(
-                (F.col("u") + k * 100 * ID_OFFSET).alias("u"),
-                (F.col("v") + k * 100 * ID_OFFSET).alias("v"),
-            ).write.mode("overwrite" if k == 0 else "append").parquet(
-                SF50_EDGE2_DIR
-            )
-        e2.unpersist()
-
-    def run_pagerank(edges, und):
-        out, _e, _x = pagerank_ranks_lazy(None, edges=edges)
-        return {"rows": out.localCheckpoint(eager=True).count()}
-
-    def run_triangle(edges, und):
-        # support-2 canonical frame (the census's contract graph);
-        # degree orientation caps the wedge stream at O(m^1.5)
-        # (id-order is sum(d^2) — hub-quadratic); counts invariant,
-        # equivalence pinned in tests/test_r8_operators.py
-        return triangle_census(und, orient_by_degree=True).collect()[0].asDict()
-
-    def run_lpa(edges, und):
-        # eager rounds: one round's shuffle on disk at a time, not all
-        # four — the lazy form's ~iters x |E| simultaneous shuffle
-        # files are the documented single-host ENOSPC class
-        labels = lpa_labels(edges, eager_rounds=True)
-        return {"communities": labels.select("label").distinct().count()}
-
-    # one op's failure (the boundary being probed) must not cost the
-    # others their rep. Triangle runs LAST: its internal orientation
-    # checkpoint is edge-sized and lingers until the end-of-leg block
-    # release (release_session_blocks unpersists EVERYTHING, so it can
-    # only run once the leg's shared frames are done).
-    ops = [("pagerank", run_pagerank), ("lpa", run_lpa),
-           ("triangle", run_triangle)]
-
-    # Disk preflight (r12, measured the hard way): an op whose scratch
-    # exceeds free disk doesn't fail cleanly at this scale — it drives
-    # the HOST to 100% (checkpoint writes, git, everything corrupts)
-    # before Spark surfaces ENOSPC; both r12 kill-at-87% incidents were
-    # this. Required scratch as a multiple of the input frame's parquet
-    # bytes, measured on this host class: DISK_ONLY persist of the
-    # deserialized both-ways frame is ~5.5x parquet; pagerank adds
-    # ~3x transient spill (sf50 leg completed inside 8x total); LPA's
-    # per-round nbr shuffle is edge-sized even with eager rounds and
-    # blew past 9x (kill point) — 14x is the recorded lower bound for a
-    # safe run. Triangle's wedge mass is DENSITY-driven: the support-2
-    # census is trivial, but the support-1 attempt burned >48x its
-    # parquet before the kill, so the factor stays defensive. Below the
-    # bar the op records a skip with numbers — the mechanical form of
-    # the feasibility ladder.
-    DISK_FACTOR = {"pagerank": 8, "lpa": 14, "triangle": 50}
-
-    def _dir_bytes(path: str) -> int:
-        total = 0
-        for root, _, files in os.walk(path):
-            for f in files:
-                total += os.path.getsize(os.path.join(root, f))
-        return total
-    results: dict[str, dict[str, dict]] = {}
-    for sf_label, d, d2 in [
-        ("10", SF10_EDGE_DIR, SF10_EDGE2_DIR),
-        ("50", SF50_EDGE_DIR, SF50_EDGE2_DIR),
-    ]:
-        # one DISK_ONLY u-partitioned support-1 frame serves pagerank
-        # AND LPA (both join on edges.u); the census reads its own
-        # support-2 canonical frame. Materialization happens outside
-        # each timed window.
-        edges = (
-            spark.read.parquet(d)
-            .repartition(F.col("u"))
-            .persist(StorageLevel.DISK_ONLY)
-        )
-        edges.count()
-        und = spark.read.parquet(d2).persist(StorageLevel.DISK_ONLY)
-        und.count()
-        frame_bytes = {"triangle": _dir_bytes(d2)}
-        frame_bytes["pagerank"] = frame_bytes["lpa"] = _dir_bytes(d)
-        for op, fn in ops:
-            need = DISK_FACTOR[op] * frame_bytes[op]
-            free = __import__("shutil").disk_usage("/").free
-            if free < need:
-                rec = {
-                    "skipped": (
-                        f"insufficient free disk: need ~{need >> 30} GiB "
-                        f"({DISK_FACTOR[op]}x {frame_bytes[op] >> 20} MiB "
-                        f"parquet), have {free >> 30} GiB"
-                    )
-                }
-                rec["sec"] = 0.0
-                results.setdefault(op, {})[sf_label] = rec
-                print(json.dumps({"sf": sf_label, "op": op, **rec}), flush=True)
-                continue
-            t0 = time.perf_counter()
-            try:
-                rec = fn(edges, und)
-            except Exception as exc:  # record the boundary, keep going
-                rec = {"error": f"{type(exc).__name__}: {exc}"[:300]}
-            rec["sec"] = round(time.perf_counter() - t0, 2)
-            results.setdefault(op, {})[sf_label] = rec
-            print(json.dumps({"sf": sf_label, "op": op, **rec}), flush=True)
-        edges.unpersist()
-        und.unpersist()
-        release_session_blocks(spark)
-
-    summary = {}
-    for op, by_sf in results.items():
-        r10, r50 = by_sf["10"], by_sf["50"]
-        summary[op] = {
-            "sf10_sec": r10["sec"],
-            "sf50_sec": r50["sec"],
-            "t_ratio_5x": round(r50["sec"] / max(r10["sec"], 1e-9), 2),
-            "errors": {s: r["error"] for s, r in by_sf.items() if "error" in r},
-            "skips": {s: r["skipped"] for s, r in by_sf.items() if "skipped" in r},
-        }
-
-    def lin(op, key):
-        a, b = results[op]["10"].get(key), results[op]["50"].get(key)
-        return a is not None and b is not None and b == 5 * a
-
-    tri10, tri50 = results["triangle"]["10"], results["triangle"]["50"]
-    summary["linearity_5x_exact"] = {
-        "rank_rows": lin("pagerank", "rows"),
-        "communities": lin("lpa", "communities"),
-        "triangles": lin("triangle", "n_triangles"),
-        "wedges": lin("triangle", "n_wedges"),
-        # r13 advisor: only report equality when BOTH legs measured the
-        # key — a skipped/errored op on both sides is null, never a
-        # vacuous True (skipped-vs-measured conflation).
-        "clustering_equal": (
-            tri10.get("global_clustering") == tri50.get("global_clustering")
-            if tri10.get("global_clustering") is not None
-            and tri50.get("global_clustering") is not None
-            else None
-        ),
-    }
-    print(json.dumps({"summary_sf50_graph": summary}), flush=True)
-
-
-def main_wcc_graph() -> None:
-    """r14: the WCC census (q_connected_components' machinery) at sf10
-    and sf50 on the stamped support-1 edge frames — the same disjoint-
-    copy ladder as pagerank/LPA/k-core, with the same built-in oracle:
-    the copies are node-disjoint, so n_components and sum_sq_sizes must
-    be EXACTLY 5x the sf10 values and giant_size bit-equal; is_fixpoint
-    must hold at both scales (the census's structural verdict — edge-
-    endpoint label agreement + per-component min-member — is itself
-    computed distributed, so the oracle runs IN the soak).
-
-    Memory regime: disk_only=True persists the symmetric frame's blocks
-    on disk (the deserialized default is the r13 census-OOM class), and
-    the sf50 leg runs round_splits=4 — the lever that closed sf50 LPA
-    (pmod(src, K) passes, one pass's join+groupBy scratch at a time).
-    Disk preflight factors are LPA-derived priors (14x unsplit / 7x
-    split-4 of the input parquet: 5.5x DISK_ONLY frame + per-pass
-    transient), recorded against measurement in BASELINE.md."""
-    spark = get_spark("scale_soak_wcc")
-    spark.conf.set("spark.sql.shuffle.partitions", "512")
-    spark.conf.set("spark.sql.files.maxPartitionBytes", "32m")
-
-    from etl_pipeline_spark.operators.cluster import connected_components
-    from etl_pipeline_spark.queries.graph_components import wcc_summary
-
-    DISK_FACTOR_WCC = {1: 14, 4: 7}
-
-    def _dir_bytes(path: str) -> int:
-        total = 0
-        for root, _, files in os.walk(path):
-            for f in files:
-                total += os.path.getsize(os.path.join(root, f))
-        return total
-
-    results: dict[str, dict] = {}
-    for sf_label, d, splits in [
-        ("10", SF10_EDGE_DIR, 1),
-        ("50", SF50_EDGE_DIR, 4),
-    ]:
-        frame_bytes = _dir_bytes(d)
-        need = DISK_FACTOR_WCC[splits] * frame_bytes
-        free = __import__("shutil").disk_usage("/").free
-        if free < need:
-            rec = {
-                "skipped": (
-                    f"insufficient free disk: need ~{need >> 30} GiB "
-                    f"({DISK_FACTOR_WCC[splits]}x {frame_bytes >> 20} MiB "
-                    f"parquet), have {free >> 30} GiB"
-                ),
-                "sec": 0.0,
-            }
-            results[sf_label] = rec
-            print(json.dumps({"sf": sf_label, "op": "wcc", **rec}), flush=True)
-            continue
-        directed = spark.read.parquet(d)
-        # canonical half of the stamped both-ways frame; the operator
-        # re-symmetrizes internally (its sym frame is dst-partitioned
-        # and DISK_ONLY under disk_only=True)
-        edges = directed.filter(F.col("u") < F.col("v")).select(
-            F.col("u").alias("src"), F.col("v").alias("dst")
-        )
-        # every node appears as u in the both-ways frame: one distinct,
-        # no union
-        nodes = directed.select(F.col("u").alias("node")).distinct()
-        t0 = time.perf_counter()
-        try:
-            comp = connected_components(
-                nodes, edges, disk_only=True, round_splits=splits
-            )
-            rec = wcc_summary(edges, comp).collect()[0].asDict()
-        except Exception as exc:  # record the boundary, keep going
-            rec = {"error": f"{type(exc).__name__}: {exc}"[:300]}
-        rec["sec"] = round(time.perf_counter() - t0, 2)
-        rec["round_splits"] = splits
-        results[sf_label] = rec
-        print(json.dumps({"sf": sf_label, "op": "wcc", **rec}), flush=True)
-        release_session_blocks(spark)
-
-    r10, r50 = results.get("10", {}), results.get("50", {})
-
-    def lin(key, mult):
-        a, b = r10.get(key), r50.get(key)
-        return a is not None and b is not None and b == mult * a
-
-    summary = {
-        "sf10_sec": r10.get("sec"),
-        "sf50_sec": r50.get("sec"),
-        "t_ratio_5x": (
-            round(r50["sec"] / max(r10["sec"], 1e-9), 2)
-            if "sec" in r10 and "sec" in r50
-            else None
-        ),
-        "linearity_5x_exact": {
-            "n_components": lin("n_components", 5),
-            "sum_sq_sizes": lin("sum_sq_sizes", 5),
-            "n_edges": lin("n_edges", 5),
-            # disjoint copies: the giant component is a COPY, not 5x
-            "giant_size_equal": (
-                r10.get("giant_size") == r50.get("giant_size")
-                if r10.get("giant_size") is not None
-                and r50.get("giant_size") is not None
-                else None
-            ),
-        },
-        "is_fixpoint_both": (
-            bool(r10.get("is_fixpoint")) and bool(r50.get("is_fixpoint"))
-            if r10.get("is_fixpoint") is not None
-            and r50.get("is_fixpoint") is not None
-            else None
-        ),
-        "errors": {s: r["error"] for s, r in results.items() if "error" in r},
-        "skips": {s: r["skipped"] for s, r in results.items() if "skipped" in r},
-    }
-    print(json.dumps({"summary_wcc_graph": summary}), flush=True)
-
-
-def main_wcc_deep() -> None:
-    """r14: the two-phase (alternating star) fallback at the topology it
-    exists for — PATH graphs, where min-label needs O(diameter) = O(n)
-    rounds and is categorically infeasible. Paths of 10M and 100M nodes
-    (built map-only from spark.range; the monotone-id path is also the
-    star contraction's worst case measured in rounds), max_iter=40
-    against the predicted ~log2(n)+constant rounds (pure-Python replay:
-    15 @ 10^4, 18 @ 10^5, 21 @ 10^6; Spark matched all three exactly in
-    the r14 calibration). Verdict per leg: exactly ONE component labeled
-    0 covering all n nodes — exact, not banded. This leg would have been
-    impossible before the r14 rewrite: the prior same-input star union
-    DOUBLED the edge set per round and OOMed at 10^4 nodes.
-
-    Scratch per round is star-bounded (each star emits at most one edge
-    per input edge): ~2 live checkpoint generations of <= 2n rows. The
-    100M leg gates on a conservative 30 GiB free-disk bar and records
-    the skip mechanically if the host can't carry it.
-
-    Single-JVM longevity (r14, measured the hard way): a ~30-round
-    contraction runs ~300 jobs / 800+ stages in ONE JVM, and Spark's
-    ContextCleaner reclaims old shuffles only when a driver GC happens
-    to collect their weak refs — the first 100M attempts died of heap
-    creep at round ~25 even after DISK_ONLY generations. Mitigations:
-    per-round gc.collect() in the operator loop, a 3-minute
-    spark.cleaner.periodicGC.interval (default 30min — only ~3 GCs in
-    a 90-minute leg), and SPARK_GRAFT_DRIVER_MEM=16g for this leg (the
-    8 GB default is the right CLUSTER story; the accumulation is a
-    single-JVM soak artifact a per-job-session deployment never sees)."""
-    spark = get_spark(
-        "scale_soak_wcc_deep",
-        extra_conf={"spark.cleaner.periodicGC.interval": "3min"},
-    )
-    # 512 reduce partitions at the 100M leg (200M-row symmetric view):
-    # the first 256-partition, 32-thread attempt died in the JVM's
-    # NativeThreadSet spill-reader race right after TaskMemoryManager
-    # page-allocation failures — per-task input, not heap, is the lever
-    # (the sf100 lesson again); run under SPARK_GRAFT_CPUS=16 for the
-    # 100M leg
-    spark.conf.set("spark.sql.shuffle.partitions", "512")
-
-    from etl_pipeline_spark.operators.cluster import (
-        connected_components_two_phase,
-    )
-
-    legs = [("10M", 10_000_000), ("100M", 100_000_000)]
-    for i, a in enumerate(sys.argv):
-        if a == "--legs":  # e.g. --legs 100M  (rerun one leg alone)
-            want = set(sys.argv[i + 1].split(","))
-            legs = [(lb, n) for lb, n in legs if lb in want]
-
-    results: dict[str, dict] = {}
-    for label, n in legs:
-        if label == "100M":
-            free = __import__("shutil").disk_usage("/").free
-            if free < 30 << 30:
-                rec = {
-                    "skipped": (
-                        f"insufficient free disk: need ~30 GiB "
-                        f"(conservative 2-generation checkpoint bar), "
-                        f"have {free >> 30} GiB"
-                    ),
-                    "sec": 0.0,
-                }
-                results[label] = rec
-                print(json.dumps({"leg": label, "op": "wcc_deep", **rec}), flush=True)
-                continue
-        edges = spark.range(n - 1).select(
-            F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
-        )
-        nodes = spark.range(n).select(F.col("id").alias("node"))
-        t0 = time.perf_counter()
-        try:
-            comp, rounds = connected_components_two_phase(
-                nodes,
-                edges,
-                max_iter=40,
-                with_rounds=True,
-                # two ~|V|-row checkpoint generations live at once; at
-                # 100M nodes that is 2 x ~5-6 GB deserialized — heap
-                # death in round 2 on the 8 GB JVM (measured). DISK_ONLY
-                # generations cost the heap nothing.
-                disk_only=(n >= 50_000_000),
-            )
-            s = comp.agg(
-                F.count("*").alias("n_nodes"),
-                F.countDistinct("cluster_id").alias("n_components"),
-                F.max("cluster_id").alias("max_label"),
-            ).collect()[0]
-            rec = {
-                "n_nodes": s["n_nodes"],
-                "n_components": s["n_components"],
-                "max_label": s["max_label"],
-                "rounds": rounds,
-                "exact": s["n_nodes"] == n
-                and s["n_components"] == 1
-                and s["max_label"] == 0,
-            }
-        except Exception as exc:  # record the boundary, keep going
-            rec = {"error": f"{type(exc).__name__}: {exc}"[:300]}
-        rec["sec"] = round(time.perf_counter() - t0, 2)
-        results[label] = rec
-        print(json.dumps({"leg": label, "op": "wcc_deep", **rec}), flush=True)
-        release_session_blocks(spark)
-    print(json.dumps({"summary_wcc_deep": results}), flush=True)
-
-
-def main_sf50_lpa_split() -> None:
-    """r13 judge #6: LPA at sf50 with round splitting. Eager rounds
-    alone left LPA's disk factor at 14x parquet (the 9x attempt was
-    killed) — 14 x 7 GB = 98 GB > this host. lpa_labels(round_splits=4)
-    partitions each round by pmod(dst, 4): one pass's join+groupBy
-    shuffle lives at a time, so the transient term drops ~4x and the
-    factor bar drops to 8x (5.5x DISK_ONLY frame + ~2x transient).
-    Verdict: sf50 communities must be EXACTLY 5x sf10's — the stamped
-    frames are disjoint node-offset copies, so equality is exact, not
-    statistical. Equivalence of the split rounds themselves is pinned
-    at fixture scale (tests/test_r8_operators.py)."""
-    from pyspark.storagelevel import StorageLevel
-
-    from etl_pipeline_spark.queries.analytics_ml import lpa_labels
-
-    spark = get_spark("scale_soak_lpa_split")
-    spark.conf.set("spark.sql.shuffle.partitions", "512")
-    K = 4
-    DISK_FACTOR_SPLIT = 8
-
-    def _dir_bytes(path: str) -> int:
-        total = 0
-        for root, _, files in os.walk(path):
-            for f in files:
-                total += os.path.getsize(os.path.join(root, f))
-        return total
-
-    results: dict[str, dict] = {}
-    for sf_label, d in [("10", SF10_EDGE_DIR), ("50", SF50_EDGE_DIR)]:
-        frame_bytes = _dir_bytes(d)
-        need = DISK_FACTOR_SPLIT * frame_bytes
-        free = __import__("shutil").disk_usage("/").free
-        if free < need:
-            results[sf_label] = {
-                "skipped": (
-                    f"insufficient free disk: need ~{need >> 30} GiB "
-                    f"({DISK_FACTOR_SPLIT}x {frame_bytes >> 20} MiB parquet), "
-                    f"have {free >> 30} GiB"
-                )
-            }
-            print(json.dumps({"sf": sf_label, "op": "lpa_split", **results[sf_label]}), flush=True)
-            continue
-        edges = (
-            spark.read.parquet(d)
-            .repartition(F.col("u"))
-            .persist(StorageLevel.DISK_ONLY)
-        )
-        edges.count()
-        t0 = time.perf_counter()
-        labels = lpa_labels(edges, round_splits=K)
-        communities = labels.select("label").distinct().count()
-        sec = round(time.perf_counter() - t0, 2)
-        edges.unpersist()
-        release_session_blocks(spark)
-        results[sf_label] = {"communities": communities, "sec": sec, "round_splits": K}
-        print(json.dumps({"sf": sf_label, "op": "lpa_split", **results[sf_label]}), flush=True)
-
-    c10 = results.get("10", {}).get("communities")
-    c50 = results.get("50", {}).get("communities")
-    summary = {
-        "communities_5x_exact": (
-            c50 == 5 * c10 if c10 is not None and c50 is not None else None
-        ),
-        "t_ratio_5x": (
-            round(results["50"]["sec"] / max(results["10"]["sec"], 1e-9), 2)
-            if "sec" in results.get("10", {}) and "sec" in results.get("50", {})
-            else None
-        ),
-        **{f"sf{k}": v for k, v in results.items()},
-    }
-    print(json.dumps({"summary_lpa_split": summary}), flush=True)
-
-
-def main_sf10_tri_sampled() -> None:
-    """DOULION sampled census closes the support-1 wedge-mass wall (r13
-    judge #5). Exact support-1 triangle counting at sf10 burned >48x its
-    1.4 GB parquet in scratch before the r12 kill (BASELINE.md); the
-    sampled census at p = 1/4 cuts wedge mass 16x. Two legs:
-
-    - sf1 VALIDATION: exact census (degree-oriented) vs the sampled
-      estimate on the same support-1 graph — rel_err and the 3-sigma
-      verdict at the largest SF where exact is feasible.
-    - sf10 SCALE: sampled-only census on the stamped support-1 frame
-      under the disk preflight. The estimate is then checked against
-      the KNOWN exact count 10 * T(sf1): the sf fixtures are disjoint
-      node-offset copies by construction (build_sf10), so sf10's true
-      count is exactly 10x sf1's — a real correctness oracle at the
-      scale where exact counting is infeasible on this host.
-    """
-    from pyspark.storagelevel import StorageLevel
-
-    from etl_pipeline_spark.queries.advanced_behavioral import triangle_census
-    from etl_pipeline_spark.queries.analytics_ml import co_purchase_edges
-    from etl_pipeline_spark.queries.graph_sampling import sampled_triangles
-
-    spark = get_spark("scale_soak_tri_sampled")
-    spark.conf.set("spark.sql.shuffle.partitions", "256")
-
-    KEEP = 4  # p = 1/4: wedge mass /16, integer scale 64, var factor 63
-    scale = (16 // KEEP) ** 3
-    out: dict = {"keep_nibbles": KEEP, "p": KEEP / 16.0}
-
-    def sigma_bound(t_exact: int) -> int:
-        # DOULION variance without the shared-edge covariance term:
-        # var(est) ~ T(p^-3 - 1); +scale absorbs the one-sampled-triangle
-        # granularity. Same formula as q_triangle_census_sampled's verdict.
-        import math
-
-        return math.ceil(3 * math.sqrt((scale - 1) * max(t_exact, 0))) + scale
-
-    # --- sf1 validation leg -------------------------------------------
-    li = load_tables(spark, SF1_DIR, ("lineitem",))["lineitem"]
-    und1 = co_purchase_edges(li, 1).persist(StorageLevel.DISK_ONLY)
-    n_edges1 = und1.count()
-    t0 = time.perf_counter()
-    exact1 = triangle_census(und1, orient_by_degree=True).collect()[0].asDict()
-    t_exact1 = round(time.perf_counter() - t0, 2)
-    t0 = time.perf_counter()
-    samp1 = sampled_triangles(und1, KEEP, orient_by_degree=True).collect()[0].asDict()
-    t_samp1 = round(time.perf_counter() - t0, 2)
-    und1.unpersist()
-    release_session_blocks(spark)
-    t1 = exact1["n_triangles"]
-    err1 = abs(samp1["est_triangles"] - t1)
-    out["sf1"] = {
-        "n_edges": n_edges1,
-        "exact_triangles": t1,
-        "exact_sec": t_exact1,
-        "sampled_sec": t_samp1,
-        "n_edges_sampled": samp1["n_edges_sampled"],
-        "n_triangles_sampled": samp1["n_triangles_sampled"],
-        "est_triangles": samp1["est_triangles"],
-        "rel_err": round(err1 / max(t1, 1), 6),
-        "within_3sigma": err1 <= sigma_bound(t1),
-        "speedup_vs_exact": round(t_exact1 / max(t_samp1, 1e-9), 2),
-    }
-    print(json.dumps({"leg": "sf1", **out["sf1"]}), flush=True)
-
-    # --- sf10 scale leg (sampled-only, disk preflight) ----------------
-    def _dir_bytes(path: str) -> int:
-        total = 0
-        for root, _, files in os.walk(path):
-            for f in files:
-                total += os.path.getsize(os.path.join(root, f))
-        return total
-
-    frame_bytes = _dir_bytes(SF10_EDGE_DIR)
-    # exact support-1 burned >48x parquet (r12 kill); sampled wedge mass
-    # is p^2 = 1/16 of that (~3x) + the p-sized sampled checkpoint;
-    # 10x is the defensive bar.
-    need = 10 * frame_bytes
-    free = __import__("shutil").disk_usage("/").free
-    if free < need:
-        out["sf10"] = {
-            "skipped": (
-                f"insufficient free disk: need ~{need >> 30} GiB "
-                f"(10x {frame_bytes >> 20} MiB parquet), have {free >> 30} GiB"
-            )
-        }
-    else:
-        edges10 = spark.read.parquet(SF10_EDGE_DIR).filter("u < v")
-        t0 = time.perf_counter()
-        samp10 = sampled_triangles(edges10, KEEP, orient_by_degree=True).collect()[0].asDict()
-        t_samp10 = round(time.perf_counter() - t0, 2)
-        release_session_blocks(spark)
-        truth10 = 10 * t1  # disjoint-copy construction: exact by design
-        err10 = abs(samp10["est_triangles"] - truth10)
-        out["sf10"] = {
-            "sampled_sec": t_samp10,
-            "n_edges_sampled": samp10["n_edges_sampled"],
-            "n_triangles_sampled": samp10["n_triangles_sampled"],
-            "est_triangles": samp10["est_triangles"],
-            "exact_triangles_by_construction": truth10,
-            "rel_err": round(err10 / max(truth10, 1), 6),
-            "within_3sigma": err10 <= sigma_bound(truth10),
-        }
-    print(json.dumps({"leg": "sf10", **out["sf10"]}), flush=True)
-
-    # --- optional sf50 leg (--sf50): the 5x-denser frame needs harder
-    # sampling — keep=2 (p = 1/8) cuts wedge mass 64x, so the >48x/
-    # parquet exact burn translates to ~4x of the 7 GB frame; 6x is the
-    # defensive bar. Scale factor 512 stays integer-exact; truth is
-    # 50 x the sf1 exact count (disjoint-copy construction). Predicted
-    # rel_err ~ sqrt((512-1)/T) ~ 0.07% at T ~ 9.4e8 — a near-billion-
-    # triangle census estimated on one host.
-    if "--sf50" in sys.argv:
-        KEEP50 = 2
-        scale50 = (16 // KEEP50) ** 3
-
-        def sigma_bound50(t_exact: int) -> int:
-            import math
-
-            return math.ceil(3 * math.sqrt((scale50 - 1) * max(t_exact, 0))) + scale50
-
-        frame_bytes = _dir_bytes(SF50_EDGE_DIR)
-        need = 6 * frame_bytes
-        free = __import__("shutil").disk_usage("/").free
-        if free < need:
-            out["sf50"] = {
-                "skipped": (
-                    f"insufficient free disk: need ~{need >> 30} GiB "
-                    f"(6x {frame_bytes >> 20} MiB parquet), have {free >> 30} GiB"
-                )
-            }
-        else:
-            # 512 reduce partitions + DISK_ONLY sample store: the 256/
-            # localCheckpoint combination OOMed the heap mid-wedge-sort
-            # (deserialized sample blocks + 32 concurrent sorts)
-            spark.conf.set("spark.sql.shuffle.partitions", "512")
-            edges50 = spark.read.parquet(SF50_EDGE_DIR).filter("u < v")
-            t0 = time.perf_counter()
-            samp50 = sampled_triangles(
-                edges50, KEEP50, orient_by_degree=True, disk_only=True
-            ).collect()[0].asDict()
-            t_samp50 = round(time.perf_counter() - t0, 2)
-            release_session_blocks(spark)
-            truth50 = 50 * t1
-            err50 = abs(samp50["est_triangles"] - truth50)
-            out["sf50"] = {
-                "keep_nibbles": KEEP50,
-                "p": KEEP50 / 16.0,
-                "sampled_sec": t_samp50,
-                "n_edges_sampled": samp50["n_edges_sampled"],
-                "n_triangles_sampled": samp50["n_triangles_sampled"],
-                "est_triangles": samp50["est_triangles"],
-                "exact_triangles_by_construction": truth50,
-                "rel_err": round(err50 / max(truth50, 1), 6),
-                "within_3sigma": err50 <= sigma_bound50(truth50),
-            }
-        print(json.dumps({"leg": "sf50", **out["sf50"]}), flush=True)
-
-    # --- optional sf100 leg (--sf100): a FOURTH decade. The sf100 edge
-    # frame is stamped as 10 node-offset copies of the sf10 frame (the
-    # r10 peel construction — map-only appends, no global shuffle;
-    # ~14 GB parquet), and the census samples at keep=1 (p = 1/16,
-    # integer scale 4096): the kept canonical edge count (~75M) matches
-    # the sf50 leg's, so the wedge join cost stays flat while the TRUE
-    # count doubles to ~1.88B. Truth = 100 x sf1 exact (disjoint
-    # copies). Predicted rel_err ~ sqrt(4095/1.88e9) ~ 0.15%.
-    if "--sf100" in sys.argv:
-        SF100_EDGE_DIR = f"{REPO}/.scratch/scale/sf100_edges_s1"
-        KEEP100 = 1
-        scale100 = (16 // KEEP100) ** 3
-
-        def sigma_bound100(t_exact: int) -> int:
-            import math
-
-            return math.ceil(3 * math.sqrt((scale100 - 1) * max(t_exact, 0))) + scale100
-
-        if not os.path.isdir(SF100_EDGE_DIR):
-            t0 = time.perf_counter()
-            e10 = spark.read.parquet(SF10_EDGE_DIR)
-            for k in range(10):
-                e10.select(
-                    (F.col("u") + k * 1000 * ID_OFFSET).alias("u"),
-                    (F.col("v") + k * 1000 * ID_OFFSET).alias("v"),
-                ).write.mode("overwrite" if k == 0 else "append").parquet(
-                    SF100_EDGE_DIR
-                )
-            print(
-                json.dumps(
-                    {"built_sf100_edges_sec": round(time.perf_counter() - t0, 1)}
-                ),
-                flush=True,
-            )
-        frame_bytes = _dir_bytes(SF100_EDGE_DIR)
-        # kept sample ~ sf50's (~1.2 GB DISK_ONLY) + sampled wedge
-        # shuffle ~ p^2 x (10 x the sf10 >68 GB burn) ~ 2.7 GB: real
-        # expectation ~5 GB; 2x the 14 GB parquet is a 5x safety margin
-        # (r13 advisor #4: the factor lives in ONE constant so the skip
-        # message can never again report a different bar than applied)
-        SF100_DISK_FACTOR = 2
-        need = SF100_DISK_FACTOR * frame_bytes
-        free = __import__("shutil").disk_usage("/").free
-        if free < need:
-            out["sf100"] = {
-                "skipped": (
-                    f"insufficient free disk: need ~{need >> 30} GiB "
-                    f"({SF100_DISK_FACTOR}x {frame_bytes >> 20} MiB "
-                    f"parquet), have {free >> 30} GiB"
-                )
-            }
-        else:
-            spark.conf.set("spark.sql.shuffle.partitions", "512")
-            edges100 = spark.read.parquet(SF100_EDGE_DIR).filter("u < v")
-            t0 = time.perf_counter()
-            samp100 = sampled_triangles(
-                edges100, KEEP100, orient_by_degree=True, disk_only=True
-            ).collect()[0].asDict()
-            t_samp100 = round(time.perf_counter() - t0, 2)
-            release_session_blocks(spark)
-            truth100 = 100 * t1
-            err100 = abs(samp100["est_triangles"] - truth100)
-            out["sf100"] = {
-                "keep_nibbles": KEEP100,
-                "p": KEEP100 / 16.0,
-                "sampled_sec": t_samp100,
-                "n_edges_sampled": samp100["n_edges_sampled"],
-                "n_triangles_sampled": samp100["n_triangles_sampled"],
-                "est_triangles": samp100["est_triangles"],
-                "exact_triangles_by_construction": truth100,
-                "rel_err": round(err100 / max(truth100, 1), 6),
-                "within_3sigma": err100 <= sigma_bound100(truth100),
-            }
-        print(json.dumps({"leg": "sf100", **out["sf100"]}), flush=True)
-
-    print(json.dumps({"summary_tri_sampled": out}), flush=True)
 
 
 def main_sf100_graph() -> None:
@@ -1475,34 +758,36 @@ def main_sf100() -> None:
     print(json.dumps({"summary_sf100": summary}))
 
 
+LEGS = {
+    "--sf10": main_sf10,
+    "--sf100-peel": main_sf100_peel,
+    "--sf100-graph": main_sf100_graph,
+    "--sf100": main_sf100,
+}
+# flags that modify a leg rather than pick one; --queries takes a value
+MODIFIERS = {"--skip-build", "--queries", "--graph", "--softdedup"}
+
+
 def main() -> None:
-    if "--sf10" in sys.argv:
-        main_sf10()
-        return
-    if "--sf100-peel" in sys.argv:
-        main_sf100_peel()
-        return
-    if "--sf50-graph" in sys.argv:
-        main_sf50_graph()
-        return
-    if "--sf100-graph" in sys.argv:
-        main_sf100_graph()
-        return
-    if "--sf10-tri-sampled" in sys.argv:
-        main_sf10_tri_sampled()
-        return
-    if "--sf50-lpa-split" in sys.argv:
-        main_sf50_lpa_split()
-        return
-    if "--wcc-deep" in sys.argv:
-        main_wcc_deep()
-        return
-    if "--wcc" in sys.argv:
-        main_wcc_graph()
-        return
-    if "--sf100" in sys.argv:
-        main_sf100()
-        return
+    args = sys.argv[1:]
+    unknown = [
+        a
+        for i, a in enumerate(args)
+        if a not in LEGS
+        and a not in MODIFIERS
+        and not (i > 0 and args[i - 1] == "--queries")
+    ]
+    if unknown:
+        print(
+            f"unknown flag(s) {' '.join(unknown)}; legs: "
+            f"{' '.join(LEGS)} (default: the sf1 soak)",
+            file=sys.stderr,
+        )
+        raise SystemExit(2)
+    for flag, leg in LEGS.items():
+        if flag in args:
+            leg()
+            return
     soak = SOAK_QUERIES
     for i, a in enumerate(sys.argv):
         if a == "--queries":
